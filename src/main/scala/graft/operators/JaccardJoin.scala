@@ -279,28 +279,51 @@ object JaccardJoin {
    * position depend only on (table, joinAttr, tokenizer) — never on the
    * threshold — so a threshold sweep (the reference's precision/recall sweep,
    * test.ipynb cells 41-74) can tokenize ONCE and run every threshold against
-   * the same persisted frames via [[selfJoinDedupedPrepared]]. All three
-   * frames are persist-tracked; `Api.clearCache()` releases them.
+   * the same persisted frames via [[selfJoinDedupedPrepared]].
+   *
+   * The three frames are persist-tracked (`Api.clearCache()` releases them)
+   * and `buildShuffles` holds the ids of every shuffle that built them, for
+   * the bounded-footprint mode's janitor (see [[selfJoinDedupedPrepared]]).
    */
   final case class SelfJoinPrep private[operators] (
       table: DataFrame, keyAttr: String, joinAttr: String,
       emitsDistinctTokens: Boolean,
-      vals: DataFrame, vtkdf: DataFrame, varr: DataFrame)
+      vals: DataFrame, vtkdf: DataFrame, varr: DataFrame,
+      buildShuffles: Set[Int])
 
   /** Build [[SelfJoinPrep]] — the tokenize/df/rank stages shared by every
-    * threshold. See [[selfJoinDeduped]] for the stage semantics. */
+    * threshold. See [[selfJoinDeduped]] for the stage semantics.
+    *
+    * Prep is EAGER: each frame is persisted, materialized here, and handed on
+    * as a plan leaf over its cached blocks
+    * ([[org.apache.spark.sql.GraftCheckpointBridge.cachedLeaf]]), carrying
+    * its exact hash partitioning and its measured cache size. Read lazily
+    * through the cache manager, the frames nest: `vtkdf` reads `vals` three
+    * times and `varr` reads `vtkdf`, and every cached relation prints its
+    * cached plan. Every per-threshold tail and evaluation query then
+    * re-analysed and re-rendered that lineage on each AQE stage update: on
+    * 6000 records the t = 0.3 tail's `queryExecution` string was 620k
+    * characters (25k over the leaves), and a JFR profile of the sweep put 38%
+    * of the driver thread's samples in `QueryExecution.explainString`.
+    * `rsJoin` keeps its lazy frames; see there. */
   def prepareSelfDeduped(
       table: DataFrame, keyAttr: String, joinAttr: String,
       tokenizer: Tokenizer): SelfJoinPrep = {
+    val shuffles = Set.newBuilder[Int]
+    def leaf(df: DataFrame, keys: String*): DataFrame = {
+      val (l, ids) = org.apache.spark.sql.GraftCheckpointBridge.cachedLeaf(df.persistTracked, keys)
+      shuffles ++= ids
+      l
+    }
     // Compact 128-bit BINARY surrogate per distinct value: every downstream
     // shuffle row (tokens, prefixes, candidates, verification) keys on the
     // 16-byte digest instead of the raw value — on long-text corpora
     // (documents) the raw-value key made each token row carry the whole
     // document and a single sf0.1 run shuffled >40 GB to disk.
-    val vals = table.select(col(joinAttr).as("value"))
+    // no partitioning claim: `dfreq` joins `vals` with itself (see cachedLeaf)
+    val vals = leaf(table.select(col(joinAttr).as("value"))
       .groupBy("value").agg(count(lit(1)).as("w"))
-      .withColumn("vid", unhex(md5(col("value"))))
-      .persistTracked
+      .withColumn("vid", unhex(md5(col("value")))))
 
     // value-level tokens keyed by the surrogate
     val vtokens = tokenizer.tokenize(vals.select(col("vid"), col("value")), "vid", "value")
@@ -314,18 +337,18 @@ object JaccardJoin {
       .groupBy("token").agg(sum("w").as("df"), count(lit(1)).as("vdf"))
 
     val w = Window.partitionBy("id").orderBy("df", "token")
-    val vtkdf = vtokens.join(dfreq, "token")
+    val vtkdf = leaf(vtokens.join(dfreq, "token")
       .select(col("id"), col("len"), col("token"), col("df"), col("vdf"),
-        row_number().over(w).cast("long").as("pos"))
-      .persistTracked
+        row_number().over(w).cast("long").as("pos")), "id")
 
     // position arrays persist too: verification scans this frame TWICE per
     // action (L and R side of the verify join) and it is the frame AQE
     // broadcasts — rebuilding the aggregation + broadcast from scratch every
     // action was the measured ~1.5-2.3 s warm floor on the sub-second
     // part/ws/t=0.3 flagship (BENCH_NOTES round 6)
+    val varr = leaf(posArrays(vtkdf), "id")
     SelfJoinPrep(table, keyAttr, joinAttr, tokenizer.emitsDistinctTokens,
-      vals, vtkdf, posArrays(vtkdf).persistTracked)
+      vals, vtkdf, varr, shuffles.result())
   }
 
   /** Threshold-dependent tail of [[selfJoinDeduped]] over a shared
@@ -389,7 +412,6 @@ object JaccardJoin {
     require(maxSaltBuckets >= saltBuckets, "maxSaltBuckets must be >= saltBuckets")
     val t = lit(threshold)
     val onePlusT = lit(1d + threshold)
-    val vals = prep.vals
     val vtkdf = prep.vtkdf
 
     def idxPfx(d: DataFrame) =
@@ -518,18 +540,14 @@ object JaccardJoin {
     val vm =
       if (passes == 1) vmOfSlice(None)
       else {
-        // materialize the shared persisted frames BEFORE the first shuffle
-        // snapshot, so their build shuffles are never in a pass's removal
-        // set (the janitor's cross-pass-reuse precondition)
+        // prep materialized its frames eagerly and recorded their build
+        // shuffles, so no pass's removal set can take one of them
+        val prepShuffles = prep.buildShuffles
         val sc = prep.table.sparkSession.sparkContext
         // per-invocation unique job-group tags: two concurrent multi-pass
         // joins on one session must never attribute each other's stages
         // (a constant per-pass tag would merge their listener sets)
         val runTag = java.lang.Long.toHexString(System.nanoTime())
-        val (_, prepShuffles) =
-          org.apache.spark.GraftShuffleJanitor.runScoped(sc, s"graft-jac-self-$runTag-prep") {
-            vals.count(); vtkdf.count(); prep.varr.count()
-          }
         val slices = (0 until passes).map { p =>
           // eager lineage cut, then DETERMINISTIC reclamation of exactly the
           // shuffles this pass's own stages wrote (GraftShuffleJanitor
@@ -668,6 +686,13 @@ object JaccardJoin {
    * indexing prefix to the always-safe probing bound `len·t` — with the two-sided
    * length filter, required overlap ≥ t·|R|, so a `len - ceil(t·len) + 1` prefix
    * always contains a witness and filtered == brute force.
+   *
+   * Unlike [[prepareSelfDeduped]], the persisted token frames stay lazy and
+   * nested (each plan carries their cached plans). Turned into eager cached
+   * leaves, the two sides' token frames materialize one after the other
+   * instead of inside one job: measured on a q-gram(3) R×S op at t = 0.2, the
+   * main job grew from 1.74 to 2.41 s and the op ran about 40% slower. A
+   * single call also has no later thresholds to amortize the eager prep over.
    */
   def rsJoin(
       lTable: DataFrame, lKey: String, lJoin: String,

@@ -2,9 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeMap, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Partitioning-PRESERVING checkpoint (optimization rounds 15/16).
@@ -51,6 +56,10 @@ import org.apache.spark.sql.execution.LogicalRDD
  *   - keys resolve with the session's analyzer resolver (case-insensitive by
  *     default), validated BEFORE the expensive materialization (r15 ADVICE:
  *     the old exact-name find failed after the work was already done).
+ *
+ * [[cachedLeaf]] builds the same kind of leaf over a persisted frame's
+ * cached blocks instead of a checkpoint, through the same builder and
+ * exactness guard ([[leafOf]]).
  */
 object GraftCheckpointBridge {
 
@@ -123,22 +132,109 @@ object GraftCheckpointBridge {
         }.collect()
         Some(parts.foldLeft(java.math.BigInteger.ZERO)(_.add(_)))
     }
-    // the partitioning claim must be PHYSICALLY exact: AQE can collapse an
-    // empty input to a 0-partition leaf despite REPARTITION_BY_NUM (observed:
-    // an empty pair table in the admission loop), and a LogicalRDD claiming
-    // n partitions over an RDD with a different count makes a later
-    // co-partitioned join zip unequal partition lists and crash. Claim the
-    // layout only when the leaf really has it; otherwise fall back to the
-    // stock unknown-partitioning leaf (the frame is empty or degenerate —
-    // re-shuffling it downstream costs nothing).
-    val exact = rdd.getNumPartitions == numPartitions
-    val lr = LogicalRDD(
+    PartitionedCut(classic.Dataset.ofRows(laid.sparkSession,
+      leafOf(laid.sparkSession, attrs, rdd, HashPartitioning(keyAttrs, numPartitions),
+        keyAttrs.map(a => SortOrder(a, Ascending)), stats = None)),
+      rdd, sum)
+  }
+
+  /** A persisted frame, materialized, as a plan LEAF over its cached blocks,
+    * plus the ids of the shuffles that built it.
+    *
+    * A frame read through the cache manager keeps its whole lineage in every
+    * plan that uses it: each `InMemoryRelation` carries its cached AQE plan,
+    * and a frame built from other cached frames nests theirs. Every query on
+    * top re-analyses that lineage, looks it up in the cache manager again and
+    * re-renders it into the plan strings AQE rebuilds on each stage update.
+    * The leaf reads the same cached blocks and carries only:
+    *   - the hash partitioning of the cached plan's final stage when it is
+    *     on exactly `keys`, claimed through the same exactness guard as a
+    *     checkpoint cut, so a join or aggregation on `keys` adds no exchange.
+    *     Pass no keys for a frame that is joined with itself: Spark does not
+    *     normalize a leaf's partitioning attributes, so the fresh copy a
+    *     self-join makes would never match an earlier cache entry again;
+    *   - the cache's measured size and row count as its statistics, so the
+    *     planner makes the same broadcast choices as over the cached frame.
+    *
+    * One cache yields one leaf: asking again for the same cache and keys
+    * returns the same plan node, so frames built on it match their own
+    * earlier cache entries. The cache stays registered with the cache
+    * manager, so `unpersist` on `df` still releases the blocks. A leaf used
+    * after that recomputes through the cached RDD's lineage on every use (its
+    * shuffles stay registered while the leaf is reachable); it is never
+    * re-cached. */
+  def cachedLeaf(df: DataFrame, keys: Seq[String]): (DataFrame, Set[Int]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rel = ds.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r
+      case other => throw new IllegalArgumentException(
+        s"cachedLeaf: frame is not persisted (plan root ${other.nodeName})")
+    }
+    val builder = rel.cacheBuilder
+    // one job over the cached RDD, run as a SQL execution like any Dataset
+    // action: its tasks see the session's SQL confs, not the defaults
+    if (!builder.isCachedColumnBuffersLoaded)
+      SQLExecution.withNewExecutionId(ds.queryExecution, Some("cachedLeaf")) {
+        builder.cachedColumnBuffers.count()
+      }: Unit
+    val physical = rel.cachedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val buffers = builder.cachedColumnBuffers
+    val leaf = leaves.synchronized {
+      leaves.filterInPlace { case (_, (b, _)) =>
+        !b.sparkContext.isStopped && b.getStorageLevel != StorageLevel.NONE }
+      leaves.get((buffers.id, keys)).collect { case (b, l) if b eq buffers => l }.getOrElse {
+        val toOut = AttributeMap(rel.cachedPlan.output.zip(rel.output))
+        val partitioning = physical.outputPartitioning match {
+          case h: HashPartitioning if h.expressions.map {
+              case a: Attribute => toOut.get(a).map(_.name)
+              case _ => None
+            } == keys.map(Some(_)) =>
+            h.transform { case a: Attribute => toOut(a) }.asInstanceOf[HashPartitioning]
+          case _ => UnknownPartitioning(0)
+        }
+        val rows = builder.serializer.convertCachedBatchToInternalRow(
+          buffers, rel.output, rel.output, ds.sparkSession.sessionState.conf)
+        val l = leafOf(ds.sparkSession, rel.output, rows, partitioning, Nil,
+          Some(rel.computeStats()))
+        leaves((buffers.id, keys)) = (buffers, l)
+        l
+      }
+    }
+    (classic.Dataset.ofRows(ds.sparkSession, leaf), shuffleIds(physical))
+  }
+
+  /** The leaf handed out per (cached RDD id, keys); entries of released
+    * caches are dropped on the next call. */
+  private val leaves = scala.collection.mutable.Map.empty[(Int, Seq[String]), (RDD[_], LogicalRDD)]
+
+  /** Ids of every shuffle an executed plan wrote, broadcast builds included. */
+  private def shuffleIds(plan: SparkPlan): Set[Int] =
+    (new AdaptiveSparkPlanHelper {}).collectWithSubqueries(plan) {
+      case s: ShuffleQueryStageExec => s.shuffle.shuffleId
+      case s: ShuffleExchangeLike => s.shuffleId
+    }.toSet
+
+  /** The one `LogicalRDD` builder of this bridge. The claimed partitioning
+    * must be PHYSICALLY exact: AQE can collapse an empty input to a
+    * 0-partition leaf despite REPARTITION_BY_NUM (observed: an empty pair
+    * table in the admission loop), and a LogicalRDD claiming n partitions
+    * over an RDD with a different count makes a later co-partitioned join
+    * zip unequal partition lists and crash. Claim the layout (and ordering)
+    * only when the RDD really has its partition count; otherwise fall back
+    * to the stock unknown-partitioning leaf (re-shuffling downstream costs
+    * a shuffle, never a wrong result). */
+  private def leafOf(session: classic.SparkSession, attrs: Seq[Attribute],
+                     rdd: RDD[InternalRow], partitioning: Partitioning,
+                     ordering: Seq[SortOrder], stats: Option[Statistics]): LogicalRDD = {
+    val exact = partitioning.isInstanceOf[HashPartitioning] &&
+      rdd.getNumPartitions == partitioning.numPartitions
+    LogicalRDD(
       attrs, rdd,
-      if (exact) HashPartitioning(keyAttrs, numPartitions)
-      else org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(
-        rdd.getNumPartitions),
-      if (exact) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil,
-      isStreaming = false)(laid.sparkSession)
-    PartitionedCut(classic.Dataset.ofRows(laid.sparkSession, lr), rdd, sum)
+      if (exact) partitioning else UnknownPartitioning(rdd.getNumPartitions),
+      if (exact) ordering else Nil,
+      isStreaming = false)(session, stats)
   }
 }
