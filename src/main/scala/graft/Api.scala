@@ -118,8 +118,7 @@ object Api {
     * `spark.catalog.clearCache()`. Returns the number of caches released.
     *
     * INVALIDATION, not just un-caching, for passes-mode results: a
-    * multi-pass join run with `spark.graft.passes.spill=parquet` (the
-    * default) reads its slices from scratch parquet dirs
+    * multi-pass join reads its slices from scratch parquet dirs
     * ([[graft.operators.Checkpoints.cutToParquet]]) that this call DELETES.
     * Unlike an unpersisted cache, a deleted file leaf cannot recompute —
     * re-collecting such a result after clearCache() throws

@@ -18,10 +18,18 @@ import graft.operators.PersistTracker.TrackedPersist
  *            -> verification (suffix overlap count + exact threshold test)
  *
  * Where the reference materializes every stage as a DuckDB temp table, we keep the
- * plan declarative and only `persist()` the one intermediate every variant reads
- * multiple times (`tkdf`, read by both candidate generation and verification —
- * reference jaccard_join.py:154,176). Everything else pipelines inside whole-stage
- * codegen.
+ * plan declarative and persist only the intermediates a pipeline reads more than
+ * once: the record-level [[selfJoin]] persists `tkdf` (read by both candidate
+ * generation and verification — reference jaccard_join.py:154,176); the
+ * value-deduplicated self-join materializes its threshold-free prep (`vals`,
+ * `vtkdf`, `varr`) as cached plan leaves ([[prepareSelfDeduped]]); [[rsJoin]]
+ * persists both token tables, the merged df table and both `tkdf`s, lazily.
+ * Everything else pipelines inside whole-stage codegen.
+ *
+ * Both join shapes end in ONE tail ([[prefixFilterJoin]]): salted candidate
+ * generation over an indexing and a probing prefix, the per-pair prefix
+ * aggregate and suffix verification, single-pass or in bounded-footprint
+ * slices. The shapes differ only in what they hand it.
  *
  * Scale notes (target: 1000-executor cluster, ~100 TB):
  *   - The candidate join is an equi-join on `token` with theta post-filters; Catalyst
@@ -33,10 +41,11 @@ import graft.operators.PersistTracker.TrackedPersist
  *     `spark.sql.adaptive.skewJoin.enabled` (on by default in Spark 4).
  *   - Document-frequency tables are `groupBy(token).count()` — map-side partial
  *     aggregation keeps the shuffle proportional to distinct tokens, not token rows.
- *   - The two driver-side `count()` actions in the R×S variant (widow placeholder and
- *     index-side choice) are the reference's manual adaptive planning
- *     (jaccard_join.py:238-245,341-353); they run over persisted token tables so the
- *     data is scanned once.
+ *   - The R×S variant's three driver-side actions — `lTable.count()` and
+ *     `rTable.count()` for the widow placeholder, then one fused widow `collect` for
+ *     the index-side choice — are the reference's manual adaptive planning
+ *     (jaccard_join.py:238-245,341-353); the widow collect runs over the persisted
+ *     token tables, so their data is scanned once.
  *
  * Float semantics: all threshold comparisons keep the reference's exact operand
  * order, e.g. `count(*) + pfxOverlap - 1 >= ((L.len + R.len) * t / (1+t))`
@@ -44,18 +53,6 @@ import graft.operators.PersistTracker.TrackedPersist
  * cell 23), so results hash-match a DuckDB oracle computing in DOUBLE.
  */
 object JaccardJoin {
-
-  /** J1: entry-point dispatch — self-join iff `right` is empty or the same table
-    * (reference jaccard_join.py:9-33). */
-  def join(
-      left: DataFrame, lKey: String, lJoin: String,
-      right: Option[DataFrame], rKey: String, rJoin: String,
-      tokenizer: Tokenizer, threshold: Double,
-      lOutPrefix: String = "l_", rOutPrefix: String = "r_"): DataFrame =
-    right match {
-      case None => selfJoin(left, lKey, lJoin, tokenizer, threshold, lOutPrefix, rOutPrefix)
-      case Some(r) => rsJoin(left, lKey, lJoin, r, rKey, rJoin, tokenizer, threshold, lOutPrefix, rOutPrefix)
-    }
 
   /**
    * Per-record token arrays in rarest-first position order: `arr[pos-1]` is
@@ -88,54 +85,172 @@ object JaccardJoin {
    *     would clear the bound — reachable for t < sqrt(2)-1);
    *   - the HAVING bound keeps the reference's exact operand order.
    *
-   * `cand` must carry (<lv>, <rv>, <lMax>, <rMax>, pfxOverlap); returns one
-   * row per surviving pair with the original `lv`/`rv` columns PLUS the two
-   * sides' token counts (`llen`, `rlen`) — already joined in for the bound
-   * test, and carrying them out lets [[expandSelf]] build the reference's
-   * canonical `concat(len,'_',id)` record key without re-deriving per-value
-   * lengths from the token table (a distinct + two exchanges, round 16).
+   * `cand` must carry (idxId, prbId, idxMaxPos, prbMaxPos, pfxOverlap);
+   * returns the (idxId, prbId) pairs that survive.
    */
   private def verifySuffix(
-      cand: DataFrame, lArrs: DataFrame, rArrs: DataFrame,
-      lv: String, rv: String, lMax: String, rMax: String,
-      threshold: Double, assumeDupFree: Boolean = false): DataFrame = {
+      cand: DataFrame, idxArrs: DataFrame, prbArrs: DataFrame,
+      threshold: Double): DataFrame = {
     val t = lit(threshold)
     val onePlusT = lit(1d + threshold)
     val joined = cand
-      .join(lArrs.select(col("id").as(lv), col("arr").as("larr"), col("len").as("llen")), lv)
-      .join(rArrs.select(col("id").as(rv), col("arr").as("rarr"), col("len").as("rlen")), rv)
+      .join(idxArrs.select(col("id").as("idxId"), col("arr").as("larr"), col("len").as("llen")),
+        "idxId")
+      .join(prbArrs.select(col("id").as("prbId"), col("arr").as("rarr"), col("len").as("rlen")),
+        "prbId")
     // graft_suffix_overlap: one fused native kernel per candidate — multiset
     // overlap of the two suffixes directly from the arrays + start positions.
     // Replaces two `slice` copies + `array_intersect` (set path) and the
     // per-pair dup probes + INTERPRETED higher-order fold (bag path); for
     // duplicate-free suffixes multiset == set count, so one kernel serves
     // both tokenizer classes with the reference's join-count semantics.
-    // (`assumeDupFree` is retained for call-site documentation; the kernel
-    // no longer needs the distinction.)
     val cnt = org.apache.spark.sql.GraftExpressionBridge.column(
       graft.expressions.SuffixOverlapCount(
         org.apache.spark.sql.GraftExpressionBridge.expression(col("larr")),
         org.apache.spark.sql.GraftExpressionBridge.expression(col("rarr")),
-        org.apache.spark.sql.GraftExpressionBridge.expression(col(lMax).cast("int")),
-        org.apache.spark.sql.GraftExpressionBridge.expression(col(rMax).cast("int"))))
+        org.apache.spark.sql.GraftExpressionBridge.expression(col("idxMaxPos").cast("int")),
+        org.apache.spark.sql.GraftExpressionBridge.expression(col("prbMaxPos").cast("int"))))
     joined
       .withColumn("cnt", cnt)
       .where(col("cnt") >= 1 &&
         col("cnt") + col("pfxOverlap") - lit(1) >=
           ((col("llen") + col("rlen")) * t / onePlusT))
-      .select(col(lv), col(rv), col("llen"), col("rlen"))
+      .select(col("idxId"), col("prbId"))
   }
 
-  /** J2: brute-force dispatch (reference jaccard_join.py:36-60). */
-  def bruteForce(
-      left: DataFrame, lKey: String, lJoin: String,
-      right: Option[DataFrame], rKey: String, rJoin: String,
-      tokenizer: Tokenizer, threshold: Double,
-      lOutPrefix: String = "l_", rOutPrefix: String = "r_"): DataFrame =
-    right match {
-      case None => bruteForceSelf(left, lKey, lJoin, tokenizer, threshold, lOutPrefix, rOutPrefix)
-      case Some(r) => bruteForceRs(left, lKey, lJoin, r, rKey, rJoin, tokenizer, threshold, lOutPrefix, rOutPrefix)
+  /** J10: the indexing prefix, `len - pos + 1 >= len·2t/(1+t)` (reference
+    * jaccard_join.py:147-166 inlines it in the self-join's candidate
+    * generation; the R×S form is at :331,338). */
+  private def indexingPrefix(tkdf: DataFrame, threshold: Double): DataFrame =
+    tkdf.where(col("len") - col("pos") + lit(1) >=
+      (col("len") * lit(2) * lit(threshold) / lit(1d + threshold)))
+
+  /** J11: the probing prefix, `len - pos + 1 >= len·t` — wider than the
+    * indexing prefix for every t < 1. */
+  private def probingPrefix(tkdf: DataFrame, threshold: Double): DataFrame =
+    tkdf.where(col("len") - col("pos") + lit(1) >= (col("len") * lit(threshold)))
+
+  /**
+   * J13/J14, shared by both join shapes: candidate generation over an
+   * indexing and a probing prefix, the per-pair prefix aggregate, and suffix
+   * verification. Returns the verified (idxId, prbId) pairs.
+   *
+   * The prefix frames carry (id, len, pos, token) plus any extra equi `keys`
+   * and the columns `saltWidth` and `residual` read. `idxArr`/`prbArr` are
+   * the two sides' position arrays ([[posArrays]]). `residual` is the
+   * shape's own candidate condition (its length filter and gates), written
+   * over the aliases `idx` and `prb`; the positional filter is common and
+   * added here, with the reference's operand order.
+   *
+   * ID-HASH SALT on the candidate equi key: a hot token leaves one partition
+   * to compute its whole n_idx × n_prb product. The indexing side takes salt
+   * `hash(id) % S` and the probing side is replicated to all S salts, so
+   * every hot bucket splits S ways. Each (idx, prb) pair meets in EXACTLY
+   * one partition (the one with the idx row's salt), so candidates and
+   * per-pair prefix stats are unchanged; the cost is S × the probing
+   * prefix's shuffle rows. `saltWidth` gives S per token, proportional to
+   * the token's candidate fan-out and capped by the caller. Both sides
+   * evaluate it over the SAME per-token df column through identical
+   * deterministic math, so the widths agree per token and the
+   * exactly-once-per-pair invariant holds. `saltBuckets == 1` turns salting
+   * off.
+   *
+   * `passes = P > 1` is the BOUNDED-FOOTPRINT mode for the low-threshold
+   * candidate-explosion regime (t ≤ 0.5), where the candidate join's shuffle
+   * can exceed a node's scratch disk (measured: sf10 t=0.5 needs ~76 GB
+   * shuffle vs 79 GB scratch — a resource wall, not a plan defect): the
+   * probing prefix partitions by `pmod(xxhash64(id), P)` and the
+   * candidate+verify pipeline runs once per slice, each pass's verified
+   * pairs written to a parquet leaf ([[Checkpoints.cutToParquet]]) before
+   * the next starts — so peak in-flight shuffle is ~1/P of the single-pass
+   * join, traded for P re-reads of the indexed side. Output is INVARIANT in
+   * P: every candidate pair's probing id lands in exactly one slice, the
+   * per-pair prefix stats aggregate within that slice alone, and
+   * verification is per-pair — spec-pinned (JaccardJoinSpec).
+   * `prepShuffles` (evaluated only when P > 1) are the build shuffles of the
+   * persisted frames the passes read; they are never removed, and their
+   * files are released once every pass has run.
+   */
+  private def prefixFilterJoin(
+      idxPfx: DataFrame, prbPfx: DataFrame, idxArr: DataFrame, prbArr: DataFrame,
+      prepShuffles: => Set[Int], keys: Seq[String], residual: Column, saltWidth: Column,
+      threshold: Double, saltBuckets: Int, maxSaltBuckets: Int, passes: Int): DataFrame = {
+    require(saltBuckets >= 1, "saltBuckets must be >= 1 (1 disables salting)")
+    require(maxSaltBuckets >= saltBuckets, "maxSaltBuckets must be >= saltBuckets")
+    require(passes >= 1, "passes must be >= 1 (1 = single-pass)")
+    val nsalt = if (saltBuckets == 1) lit(1L) else saltWidth
+    val equiKeys = "token" +: keys :+ "salt"
+    // Multi-pass slices pin the candidate join's parallelism with an
+    // explicit NUMBERED repartition on the join's equi keys (the FuzzyJoin
+    // rule): the sliced probe prefix is small in BYTES but huge in join
+    // FAN-OUT, and AQE coalesces by input bytes — measured at sf10 it folded
+    // each pass's join+partial-agg onto 34 tasks with a 36 GB sort spill PER
+    // PASS, which is exactly the scratch the mode exists to avoid. A
+    // user-numbered repartition forbids the coalesce, and hashing on exactly
+    // the join keys is reused by the join (no second exchange).
+    val nPart = idxPfx.sparkSession.sessionState.conf.numShufflePartitions
+    def pinned(d: DataFrame): DataFrame =
+      if (passes == 1) d else d.repartition(nPart, equiKeys.map(col): _*)
+    val idx = pinned(idxPfx.withColumn("salt", pmod(xxhash64(col("id")), nsalt))).alias("idx")
+    // one candidate+verify slice: `probeSlice` restricts the probing side to
+    // a pass's share of the ids (None = everything, the single-pass plan)
+    def vmOfSlice(probeSlice: Option[Column]): DataFrame = {
+      val prb = pinned(probeSlice.fold(prbPfx)(prbPfx.where)
+          .withColumn("salt", explode(sequence(lit(0L), nsalt - lit(1L)))))
+        .alias("prb")
+      val candCond =
+        equiKeys.map(k => col(s"idx.$k") === col(s"prb.$k")).reduce(_ && _) &&
+        residual &&
+        least(col("idx.len") - col("idx.pos") + lit(1), col("prb.len") - col("prb.pos") + lit(1)) >=
+          ((col("idx.len") + col("prb.len")) * lit(threshold) / lit(1d + threshold))
+      val cand = idx.join(prb, candCond)
+        .groupBy(col("idx.id").as("idxId"), col("prb.id").as("prbId"))
+        .agg(max(col("idx.pos")).as("idxMaxPos"), max(col("prb.pos")).as("prbMaxPos"),
+          count(lit(1)).as("pfxOverlap"))
+      verifySuffix(cand, idxArr, prbArr, threshold)
     }
+    if (passes == 1) vmOfSlice(None)
+    else {
+      val prep = prepShuffles
+      val sc = idxPfx.sparkSession.sparkContext
+      // per-invocation unique job-group tags: two concurrent multi-pass joins
+      // on one session must never attribute each other's stages (a constant
+      // per-pass tag would merge their listener sets); the tag also keeps a
+      // repeated invocation from overwriting a predecessor's slice files
+      val runTag = java.lang.Long.toHexString(System.nanoTime())
+      val slices = (0 until passes).map { p =>
+        // eager lineage cut, then DETERMINISTIC reclamation of exactly the
+        // shuffles this pass's own stages wrote (GraftShuffleJanitor
+        // job-group scoping — a concurrent job's shuffles are untouchable by
+        // construction): the pass's only consumer — its own parquet write —
+        // has completed, so the ~22 GB/pass candidate shuffle frees BEFORE
+        // the next pass writes. GC-hint cleanup was measured too lazy at
+        // sf10 (5-7 GB retained per pass → scratch death the mode exists to
+        // prevent). Slices go to parquet, not executor blocks: at sf10 t=0.5
+        // a localCheckpoint retained ~3.6 GB of blocks per pass, and the
+        // parquet leaf holds the same rows in ~1/4 the bytes.
+        val (slice, passShuffles) =
+          org.apache.spark.GraftShuffleJanitor.runScoped(sc, s"graft-jac-$runTag-pass-$p") {
+            Checkpoints.cutToParquet(vmOfSlice(Some(
+              pmod(xxhash64(col("id")), lit(passes.toLong)) === lit(p.toLong))),
+              s"jac_${runTag}_p$p")
+          }
+        // subtract the prep shuffles: a prep map stage RESUBMITTED during
+        // this pass (FetchFailed after executor loss) runs under the pass's
+        // job group and would otherwise land in the removal set — fully
+        // unregistering a shuffle the persisted frames still recompute
+        // through (releaseFiles below keeps those registered by design)
+        org.apache.spark.GraftShuffleJanitor.remove(sc, passShuffles -- prep)
+        slice
+      }.reduce(_ union _)
+      // every consumer from here on reads the PERSISTED frames, not their
+      // build shuffles (~25 GB retained for the whole run at sf10) — release
+      // the files, keeping the registrations so a cache-evicted recompute
+      // resubmits the parent stages instead of crashing
+      org.apache.spark.GraftShuffleJanitor.releaseFiles(sc, prep)
+      slices
+    }
+  }
 
   // ---------------------------------------------------------------------------
   // Self-join (reference jaccard_join.py:111-209)
@@ -283,11 +398,10 @@ object JaccardJoin {
    *
    * The three frames are persist-tracked (`Api.clearCache()` releases them)
    * and `buildShuffles` holds the ids of every shuffle that built them, for
-   * the bounded-footprint mode's janitor (see [[selfJoinDedupedPrepared]]).
+   * the bounded-footprint mode's janitor (see [[prefixFilterJoin]]).
    */
   final case class SelfJoinPrep private[operators] (
       table: DataFrame, keyAttr: String, joinAttr: String,
-      emitsDistinctTokens: Boolean,
       vals: DataFrame, vtkdf: DataFrame, varr: DataFrame,
       buildShuffles: Set[Int])
 
@@ -347,111 +461,35 @@ object JaccardJoin {
     // action was the measured ~1.5-2.3 s warm floor on the sub-second
     // part/ws/t=0.3 flagship (BENCH_NOTES round 6)
     val varr = leaf(posArrays(vtkdf), "id")
-    SelfJoinPrep(table, keyAttr, joinAttr, tokenizer.emitsDistinctTokens,
-      vals, vtkdf, varr, shuffles.result())
+    SelfJoinPrep(table, keyAttr, joinAttr, vals, vtkdf, varr, shuffles.result())
   }
 
   /** Threshold-dependent tail of [[selfJoinDeduped]] over a shared
-    * [[SelfJoinPrep]]: prefix selection, banded/salted candidate generation,
-    * verification, record expansion. Output is identical to
-    * [[selfJoinDeduped]] at the same threshold.
+    * [[SelfJoinPrep]]: prefix selection, banded/salted candidate generation
+    * and verification ([[prefixFilterJoin]]), then record expansion. Output
+    * is identical to [[selfJoinDeduped]] at the same threshold, for every
+    * `passes` (the bounded-footprint mode, see [[prefixFilterJoin]]).
     *
-    * `passes = P > 1` is the BOUNDED-FOOTPRINT mode for the low-threshold
-    * candidate-explosion regime (t ≤ 0.5), where the candidate join's
-    * shuffle can exceed a node's scratch disk (measured: sf10 t=0.5 needs
-    * ~76 GB shuffle vs 79 GB scratch — a resource wall, not a plan defect):
-    * the PROBING prefix stream partitions by `pmod(xxhash64(id), P)` and the
-    * candidate+verify pipeline runs once per slice, each pass's verified
-    * value pairs materialized to a lineage-cut leaf before the next starts —
-    * so peak in-flight shuffle is ~1/P of the single-pass join, traded for
-    * P re-reads of the (persisted) indexed side. Output is INVARIANT in P:
-    * every candidate pair's probing value lands in exactly one slice, the
-    * per-pair prefix stats aggregate within that slice alone, and
-    * verification is per-pair — spec-pinned (JaccardJoinSpec). */
-  /** Pass-slice materialization for the bounded-footprint mode, selected by
-    * `spark.graft.passes.spill`:
-    *   - `parquet` (default): [[Checkpoints.cutToParquet]] — slices
-    *     accumulate as compressed columnar files, not executor blocks.
-    *     Measured at sf10 t=0.5, localCheckpoint retained ~3.6 GB of rdd
-    *     blocks per pass (the output itself — a monotone floor that consumed
-    *     the scratch the passes knob freed); the parquet leaf holds the same
-    *     rows in ~1/4 the bytes and, on a durable warehouse, survives
-    *     executor loss.
-    *   - `local`: [[Checkpoints.cut]] — no filesystem traffic; right when
-    *     slices are small or the warehouse is slow.
-    * The nanoTime suffix keeps repeated invocations in one session from
-    * overwriting a predecessor's still-referenced slice files. */
-  private def cutSlice(df: DataFrame, tag: String): DataFrame = {
-    val mode =
-      try df.sparkSession.conf.get("spark.graft.passes.spill", "parquet")
-      catch { case scala.util.control.NonFatal(_) => "parquet" }
-    mode match {
-      case "parquet" =>
-        Checkpoints.cutToParquet(df, s"${tag}_${java.lang.Long.toHexString(System.nanoTime())}")
-      case "local" => Checkpoints.cut(df)
-      case other => sys.error(
-        s"spark.graft.passes.spill must be 'parquet' or 'local', got '$other'")
-    }
-  }
-
+    * Value pairs are generated ORIENTED, in both orientations, self pairs
+    * included — the record gate at expansion decides which orientation
+    * applies to each record pair. On top of the shared salt, the self-join
+    * adds a LENGTH-BAND equi key: with lengths confined to a factor-(1/t)
+    * window, band(len) = floor(ln(len)/ln(1/t)) lets the join hash on
+    * (token, band, salt) instead of (token, salt). The probing side explodes
+    * to every band its admissible partner lengths [floor(len*t), ceil(len/t)]
+    * can occupy (floor/ceil make the FP boundaries conservative; the exact
+    * filters stay as residuals). The indexing side has ONE band, so no pair
+    * is emitted twice. On skewed corpora (tiny shared vocabularies — the
+    * documents table) this splits each hot token's n_idx x n_prb blowup
+    * across length bands: measured 31M -> 17M joined rows at sf0.1 t=0.9.
+    * Banding degenerates on uniform-length corpora (every record in one band
+    * — SCALE.md "Measured"); the salt covers that case. */
   def selfJoinDedupedPrepared(
       prep: SelfJoinPrep, threshold: Double,
       lOutPrefix: String = "l_", rOutPrefix: String = "r_",
       saltBuckets: Int = 8, hotTokenDf: Int = 10000,
       maxSaltBuckets: Int = 64, passes: Int = 1): DataFrame = {
-    require(passes >= 1, "passes must be >= 1 (1 = single-pass)")
-    // hotTokenDf is a VALUE-level df calibration point: a token at vdf =
-    // hotTokenDf (fan-out hotTokenDf² = 1e8 at the defaults) is split
-    // saltBuckets ways, and every token's salt width scales with its own
-    // fan-out from there — ceil(saltBuckets·(vdf/hotTokenDf)²), capped at
-    // maxSaltBuckets — bounding per-bucket candidate work at
-    // hotTokenDf²/saltBuckets rows (1.25e7 ≈ seconds of join work at the
-    // defaults) no matter how degenerate the token. Tune hotTokenDf DOWN on
-    // large clusters where per-core fan-out budgets are smaller.
-    require(saltBuckets >= 1, "saltBuckets must be >= 1 (1 disables salting)")
-    require(maxSaltBuckets >= saltBuckets, "maxSaltBuckets must be >= saltBuckets")
     val t = lit(threshold)
-    val onePlusT = lit(1d + threshold)
-    val vtkdf = prep.vtkdf
-
-    def idxPfx(d: DataFrame) =
-      d.where(col("len") - col("pos") + lit(1) >= (col("len") * lit(2) * t / onePlusT))
-    def prbPfx(d: DataFrame) =
-      d.where(col("len") - col("pos") + lit(1) >= (col("len") * t))
-
-    // Ordered value pairs, BOTH orientations, self pairs included — the record
-    // gate below decides which orientation applies to each record pair.
-    //
-    // Two output-preserving partitioning tricks on the candidate equi key:
-    //
-    //   1. LENGTH-BAND equi key: with lengths confined to a factor-(1/t) window,
-    //      band(len) = floor(ln(len)/ln(1/t)) lets the join hash on
-    //      (token, band) instead of token alone. The probing side explodes to
-    //      every band its admissible partner lengths [floor(len*t), ceil(len/t)]
-    //      can occupy (floor/ceil make the FP boundaries conservative; the
-    //      exact filters above stay as residuals). The indexing side has ONE
-    //      band, so no pair is emitted twice. On skewed corpora (tiny shared
-    //      vocabularies — the documents table) this splits each hot token's
-    //      n_idx x n_prb blowup across length bands: measured 31M -> 17M joined
-    //      rows at sf0.1 t=0.9.
-    //   2. ID-HASH SALT: banding degenerates on uniform-length corpora (every
-    //      record in one band — SCALE.md "Measured"), leaving one partition to
-    //      compute a hot key's whole n_idx x n_prb product. Salting the
-    //      indexing side by hash(id) % S and replicating the probing side to
-    //      all S salts splits every hot bucket S ways. Each (L,R) pair meets
-    //      in EXACTLY one partition (the one with L's salt), so candidates and
-    //      per-pair prefix stats are unchanged; the cost is S x the probing
-    //      prefix's shuffle rows — the small side of the fan-out by
-    //      construction. S is PER-TOKEN and fan-out-proportional: a fixed
-    //      8-way split leaves a vdf=4·hotTokenDf token with 2·hotTokenDf²
-    //      rows in ONE bucket (measured as a 42 s straggler task on the 8×
-    //      stress corpus), so each token gets
-    //      S = ceil(saltBuckets · (vdf/hotTokenDf)²) buckets, capped at
-    //      maxSaltBuckets — per-bucket work is bounded by
-    //      hotTokenDf²·saltBuckets⁻¹ no matter how hot the token, and the
-    //      probe-replication cost stays proportional to the work it splits.
-    //      Both sides derive S from the SAME vdf column, so the widths agree
-    //      per token and the exactly-once-per-pair invariant is untouched.
     val lnInvT = math.log(1d / threshold)
     def bandOf(len: Column): Column =
       if (threshold >= 1d) len else floor(log(len.cast("double")) / lit(lnInvT)).cast("long")
@@ -459,126 +497,50 @@ object JaccardJoin {
     // `concat(len,'_',id)` compared as a STRING: when two values' lenkeys
     // differ, the first differing character sits inside the len digits or at
     // the '_' separator, so EVERY record pair's orientation is already decided
-    // — generating the (L,R) orientation with lenkey(L) > lenkey(R) is pure
-    // waste (its expansion gate can never pass). Equal lenkeys (same len) keep
-    // both orientations: record ids decide there.
+    // — generating the (idx, prb) orientation with lenkey(idx) > lenkey(prb)
+    // is pure waste (its expansion gate can never pass). Equal lenkeys (same
+    // len) keep both orientations: record ids decide there.
     val lenkey = concat(col("len").cast("string"), lit("_"))
-    // df-ADAPTIVE salting: the width formula itself decides when to split —
-    // ceil(saltBuckets·(vdf/hotTokenDf)²) is ≥ 2 exactly when the token's
-    // fan-out vdf² crosses the per-bucket budget hotTokenDf²/saltBuckets
-    // (1.25e7 rows at the defaults), and 1 (= unsalted, salt 0 both sides)
-    // below it, so mild corpora see near-zero probe replication while every
-    // over-budget token splits — there is deliberately NO separate
-    // activation threshold: gating at vdf ≥ hotTokenDf left vdf≈6-9k tokens
-    // unsalted with 4-8e7-row buckets, reproducing the 42 s straggler the
-    // salt exists to kill (measured, 8× stress corpus). Both sides derive
-    // the width from the SAME vdf column through identical deterministic
-    // double math, so the widths agree per token. saltBuckets == 1 keeps
-    // its documented meaning: salting off.
-    val nsalt =
-      if (saltBuckets == 1) lit(1L)
-      else least(lit(maxSaltBuckets.toLong),
-        ceil(lit(saltBuckets.toDouble)
-          * pow(col("vdf").cast("double") / lit(hotTokenDf.toDouble), 2d)))
-    val L0 = idxPfx(vtkdf).withColumn("band", bandOf(col("len")))
+    val idxPfx = indexingPrefix(prep.vtkdf, threshold)
+      .withColumn("band", bandOf(col("len")))
       .withColumn("lenkey", lenkey)
-      .withColumn("salt", pmod(xxhash64(col("id")), nsalt))
-    // one candidate+verify slice: `probeSlice` restricts the PROBING side to
-    // a pass's share of the value ids (None = everything, the single-pass
-    // plan unchanged). A value pair's R id decides its slice, so slices
-    // partition the pair space exactly.
-    //
-    // Multi-pass slices pin the candidate join's parallelism with an
-    // explicit NUMBERED repartition on the join's equi keys (the FuzzyJoin
-    // rule): the sliced probe prefix is small in BYTES but huge in join
-    // FAN-OUT, and AQE coalesces by input bytes — measured at sf10 it folded
-    // each pass's join+partial-agg onto 34 tasks with a 36 GB sort spill PER
-    // PASS, which is exactly the scratch the mode exists to avoid. A
-    // user-numbered repartition forbids the coalesce, and hashing on exactly
-    // the join keys is reused by the join (no second exchange).
-    val nPart = prep.table.sparkSession.sessionState.conf.numShufflePartitions
-    def pinned(d: DataFrame): DataFrame =
-      if (passes == 1) d
-      else d.repartition(nPart, col("token"), col("band"), col("salt"))
-    val L = pinned(L0).alias("L")
-    def vmOfSlice(probeSlice: Option[Column]): DataFrame = {
-      val prb0 = prbPfx(vtkdf)
-      val R = pinned(probeSlice.fold(prb0)(prb0.where)
-        .withColumn("band",
-          if (threshold >= 1d) col("len")
-          else explode(sequence(
-            bandOf(greatest(floor(col("len") * t), lit(1d))),
-            bandOf(ceil(col("len") / t)))))
-        .withColumn("lenkey", lenkey)
-        .withColumn("salt", explode(sequence(lit(0L), nsalt - lit(1L)))))
-        .alias("R")
-      // The length filter is one-sided, exactly as the reference
-      // (`L.len >= R.len * t`, jaccard_join.py:158). No mirror condition: a pair
-      // with R.len < L.len*t is already rejected by the positional filter —
-      // R.len - R.pos + 1 <= R.len < (L.len+R.len)*t/(1+t) exactly in that
-      // region — and any hand-written mirror would be a DIFFERENT float
-      // expression that could diverge from the record-level pipeline and the
-      // DuckDB oracle at representational boundaries.
-      val candCond =
-        col("L.token") === col("R.token") &&
-        col("L.band") === col("R.band") &&
-        col("L.salt") === col("R.salt") &&
-        col("L.lenkey") <= col("R.lenkey") &&
-        col("L.len") >= col("R.len") * t &&
-        least(col("L.len") - col("L.pos") + lit(1), col("R.len") - col("R.pos") + lit(1)) >=
-          ((col("L.len") + col("R.len")) * t / onePlusT)
-      val cand = L.join(R, candCond)
-        .groupBy(col("L.id").as("Lv"), col("R.id").as("Rv"))
-        .agg(max(col("L.pos")).as("LmaxPos"), max(col("R.pos")).as("RmaxPos"),
-          count(lit(1)).as("pfxOverlap"))
-        .alias("c")
-      val varr = prep.varr
-      verifySuffix(cand.toDF(), varr, varr,
-          "Lv", "Rv", "LmaxPos", "RmaxPos", threshold, prep.emitsDistinctTokens)
-        .select(col("Lv").as("lval"), col("Rv").as("rval"))
-    }
-    val vm =
-      if (passes == 1) vmOfSlice(None)
-      else {
-        // prep materialized its frames eagerly and recorded their build
-        // shuffles, so no pass's removal set can take one of them
-        val prepShuffles = prep.buildShuffles
-        val sc = prep.table.sparkSession.sparkContext
-        // per-invocation unique job-group tags: two concurrent multi-pass
-        // joins on one session must never attribute each other's stages
-        // (a constant per-pass tag would merge their listener sets)
-        val runTag = java.lang.Long.toHexString(System.nanoTime())
-        val slices = (0 until passes).map { p =>
-          // eager lineage cut, then DETERMINISTIC reclamation of exactly the
-          // shuffles this pass's own stages wrote (GraftShuffleJanitor
-          // job-group scoping — a concurrent job's shuffles are untouchable
-          // by construction): the pass's only consumer — its own checkpoint —
-          // has completed, so the ~22 GB/pass candidate shuffle frees BEFORE
-          // the next pass writes. GC-hint cleanup was measured too lazy at
-          // sf10 (5-7 GB retained per pass → scratch death the mode exists
-          // to prevent).
-          val (slice, passShuffles) =
-            org.apache.spark.GraftShuffleJanitor.runScoped(sc, s"graft-jac-self-$runTag-pass-$p") {
-              cutSlice(vmOfSlice(Some(
-                pmod(xxhash64(col("id")), lit(passes.toLong)) === lit(p.toLong))),
-                s"jacself_p$p")
-            }
-          // subtract the prep shuffles: a prep map stage RESUBMITTED during
-          // this pass (FetchFailed after executor loss) runs under the
-          // pass's job group and would otherwise land in the removal set —
-          // fully unregistering a shuffle the persisted frames still recompute
-          // through (releaseFiles below keeps those registered by design)
-          org.apache.spark.GraftShuffleJanitor.remove(sc, passShuffles -- prepShuffles)
-          slice
-        }.reduce(_ union _)
-        // every consumer from here on reads the PERSISTED frames, not their
-        // build shuffles (~25 GB retained for the whole run at sf10) —
-        // release the files, keeping the registrations so a cache-evicted
-        // recompute resubmits the parent stages instead of crashing
-        org.apache.spark.GraftShuffleJanitor.releaseFiles(sc, prepShuffles)
-        slices
-      }
-
+    val prbPfx = probingPrefix(prep.vtkdf, threshold)
+      .withColumn("band",
+        if (threshold >= 1d) col("len")
+        else explode(sequence(
+          bandOf(greatest(floor(col("len") * t), lit(1d))),
+          bandOf(ceil(col("len") / t)))))
+      .withColumn("lenkey", lenkey)
+    // The length filter is one-sided, exactly as the reference
+    // (`L.len >= R.len * t`, jaccard_join.py:158). No mirror condition: a pair
+    // with R.len < L.len*t is already rejected by the positional filter —
+    // R.len - R.pos + 1 <= R.len < (L.len+R.len)*t/(1+t) exactly in that
+    // region — and any hand-written mirror would be a DIFFERENT float
+    // expression that could diverge from the record-level pipeline and the
+    // DuckDB oracle at representational boundaries.
+    val residual =
+      col("idx.lenkey") <= col("prb.lenkey") &&
+      col("idx.len") >= col("prb.len") * t
+    // hotTokenDf is a VALUE-level df calibration point: vdf = VALUE-level df,
+    // whose square bounds the token's candidate fan-out (weighted df would
+    // overstate it by the duplication factor²). A token at vdf = hotTokenDf
+    // (fan-out hotTokenDf² = 1e8 at the defaults) is split saltBuckets ways,
+    // and every token's salt width scales with its own fan-out from there —
+    // ceil(saltBuckets·(vdf/hotTokenDf)²), capped at maxSaltBuckets —
+    // bounding per-bucket candidate work at hotTokenDf²/saltBuckets rows
+    // (1.25e7 ≈ seconds of join work at the defaults) no matter how
+    // degenerate the token. Tune hotTokenDf DOWN on large clusters where
+    // per-core fan-out budgets are smaller. The width formula itself decides
+    // when to split: it is ≥ 2 exactly when the fan-out crosses the
+    // per-bucket budget and 1 (unsalted) below it — there is deliberately NO
+    // separate activation threshold: gating at vdf ≥ hotTokenDf left
+    // vdf≈6-9k tokens unsalted with 4-8e7-row buckets, reproducing a 42 s
+    // straggler task the salt exists to kill (measured, 8× stress corpus).
+    val saltWidth = least(lit(maxSaltBuckets.toLong),
+      ceil(lit(saltBuckets.toDouble)
+        * pow(col("vdf").cast("double") / lit(hotTokenDf.toDouble), 2d)))
+    val vm = prefixFilterJoin(idxPfx, prbPfx, prep.varr, prep.varr, prep.buildShuffles,
+      Seq("band"), residual, saltWidth, threshold, saltBuckets, maxSaltBuckets, passes)
     expandSelf(prep.table, prep.keyAttr, prep.joinAttr, prep.varr, vm,
       lOutPrefix, rOutPrefix)
   }
@@ -619,8 +581,9 @@ object JaccardJoin {
       .select(col("lid").as(lOutPrefix + keyAttr), col("rid2").as(rOutPrefix + keyAttr))
   }
 
-  /** Expand oriented value-level matches (keyed by surrogate `vid`) to record
-    * pairs under the reference's `l_id` string gate.
+  /** Expand oriented value-level matches (`idxId`, `prbId`, keyed by
+    * surrogate `vid`) to record pairs under the reference's `l_id` string
+    * gate.
     *
     * `vid = unhex(md5(value))` is DETERMINISTIC in the value, so each record's
     * surrogate is recomputed directly from the table instead of joined back
@@ -651,10 +614,10 @@ object JaccardJoin {
       .join(vlens, "vid")
       .select(col("rid"), col("vid"),
         concat(col("len").cast("string"), lit("_"), col("rid").cast("string")).as("lid_str"))
-    vm.join(recs.select(col("vid").as("lval"), col("rid").as("lid"),
-        col("lid_str").as("l_lid")), "lval")
-      .join(recs.select(col("vid").as("rval"), col("rid").as("rid2"),
-        col("lid_str").as("r_lid")), "rval")
+    vm.join(recs.select(col("vid").as("idxId"), col("rid").as("lid"),
+        col("lid_str").as("l_lid")), "idxId")
+      .join(recs.select(col("vid").as("prbId"), col("rid").as("rid2"),
+        col("lid_str").as("r_lid")), "prbId")
       .where(col("l_lid") < col("r_lid"))
       .select(col("lid").as(lOutPrefix + keyAttr), col("rid2").as(rOutPrefix + keyAttr))
   }
@@ -702,18 +665,7 @@ object JaccardJoin {
       exactRecall: Boolean = false,
       saltBuckets: Int = 8, hotTokenDf: Long = 100000000L,
       maxSaltBuckets: Int = 64, passes: Int = 1): DataFrame = {
-    // hotTokenDf compares against df = l_df * r_df, which IS the token's
-    // candidate fan-out: the 1e8 default matches selfJoinDeduped's bound.
-    // passes = P > 1 is the bounded-footprint mode (see
-    // selfJoinDedupedPrepared): the probing side partitions by
-    // pmod(xxhash64(id), P), candidate+verify runs per slice with an eager
-    // lineage cut between passes — ~1/P peak shuffle, P re-reads of the
-    // persisted indexing prefix, output invariant in P (spec-pinned).
-    require(saltBuckets >= 1, "saltBuckets must be >= 1 (1 disables salting)")
-    require(maxSaltBuckets >= saltBuckets, "maxSaltBuckets must be >= saltBuckets")
-    require(passes >= 1, "passes must be >= 1 (1 = single-pass)")
     val t = lit(threshold)
-    val onePlusT = lit(1d + threshold)
 
     // Driver-side counts sizing the widow placeholder (jaccard_join.py:238-245)
     val lCount = lTable.count()
@@ -743,18 +695,13 @@ object JaccardJoin {
     val lTkdf = tkdfOf(lTokens)
     val rTkdf = tkdfOf(rTokens)
 
-    // J10: indexing prefixes on both sides, then J12: widow-count side choice
-    def indexingPrefix(tkdf: DataFrame): DataFrame =
-      tkdf.where(col("len") - col("pos") + lit(1) >= (col("len") * lit(2) * t / onePlusT))
-    def probingPrefix(tkdf: DataFrame): DataFrame =
-      tkdf.where(col("len") - col("pos") + lit(1) >= (col("len") * t))
-
-    // one Spark job for both widow counts (the reference issues two scalar queries,
-    // jaccard_join.py:341-353; fusing them halves the driver round-trips and lets
-    // the two persisted tkdf scans run concurrently)
-    val widowRows = indexingPrefix(lTkdf).where(col("df") === widowPlaceholder)
+    // J12: widow-count side choice over both indexing prefixes, in one Spark
+    // job (the reference issues two scalar queries, jaccard_join.py:341-353;
+    // fusing them halves the driver round-trips and lets the two persisted
+    // tkdf scans run concurrently)
+    val widowRows = indexingPrefix(lTkdf, threshold).where(col("df") === widowPlaceholder)
       .select(lit("l").as("side"))
-      .union(indexingPrefix(rTkdf).where(col("df") === widowPlaceholder)
+      .union(indexingPrefix(rTkdf, threshold).where(col("df") === widowPlaceholder)
         .select(lit("r").as("side")))
       .groupBy("side").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -766,91 +713,32 @@ object JaccardJoin {
     val (idxTkdf, idxPrefixName) = if (lIsIndexing) (lTkdf, lOutPrefix) else (rTkdf, rOutPrefix)
     val (prbTkdf, prbPrefixName) = if (lIsIndexing) (rTkdf, rOutPrefix) else (lTkdf, lOutPrefix)
 
-    // df-adaptive id-hash salt (see selfJoinDeduped's candidate-key
-    // commentary): here df = l_df * r_df is EXACTLY the token's candidate
-    // fan-out before filters, so `hot` is a direct row-count bound and the
-    // fan-out-proportional width is df/hotTokenDf directly (no square); widow
-    // tokens (df = placeholder) match nothing and are never replicated.
-    // no separate activation threshold (see selfJoinDeduped): the width is
-    // ≥ 2 exactly when df crosses the per-bucket budget hotTokenDf/saltBuckets
-    val nsalt =
-      if (saltBuckets == 1) lit(1L)
-      else when(col("df") < lit(widowPlaceholder),
+    // J13: the two-sided length filter (jaccard_join.py:364-384)
+    val residual =
+      col("idx.len") >= col("prb.len") * t &&
+      col("prb.len") >= col("idx.len") * t
+    // df = l_df * r_df is EXACTLY the token's candidate fan-out before
+    // filters, so hotTokenDf (1e8 by default, matching the self-join's
+    // bound) is a direct row-count bound and the fan-out-proportional width
+    // is df/hotTokenDf, no square; it is ≥ 2 exactly when df crosses the
+    // per-bucket budget hotTokenDf/saltBuckets. Widow tokens (df =
+    // placeholder) match nothing and are never replicated.
+    val saltWidth =
+      when(col("df") < lit(widowPlaceholder),
         least(lit(maxSaltBuckets.toLong),
           ceil(lit(saltBuckets.toDouble)
             * col("df").cast("double") / lit(hotTokenDf.toDouble))))
         .otherwise(lit(1L))
-    // multi-pass slices pin join parallelism on the equi keys — the AQE
-    // explode-blind-coalesce defeat, see selfJoinDedupedPrepared
-    val nPart = lTable.sparkSession.sessionState.conf.numShufflePartitions
-    def pinned(d: DataFrame): DataFrame =
-      if (passes == 1) d else d.repartition(nPart, col("token"), col("salt"))
-    val rPfx = pinned(
-        (if (exactRecall) probingPrefix(idxTkdf) else indexingPrefix(idxTkdf))
-          .withColumn("salt", pmod(xxhash64(col("id")), nsalt)))
-      .alias("Rpfx")
-    val idxArr = posArrays(idxTkdf)
-    val prbArr = posArrays(prbTkdf)
-    // one candidate+verify slice over a probing-side share (None = all)
-    def vmOfSlice(probeSlice: Option[Column]): DataFrame = {
-      val prb0 = probingPrefix(prbTkdf)
-      val sPfx = pinned(probeSlice.fold(prb0)(prb0.where)
-          .withColumn("salt", explode(sequence(lit(0L), nsalt - lit(1L)))))
-        .alias("Spfx")
-
-      // J13: candidates, two-sided length filter (jaccard_join.py:364-384)
-      val candCond =
-        col("Rpfx.token") === col("Spfx.token") &&
-        col("Rpfx.salt") === col("Spfx.salt") &&
-        col("Rpfx.len") >= col("Spfx.len") * t &&
-        col("Spfx.len") >= col("Rpfx.len") * t &&
-        least(col("Rpfx.len") - col("Rpfx.pos") + lit(1), col("Spfx.len") - col("Spfx.pos") + lit(1)) >=
-          ((col("Rpfx.len") + col("Spfx.len")) * t / onePlusT)
-
-      val cand = rPfx.join(sPfx, candCond)
-        .groupBy(col("Rpfx.id").as("Rid"), col("Spfx.id").as("Sid"))
-        .agg(
-          max(col("Rpfx.pos")).as("RmaxPos"),
-          max(col("Spfx.pos")).as("SmaxPos"),
-          count(lit(1)).as("pfxOverlap"))
-        .alias("c")
-
-      // J14: verification (jaccard_join.py:386-405), array form — see verifySuffix
-      verifySuffix(cand.toDF(), idxArr, prbArr,
-        "Rid", "Sid", "RmaxPos", "SmaxPos", threshold, tokenizer.emitsDistinctTokens)
-    }
-    val vm =
-      if (passes == 1) vmOfSlice(None)
-      else {
-        // see selfJoinDedupedPrepared: materialize shared persisted frames
-        // before the first snapshot, then reclaim each pass's shuffles
-        // deterministically once its checkpoint lands
-        val sc = lTable.sparkSession.sparkContext
-        // see selfJoinDedupedPrepared: unique tags per invocation, and prep
-        // shuffles subtracted from every pass's removal set
-        val runTag = java.lang.Long.toHexString(System.nanoTime())
-        val (_, prepShuffles) =
-          org.apache.spark.GraftShuffleJanitor.runScoped(sc, s"graft-jac-rs-$runTag-prep") {
-            dfreq.count(); lTkdf.count(); rTkdf.count()
-          }
-        val slices = (0 until passes).map { p =>
-          val (slice, passShuffles) =
-            org.apache.spark.GraftShuffleJanitor.runScoped(sc, s"graft-jac-rs-$runTag-pass-$p") {
-              cutSlice(vmOfSlice(Some(
-                pmod(xxhash64(col("id")), lit(passes.toLong)) === lit(p.toLong))),
-                s"jacrs_p$p")
-            }
-          org.apache.spark.GraftShuffleJanitor.remove(sc, passShuffles -- prepShuffles)
-          slice
-        }.reduce(_ union _)
-        // see selfJoinDedupedPrepared: the prep frames' build shuffles are
-        // consumed — release their files, keep the registrations
-        org.apache.spark.GraftShuffleJanitor.releaseFiles(sc, prepShuffles)
-        slices
-      }
-    vm.select(
-      col("Rid").as(idxPrefixName + lKey),
-      col("Sid").as(prbPrefixName + rKey))
+    // J13/J14: candidates and verification (jaccard_join.py:364-405)
+    prefixFilterJoin(
+        if (exactRecall) probingPrefix(idxTkdf, threshold) else indexingPrefix(idxTkdf, threshold),
+        probingPrefix(prbTkdf, threshold), posArrays(idxTkdf), posArrays(prbTkdf),
+        Seq(lTokens, rTokens, dfreq, lTkdf, rTkdf)
+          .flatMap(org.apache.spark.sql.GraftCheckpointBridge.buildShuffles).toSet,
+        Nil, residual, saltWidth, threshold, saltBuckets, maxSaltBuckets, passes)
+      .select(
+        col("idxId").as(idxPrefixName + lKey),
+        col("prbId").as(prbPrefixName + rKey))
   }
 
   /** J15 (R×S): brute-force oracle (reference jaccard_join.py:407-420). */

@@ -165,22 +165,8 @@ object GraftCheckpointBridge {
     * re-cached. */
   def cachedLeaf(df: DataFrame, keys: Seq[String]): (DataFrame, Set[Int]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rel = ds.queryExecution.withCachedData match {
-      case r: InMemoryRelation => r
-      case other => throw new IllegalArgumentException(
-        s"cachedLeaf: frame is not persisted (plan root ${other.nodeName})")
-    }
+    val (rel, physical) = materialized(ds)
     val builder = rel.cacheBuilder
-    // one job over the cached RDD, run as a SQL execution like any Dataset
-    // action: its tasks see the session's SQL confs, not the defaults
-    if (!builder.isCachedColumnBuffersLoaded)
-      SQLExecution.withNewExecutionId(ds.queryExecution, Some("cachedLeaf")) {
-        builder.cachedColumnBuffers.count()
-      }: Unit
-    val physical = rel.cachedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
     val buffers = builder.cachedColumnBuffers
     val leaf = leaves.synchronized {
       leaves.filterInPlace { case (_, (b, _)) =>
@@ -204,6 +190,32 @@ object GraftCheckpointBridge {
       }
     }
     (classic.Dataset.ofRows(ds.sparkSession, leaf), shuffleIds(physical))
+  }
+
+  /** Ids of the shuffles that built a persisted frame's cache, materializing
+    * it first when it is not yet. */
+  def buildShuffles(df: DataFrame): Set[Int] =
+    shuffleIds(materialized(df.asInstanceOf[classic.Dataset[Row]])._2)
+
+  /** A persisted frame's cached relation, its cache filled, and the cached
+    * plan as it executed. */
+  private def materialized(ds: classic.Dataset[Row]): (InMemoryRelation, SparkPlan) = {
+    val rel = ds.queryExecution.withCachedData match {
+      case r: InMemoryRelation => r
+      case other => throw new IllegalArgumentException(
+        s"frame is not persisted (plan root ${other.nodeName})")
+    }
+    // one job over the cached RDD, run as a SQL execution like any Dataset
+    // action: its tasks see the session's SQL confs, not the defaults
+    if (!rel.cacheBuilder.isCachedColumnBuffersLoaded)
+      SQLExecution.withNewExecutionId(ds.queryExecution, Some("cachedLeaf")) {
+        rel.cacheBuilder.cachedColumnBuffers.count()
+      }: Unit
+    val physical = rel.cachedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    (rel, physical)
   }
 
   /** The leaf handed out per (cached RDD id, keys); entries of released

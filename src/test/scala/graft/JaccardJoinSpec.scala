@@ -29,11 +29,6 @@ class JaccardJoinSpec extends SparkSpec {
     assert(pairSet(out) === Set((2L, 6L), (3L, 5L)))
   }
 
-  test("join() dispatches to self-join when right is empty") {
-    val out = JaccardJoin.join(purchases, "id", "purchases", None, "", "", ws, 0.5)
-    assert(unorderedPairSet(out) === Set((3L, 5L), (2L, 6L)))
-  }
-
   private def randomTable(seed: Int, n: Int): Seq[(Long, String)] = {
     val rnd = new Random(seed)
     val vocab = Vector("ant", "bee", "cat", "dog", "elk", "fox", "gnu", "hen",
@@ -96,15 +91,28 @@ class JaccardJoinSpec extends SparkSpec {
     assert(rsMulti.count() === rsSingle.count())
     assert(unorderedPairSet(rsMulti) === unorderedPairSet(rsSingle))
     assert(unorderedPairSet(rsSingle).nonEmpty)
+  }
 
-    // both slice-spill strategies produce the identical result (the default
-    // parquet leaf is what the assertions above exercised; 'local' is the
-    // zero-filesystem localCheckpoint mode)
-    spark.conf.set("spark.graft.passes.spill", "local")
+  test("R×S passes > 1: released prep shuffle files rebuild when the cached frames are lost") {
+    // once every pass has run, the multi-pass join releases the files of
+    // the shuffles that built its persisted token frames; the result must
+    // not depend on them, and after the cached blocks are dropped the next
+    // join over the same frames must rebuild them through those shuffles
+    val sc = spark.sparkContext
+    val l = randomTable(35, 40).toDF("id", "val")
+    val r = randomTable(36, 30).toDF("id", "val")
+    val before = sc.getPersistentRDDs.keySet
+    val single = pairSet(JaccardJoin.rsJoin(l, "id", "val", r, "id", "val", ws, 0.3))
+    val multi = JaccardJoin.rsJoin(l, "id", "val", r, "id", "val", ws, 0.3, passes = 4)
+    assert(pairSet(multi) === single)
+    val cached = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }.values
+    assert(cached.nonEmpty)
     try {
-      val multiLocal = JaccardJoin.selfJoinDeduped(df, "id", "val", ws, 0.3, passes = 3)
-      assert(unorderedPairSet(multiLocal) === unorderedPairSet(single))
-    } finally spark.conf.unset("spark.graft.passes.spill")
+      cached.foreach(_.unpersist(blocking = true))
+      assert(pairSet(JaccardJoin.rsJoin(l, "id", "val", r, "id", "val", ws, 0.3)) === single)
+      assert(pairSet(multi) === single)
+      assert(single.nonEmpty)
+    } finally Api.clearCache()
   }
 
   for (t <- Seq(0.3, 0.5); q <- Seq(2, 3)) {
