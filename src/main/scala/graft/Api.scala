@@ -100,7 +100,8 @@ object Api {
         graft.expressions.LevenshteinBounded(children.head, children(1), bound)
       })
     // graft_suffix_overlap(larr, rarr, lStart, rStart): multiset overlap of
-    // two string-array suffixes from 1-based starts (the Jaccard verify kernel)
+    // two string-array suffixes from 1-based starts (the Jaccard verification
+    // count over raw tokens)
     org.apache.spark.sql.GraftExpressionBridge.registerFunction(
       spark, "graft_suffix_overlap", { children =>
         require(children.length == 4,

@@ -484,7 +484,10 @@ object Bench {
           case _ => s""","calibration":{$core}"""
         }
       }
-    val recallJson = recallField(spark, sfDir)
+    // a SPARK_GRAFT_QUERIES run times only the named queries and skips the
+    // recall sidecar; SPARK_GRAFT_RECALL_ONLY=1 still asks for it
+    val recallJson =
+      if (filter.isDefined && !recallOnly) "" else recallField(spark, sfDir)
     HostProbe.release()
     val attemptsJson = attempts.map(a =>
       f"""{"verdict":"${a.verdict.takeWhile(_ != ' ')}","total":${a.total}%.1f,"pre_mem":${a.pre.mem}%.2f,"post_mem":${a.post.mem}%.2f,"waited_sec":${a.waitedSec}}""")
@@ -718,7 +721,8 @@ object Bench {
   /** Approximate-path recall vs the exact twins, emitted as a `"recall"` key
     * INSIDE the single JSON line (a second line would break the driver's
     * parse). Skipped when the profile's tables are missing (stress corpus
-    * has no embeddings) or SPARK_GRAFT_RECALL=0; never fails the bench. */
+    * has no embeddings) or SPARK_GRAFT_RECALL=0, and on SPARK_GRAFT_QUERIES
+    * runs unless SPARK_GRAFT_RECALL_ONLY=1; never fails the bench. */
   private def recallField(spark: SparkSession, sfDir: String): String = {
     import graft.operators.{Dedup, JaccardJoin, Similarity, WhitespaceTokenizer}
     import org.apache.spark.sql.functions.col

@@ -16,11 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
  * `size(array_intersect(lsuf, rsuf))`, and with duplicates it is the
  * cross-product count the relational GROUP BY produces.
  *
+ * Serves `graft_suffix_overlap` and the md5-family verification of
+ * [[graft.operators.Dedup]]; the filtered Jaccard joins verify over dense
+ * integer ranks with [[SortedOverlapKernels]] instead.
+ *
  * Hybrid strategy: a nested byte-equality loop when the PRODUCT of the two
- * suffix lengths is small (no allocation at all), else one count-map build +
- * probe. Either way it replaces, per candidate pair: two `slice` array
- * copies, an `array_intersect` hash set, and (bag path) two `array_distinct`
- * probes plus an INTERPRETED higher-order fold.
+ * suffix lengths is small (one string handle per element, none per
+ * comparison), else one count-map build + probe. Either way it replaces, per
+ * candidate pair: two `slice` array copies, an `array_intersect` hash set,
+ * and (bag path) two `array_distinct` probes plus an INTERPRETED
+ * higher-order fold.
  *
  * The crossover is product-based, not length-based: the nested loop's inner
  * step is one UTF8String byte-equality (~ns for q-gram-sized tokens, no
@@ -47,15 +52,23 @@ object SuffixOverlapKernels {
     if (li0 >= ln || ri0 >= rn) return 0L
     var cnt = 0L
     if ((ln - li0).toLong * (rn - ri0).toLong <= NestedLoopMaxProduct) {
+      // read the right suffix's strings once: `getUTF8String` allocates a
+      // handle per call, which must not happen per comparison
+      val rsuf = new Array[UTF8String](rn - ri0)
+      var j = ri0
+      while (j < rn) {
+        rsuf(j - ri0) = rarr.getUTF8String(j)
+        j += 1
+      }
       var i = li0
       while (i < ln) {
         val v = larr.getUTF8String(i)
         if (v != null) {
-          var j = ri0
-          while (j < rn) {
-            val w = rarr.getUTF8String(j)
+          var k = 0
+          while (k < rsuf.length) {
+            val w = rsuf(k)
             if (w != null && v.equals(w)) cnt += 1
-            j += 1
+            k += 1
           }
         }
         i += 1

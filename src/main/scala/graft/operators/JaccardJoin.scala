@@ -14,8 +14,17 @@ import graft.operators.PersistTracker.TrackedPersist
  * lazy Spark DataFrame stages so Catalyst plans the physical join/agg strategy:
  *
  *   tokenize -> document frequency -> rarest-first position -> prefix selection
- *            -> candidate generation (equi-join on token + theta filters)
+ *            -> candidate generation (equi-join on the token's rank + theta filters)
  *            -> verification (suffix overlap count + exact threshold test)
+ *
+ * Tokens are strings only up to the document frequency: each distinct token
+ * is then numbered once by its DENSE RANK in the global `(df, token)` order
+ * ([[rankTokens]]), the AllPairs/PPJoin practice. A global order restricted
+ * to one record is that record's rarest-first order, binary string tie-break
+ * included, so positions, prefixes and every filter are exactly the
+ * reference's; a record becomes its ascending rank array (position = index
+ * + 1, prefix = leading slice), candidates join on a long, and verification
+ * is a sorted merge of two long arrays.
  *
  * Where the reference materializes every stage as a DuckDB temp table, we keep the
  * plan declarative and persist only the intermediates a pipeline reads more than
@@ -23,7 +32,7 @@ import graft.operators.PersistTracker.TrackedPersist
  * generation and verification — reference jaccard_join.py:154,176); the
  * value-deduplicated self-join materializes its threshold-free prep (`vals`,
  * `vtkdf`, `varr`) as cached plan leaves ([[prepareSelfDeduped]]); [[rsJoin]]
- * persists both token tables, the merged df table and both `tkdf`s, lazily.
+ * persists both token tables, the ranked df table and both `tkdf`s, lazily.
  * Everything else pipelines inside whole-stage codegen.
  *
  * Both join shapes end in ONE tail ([[prefixFilterJoin]]): salted candidate
@@ -32,7 +41,7 @@ import graft.operators.PersistTracker.TrackedPersist
  * slices. The shapes differ only in what they hand it.
  *
  * Scale notes (target: 1000-executor cluster, ~100 TB):
- *   - The candidate join is an equi-join on `token` with theta post-filters; Catalyst
+ *   - The candidate join is an equi-join on `rank` with theta post-filters; Catalyst
  *     picks shuffled-hash/sort-merge on the equi key and evaluates the length/prefix/
  *     positional conditions as join residuals — no custom strategy needed.
  *   - Token skew (very frequent tokens) is the known hot spot; the rarest-first
@@ -46,6 +55,8 @@ import graft.operators.PersistTracker.TrackedPersist
  *     the index-side choice — are the reference's manual adaptive planning
  *     (jaccard_join.py:238-245,341-353); the widow collect runs over the persisted
  *     token tables, so their data is scanned once.
+ *   - Ranking sorts the VOCABULARY (distinct tokens), not the token rows, by a
+ *     range-partitioned sort; no step gathers it into one partition.
  *
  * Float semantics: all threshold comparisons keep the reference's exact operand
  * order, e.g. `count(*) + pfxOverlap - 1 >= ((L.len + R.len) * t / (1+t))`
@@ -55,29 +66,52 @@ import graft.operators.PersistTracker.TrackedPersist
 object JaccardJoin {
 
   /**
-   * Per-record token arrays in rarest-first position order: `arr[pos-1]` is
-   * the token ranked at `pos` (positions are the window's consecutive
-   * `row_number`, so `collect_list(struct(pos, token))` sorted by pos
-   * reconstructs the exact ranked sequence), plus the record's token count.
+   * Dense token ranks: `dfreq` (one row per distinct token, with its `df`)
+   * plus `rank`, the token's 0-based index in the global `(df, token)`
+   * order, strings compared as bytes like the reference's per-record
+   * `ORDER BY df, token`. (df, token) is unique per row, so every
+   * recomputation, through any lineage, numbers the tokens alike.
+   */
+  private[graft] def rankTokens(dfreq: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftCheckpointBridge.withSortedIndex(
+      dfreq, "rank", col("df"), col("token"))
+
+  /**
+   * Ranked token rows: `tokens` (id, len, token) joined to `ranks` and
+   * carrying (id, len, rank, `cols` of the rank table…, pos), with `pos` the
+   * token's 1-based place in its record's rarest-first order. Duplicate
+   * token rows (the delimiter tokenizer's distinct-before-lowercase quirk,
+   * bag mode) share a rank and take consecutive positions, as under the
+   * reference's `ORDER BY df, token`.
+   */
+  private def rankPositions(tokens: DataFrame, ranks: DataFrame, cols: String*): DataFrame =
+    tokens.join(ranks, "token")
+      .select(Seq(col("id"), col("len"), col("rank")) ++ cols.map(col) :+
+        row_number().over(Window.partitionBy("id").orderBy("rank")).cast("long").as("pos"): _*)
+
+  /**
+   * Per-record ascending rank arrays plus the record's token count: ranks
+   * ascend in position order, so `arr[pos-1]` is the rank at `pos` and a
+   * prefix is a leading slice.
    */
   private def posArrays(tkdf: DataFrame): DataFrame =
-    tkdf.groupBy("id").agg(
-      transform(sort_array(collect_list(struct(col("pos"), col("token")))),
-        x => x.getField("token")).as("arr"),
+    tkdf.groupBy("id").agg(sort_array(collect_list(col("rank"))).as("arr"),
       first(col("len")).as("len"))
 
   /**
-   * Suffix verification over position arrays — semantically identical to the
+   * Suffix verification over rank arrays — semantically identical to the
    * reference's 3-way join + GROUP BY + HAVING (jaccard_join.py:168-188) but
    * O(|suffix|) per candidate with no row explosion (the relational form
    * streamed 162M joined rows for the sf0.1 documents self-join; this runs the
    * same verification in a few seconds):
    *
    *   - `cnt` = number of (L-row, R-row) token matches with `L.pos >= LmaxPos
-   *     AND R.pos >= RmaxPos` = matches between the two position slices; for
-   *     duplicate-free slices that is `array_intersect`, and slices holding
-   *     duplicate tokens (the delimiter tokenizer's distinct-before-lowercase
-   *     quirk) take the exact multiset product fold instead;
+   *     AND R.pos >= RmaxPos` = matches between the two sorted suffixes,
+   *     counted by ONE merge of the two long arrays from those 1-based
+   *     starts ([[graft.expressions.SortedOverlapKernels]]); equal runs
+   *     multiply, so slices holding duplicate tokens (the delimiter
+   *     tokenizer's distinct-before-lowercase quirk) keep the multiset
+   *     count;
    *   - a pair only survives when `cnt >= 1` — in the reference the GROUP only
    *     exists if the verification join matched at least one row (LmaxPos and
    *     RmaxPos can come from different prefix tokens, so zero suffix matches
@@ -98,14 +132,9 @@ object JaccardJoin {
         "idxId")
       .join(prbArrs.select(col("id").as("prbId"), col("arr").as("rarr"), col("len").as("rlen")),
         "prbId")
-    // graft_suffix_overlap: one fused native kernel per candidate — multiset
-    // overlap of the two suffixes directly from the arrays + start positions.
-    // Replaces two `slice` copies + `array_intersect` (set path) and the
-    // per-pair dup probes + INTERPRETED higher-order fold (bag path); for
-    // duplicate-free suffixes multiset == set count, so one kernel serves
-    // both tokenizer classes with the reference's join-count semantics.
+    // one merge per candidate: O(n + m) long compares, no allocation
     val cnt = org.apache.spark.sql.GraftExpressionBridge.column(
-      graft.expressions.SuffixOverlapCount(
+      graft.expressions.SortedOverlapCount(
         org.apache.spark.sql.GraftExpressionBridge.expression(col("larr")),
         org.apache.spark.sql.GraftExpressionBridge.expression(col("rarr")),
         org.apache.spark.sql.GraftExpressionBridge.expression(col("idxMaxPos").cast("int")),
@@ -135,7 +164,7 @@ object JaccardJoin {
    * indexing and a probing prefix, the per-pair prefix aggregate, and suffix
    * verification. Returns the verified (idxId, prbId) pairs.
    *
-   * The prefix frames carry (id, len, pos, token) plus any extra equi `keys`
+   * The prefix frames carry (id, len, pos, rank) plus any extra equi `keys`
    * and the columns `saltWidth` and `residual` read. `idxArr`/`prbArr` are
    * the two sides' position arrays ([[posArrays]]). `residual` is the
    * shape's own candidate condition (its length filter and gates), written
@@ -179,7 +208,7 @@ object JaccardJoin {
     require(maxSaltBuckets >= saltBuckets, "maxSaltBuckets must be >= saltBuckets")
     require(passes >= 1, "passes must be >= 1 (1 = single-pass)")
     val nsalt = if (saltBuckets == 1) lit(1L) else saltWidth
-    val equiKeys = "token" +: keys :+ "salt"
+    val equiKeys = "rank" +: keys :+ "salt"
     // Multi-pass slices pin the candidate join's parallelism with an
     // explicit NUMBERED repartition on the join's equi keys (the FuzzyJoin
     // rule): the sliced probe prefix is small in BYTES but huge in join
@@ -389,8 +418,13 @@ object JaccardJoin {
 
   /**
    * The threshold-INDEPENDENT state of [[selfJoinDeduped]]'s pipeline:
-   * distinct values + multiplicities, the ranked value-level token table, and
-   * the per-value position arrays. Document frequency and rarest-first
+   *   - `vals`: (value, w, vid) — distinct values, multiplicities, md5 surrogate;
+   *   - `vtkdf`: (id, len, rank, df, vdf, pos) — one row per value-level token
+   *     row, keyed by `id` = vid, the token replaced by its dense rank
+   *     ([[rankTokens]]);
+   *   - `varr`: (id, arr, len) — each value's ascending rank array.
+   *
+   * Document frequency and rarest-first
    * position depend only on (table, joinAttr, tokenizer) — never on the
    * threshold — so a threshold sweep (the reference's precision/recall sweep,
    * test.ipynb cells 41-74) can tokenize ONCE and run every threshold against
@@ -450,10 +484,8 @@ object JaccardJoin {
       .join(vals.select(col("vid").as("id"), col("w")), "id")
       .groupBy("token").agg(sum("w").as("df"), count(lit(1)).as("vdf"))
 
-    val w = Window.partitionBy("id").orderBy("df", "token")
-    val vtkdf = leaf(vtokens.join(dfreq, "token")
-      .select(col("id"), col("len"), col("token"), col("df"), col("vdf"),
-        row_number().over(w).cast("long").as("pos")), "id")
+    // the ranks are computed inside this frame's materialization, once
+    val vtkdf = leaf(rankPositions(vtokens, rankTokens(dfreq), "df", "vdf"), "id")
 
     // position arrays persist too: verification scans this frame TWICE per
     // action (L and R side of the verify join) and it is the frame AQE
@@ -475,7 +507,7 @@ object JaccardJoin {
     * applies to each record pair. On top of the shared salt, the self-join
     * adds a LENGTH-BAND equi key: with lengths confined to a factor-(1/t)
     * window, band(len) = floor(ln(len)/ln(1/t)) lets the join hash on
-    * (token, band, salt) instead of (token, salt). The probing side explodes
+    * (rank, band, salt) instead of (rank, salt). The probing side explodes
     * to every band its admissible partner lengths [floor(len*t), ceil(len/t)]
     * can occupy (floor/ceil make the FP boundaries conservative; the exact
     * filters stay as residuals). The indexing side has ONE band, so no pair
@@ -594,10 +626,24 @@ object JaccardJoin {
     * from the PERSISTED `varr` frame (one row per value by construction — no
     * `distinct` subtree, unlike the r15 form which re-aggregated it from the
     * token table). Null values drop identically in both forms (md5(null) is
-    * null and an inner-join null key never matches, exactly as the old inner
-    * join on `value`); a value with zero tokens has no `varr` row and can
-    * never appear in `vm` (no candidate rows), so the inner length join
-    * drops nothing observable. Gate expression unchanged.
+    * null and a null join key never matches, exactly as the old inner join
+    * on `value`); a value with zero tokens has no `varr` row and can never
+    * appear in `vm` (no candidate rows), so the length join drops nothing
+    * observable. Gate expression unchanged.
+    *
+    * The length join is a LEFT OUTER join from `varr`: every `varr` value is
+    * one of the table's values, so it returns the inner join's rows (and a
+    * row without a record has a null `lid_str`, which the gate drops), but
+    * the planner may build only on the records' side. The expansion then
+    * keeps `varr`'s `id` partitioning whatever the two sides' statistics
+    * say: as an inner join, a `varr` smaller than the records' scan
+    * estimate became the broadcast side, and each threshold paid two extra
+    * record exchanges (measured on the benchmark's profiles once `varr`
+    * held rank arrays instead of string arrays). Against the inner form on
+    * the sf0.1 self-join anchors (4 cores, min of 5 warm runs, medians of
+    * rotating legs) it read jac_self_part_ws_t03 5.63 vs 5.24 s over 11
+    * rounds, inside the 1.3 s spread between quartiles, and
+    * jac_self_docs_ws_t05/t09 22.9/4.1 vs 23.2/4.4 s over 5.
     *
     * ⚠ Round-16 note: a variant carrying `llen`/`rlen` out of [[verifySuffix]]
     * and computing the gate inline (no recs-side length at all) measured
@@ -608,10 +654,9 @@ object JaccardJoin {
   private def expandSelf(
       table: DataFrame, keyAttr: String, joinAttr: String, varr: DataFrame,
       vm: DataFrame, lOutPrefix: String, rOutPrefix: String): DataFrame = {
-    val vlens = varr.select(col("id").as("vid"), col("len"))
-    val recs = table.select(col(keyAttr).as("rid"),
-        unhex(md5(col(joinAttr))).as("vid"))
-      .join(vlens, "vid")
+    val recs = varr.select(col("id").as("vid"), col("len"))
+      .join(table.select(col(keyAttr).as("rid"), unhex(md5(col(joinAttr))).as("vid")),
+        Seq("vid"), "left_outer")
       .select(col("rid"), col("vid"),
         concat(col("len").cast("string"), lit("_"), col("rid").cast("string")).as("lid_str"))
     vm.join(recs.select(col("vid").as("idxId"), col("rid").as("lid"),
@@ -629,9 +674,11 @@ object JaccardJoin {
   /**
    * Filtered R×S join. Mirrors the reference's two driver-side adaptive decisions:
    *
-   *   1. widow placeholder = |L| * |R| + 1 — the max possible df product + 1, so
-   *      tokens appearing on only one side sort last and never become prefix
-   *      witnesses (jaccard_join.py:266-268,292-294);
+   *   1. widow placeholder = |L| * |R| + 1 — the max possible df product + 1
+   *      when each record emits a token at most once, so tokens appearing on
+   *      only one side sort last and never become prefix witnesses
+   *      (jaccard_join.py:266-268,292-294; bag-mode products can exceed it,
+   *      see [[rsRanks]]);
    *   2. index-side selection — the side with MORE widow prefix rows becomes the
    *      indexing side R with the tighter 2t/(1+t) prefix (jaccard_join.py:341-353).
    *
@@ -672,28 +719,10 @@ object JaccardJoin {
     val rCount = rTable.count()
     val widowPlaceholder = lCount * rCount + 1
 
-    val lTokens = tokenizer.tokenize(lTable, lKey, lJoin).persistTracked
-    val rTokens = tokenizer.tokenize(rTable, rKey, rJoin).persistTracked
-
-    // J8/J9: full-outer df merge with widow placeholder (jaccard_join.py:270-295)
-    val lDf = lTokens.groupBy("token").agg(count(lit(1)).as("l_df"))
-    val rDf = rTokens.groupBy("token").agg(count(lit(1)).as("r_df"))
-    // persisted: consumed by BOTH sides' tkdf builds (would otherwise recompute
-    // the two groupBys + full-outer merge twice)
-    val dfreq = lDf.join(rDf, Seq("token"), "full_outer")
-      .select(col("token"),
-        coalesce(col("l_df") * col("r_df"), lit(widowPlaceholder)).as("df"))
-      .persistTracked
-
-    def tkdfOf(tokens: DataFrame): DataFrame = {
-      val w = Window.partitionBy("id").orderBy("df", "token")
-      tokens.join(dfreq, "token")
-        .select(col("id"), col("len"), col("token"), col("df"),
-          row_number().over(w).cast("long").as("pos"))
-        .persistTracked
-    }
-    val lTkdf = tkdfOf(lTokens)
-    val rTkdf = tkdfOf(rTokens)
+    val (lTokens, rTokens, ranks) = rsRanks(lTable, lKey, lJoin, rTable, rKey, rJoin,
+      tokenizer, widowPlaceholder)
+    val lTkdf = rankPositions(lTokens, ranks, "df").persistTracked
+    val rTkdf = rankPositions(rTokens, ranks, "df").persistTracked
 
     // J12: widow-count side choice over both indexing prefixes, in one Spark
     // job (the reference issues two scalar queries, jaccard_join.py:341-353;
@@ -733,12 +762,38 @@ object JaccardJoin {
     prefixFilterJoin(
         if (exactRecall) probingPrefix(idxTkdf, threshold) else indexingPrefix(idxTkdf, threshold),
         probingPrefix(prbTkdf, threshold), posArrays(idxTkdf), posArrays(prbTkdf),
-        Seq(lTokens, rTokens, dfreq, lTkdf, rTkdf)
+        Seq(lTokens, rTokens, ranks, lTkdf, rTkdf)
           .flatMap(org.apache.spark.sql.GraftCheckpointBridge.buildShuffles).toSet,
         Nil, residual, saltWidth, threshold, saltBuckets, maxSaltBuckets, passes)
       .select(
         col("idxId").as(idxPrefixName + lKey),
         col("prbId").as(prbPrefixName + rKey))
+  }
+
+  /** R×S token tables and ranks: both sides' token rows (persisted) and the
+    * ranked df table (persisted: both sides' `tkdf` builds read it). J8/J9:
+    * the full-outer df merge with the widow placeholder
+    * (jaccard_join.py:270-295) — a token on one side only takes the
+    * placeholder. When each record emits a token at most once
+    * (`emitsDistinctTokens`) every df product is at most |L|·|R|, so widow
+    * tokens rank after every shared token. Bag mode and the delimiter
+    * tokenizers' distinct-before-lowercase quirk count token rows, not
+    * records, so a shared token's product can pass the placeholder and rank
+    * after the widows; the ranks still follow (df, token), as the
+    * reference's order does. */
+  private[graft] def rsRanks(
+      lTable: DataFrame, lKey: String, lJoin: String,
+      rTable: DataFrame, rKey: String, rJoin: String,
+      tokenizer: Tokenizer, widowPlaceholder: Long): (DataFrame, DataFrame, DataFrame) = {
+    val lTokens = tokenizer.tokenize(lTable, lKey, lJoin).persistTracked
+    val rTokens = tokenizer.tokenize(rTable, rKey, rJoin).persistTracked
+    val lDf = lTokens.groupBy("token").agg(count(lit(1)).as("l_df"))
+    val rDf = rTokens.groupBy("token").agg(count(lit(1)).as("r_df"))
+    val ranks = rankTokens(lDf.join(rDf, Seq("token"), "full_outer")
+      .select(col("token"),
+        coalesce(col("l_df") * col("r_df"), lit(widowPlaceholder)).as("df")))
+      .persistTracked
+    (lTokens, rTokens, ranks)
   }
 
   /** J15 (R×S): brute-force oracle (reference jaccard_join.py:407-420). */

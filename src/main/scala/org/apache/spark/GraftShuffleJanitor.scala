@@ -112,8 +112,9 @@ object GraftShuffleJanitor {
     * data lives on as cached blocks (the bounded-footprint joins' prep
     * shuffles: ~25 GB retained for the whole sf10 run while every pass and
     * the expansion read only the cached frames). Unlike [[remove]], the
-    * tracker entry survives (`unregisterAllMapAndMergeOutput` clears the map
-    * outputs only), so a cache-evicted recompute that reaches the shuffle
+    * tracker entry survives with no map outputs (re-registered empty when
+    * the block manager's removal unregistered it), so a cache-evicted
+    * recompute that reaches the shuffle
     * finds it registered-but-empty and the scheduler resubmits the parent
     * map stage, regenerating the files — the standard missing-output path,
     * not a crash. The trade is scratch now for a possible re-build later —
@@ -125,9 +126,14 @@ object GraftShuffleJanitor {
     }
     val present = ids intersect tracker.shuffleStatuses.keySet.toSet
     present.foreach { id =>
+      val status = tracker.shuffleStatuses(id)
+      val (maps, reduces) = (status.mapStatuses.length, status.mergeStatuses.length)
       tracker.unregisterAllMapAndMergeOutput(id)
       sc.env.shuffleManager.unregisterShuffle(id)
       sc.env.blockManager.master.removeShuffle(id, blocking = true)
+      // `removeShuffle` also reaches the driver's own storage endpoint, which
+      // unregisters the shuffle from this tracker: register it again, empty
+      if (!tracker.containsShuffle(id)) tracker.registerShuffle(id, maps, reduces)
     }
     System.err.println(s"[janitor] released files of ${present.size} retained shuffles")
   }

@@ -192,6 +192,17 @@ object GraftCheckpointBridge {
     (classic.Dataset.ofRows(ds.sparkSession, leaf), shuffleIds(physical))
   }
 
+  /** `df` sorted by `order`, with each row's 0-based index in that order
+    * added as the LONG column `name` (Spark's `AttachDistributedSequence`:
+    * a range-partitioned sort, then `zipWithIndex` over its partitions). When
+    * `order` is a total order on the rows, the index is a deterministic
+    * function of the data: it counts the rows that sort before, whatever the
+    * sampled range boundaries. No step moves the rows into one partition. The
+    * index stays in the logical plan, so identical inputs give identical
+    * plans and hit the same cache entries. */
+  def withSortedIndex(df: DataFrame, name: String, order: Column*): DataFrame =
+    df.orderBy(order: _*).asInstanceOf[classic.Dataset[Row]].withSequenceColumn(name)
+
   /** Ids of the shuffles that built a persisted frame's cache, materializing
     * it first when it is not yet. */
   def buildShuffles(df: DataFrame): Set[Int] =

@@ -114,7 +114,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("bag-token R×S join plans no cartesian or nested-loop join") {
     // the r15 combination: multiset tokens through the widow/df-product
-    // R×S path — the candidate join must stay an equi-join on (token, salt)
+    // R×S path — the candidate join must stay an equi-join on (rank, salt)
     // exactly as the set form does; bag duplicates change row counts, not
     // the join shape
     val l = Seq(1L -> "alpha beta alpha gamma", 2L -> "alpha beta delta").toDF("id", "txt")

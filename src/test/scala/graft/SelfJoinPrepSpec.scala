@@ -134,10 +134,13 @@ class SelfJoinPrepSpec extends SparkSpec {
     assert(prep.buildShuffles.nonEmpty)
     assert(prep.buildShuffles.subsetOf(GraftShuffleJanitor.shuffleIds(sc)))
     val single = pairSet(JaccardJoin.selfJoinDedupedPrepared(prep, 0.3))
-    val multi = pairSet(JaccardJoin.selfJoinDedupedPrepared(prep, 0.3, passes = 3))
-    assert(multi === single)
-    // no pass removed a prep shuffle (their files are released, their
-    // registrations kept), so the prep stays usable
+    val multiPass = JaccardJoin.selfJoinDedupedPrepared(prep, 0.3, passes = 3)
+    // the passes ran inside the call, and no pass removed a prep shuffle:
+    // their files are released, their registrations kept, before any later
+    // job could register them again
+    assert(prep.buildShuffles.subsetOf(GraftShuffleJanitor.shuffleIds(sc)))
+    assert(pairSet(multiPass) === single)
+    // so the prep stays usable
     assert(prep.buildShuffles.subsetOf(GraftShuffleJanitor.shuffleIds(sc)))
     assert(pairSet(JaccardJoin.selfJoinDedupedPrepared(prep, 0.3)) === single)
     assert(single.nonEmpty)

@@ -69,6 +69,42 @@ class SuffixOverlapSpec extends SparkSpec {
     assert(k.overlap(arr(5L, 5L, 5L), arr(5L, 5L)) === 6L) // 3x2
   }
 
+  test("sorted-suffix kernel == string kernel on random sorted bags and starts") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String.fromString
+    val rnd = new scala.util.Random(47)
+    // empty arrays, starts past the end, and starts inside duplicate runs
+    val rows = Seq.fill(600) {
+      val l = Seq.fill(rnd.nextInt(12))(rnd.nextInt(5).toLong).sorted
+      val r = Seq.fill(rnd.nextInt(12))(rnd.nextInt(5).toLong).sorted
+      (l, r, 1 + rnd.nextInt(l.size + 2), 1 + rnd.nextInt(r.size + 2))
+    } ++ Seq(
+      (Seq(1L, 2L, 2L, 2L, 3L), Seq(2L, 2L), 3, 1), // start cuts a run: 2 x 2
+      (Seq(2L, 2L, 2L), Seq(2L, 2L, 2L), 2, 3), // 2 x 1
+      (Seq.empty[Long], Seq(1L), 1, 1),
+      (Seq(1L), Seq(1L), 2, 1)) // past the end
+    def longs(xs: Seq[Long]) = new GenericArrayData(xs.toArray[Any])
+    def strs(xs: Seq[Long]) = new GenericArrayData(xs.map(x => fromString(x.toString)).toArray[Any])
+    for ((l, r, ls, rs) <- rows)
+      assert(graft.expressions.SortedOverlapKernels.overlap(longs(l), longs(r), ls, rs) ===
+        graft.expressions.SuffixOverlapKernels.overlap(strs(l), strs(r), ls, rs), (l, r, ls, rs))
+    assert(graft.expressions.SortedOverlapKernels.overlap(
+      longs(Seq(1L, 2L, 2L, 2L, 3L)), longs(Seq(2L, 2L)), 3, 1) === 4L)
+
+    // the same through both expressions, codegen'd over unsafe arrays
+    def expr(c: String) = org.apache.spark.sql.GraftExpressionBridge.expression(col(c))
+    val df = rows.toDF("larr", "rarr", "ls", "rs")
+      .withColumn("lstr", col("larr").cast("array<string>"))
+      .withColumn("rstr", col("rarr").cast("array<string>"))
+    val sorted = org.apache.spark.sql.GraftExpressionBridge.column(
+      graft.expressions.SortedOverlapCount(expr("larr"), expr("rarr"), expr("ls"), expr("rs")))
+    val string = org.apache.spark.sql.GraftExpressionBridge.column(
+      graft.expressions.SuffixOverlapCount(expr("lstr"), expr("rstr"), expr("ls"), expr("rs")))
+    val diff = df.select(sorted.as("n"), string.as("o"), col("larr"), col("rarr"), col("ls"), col("rs"))
+      .where(col("n") =!= col("o")).collect()
+    assert(diff.isEmpty, s"first divergence: ${diff.headOption}")
+  }
+
   test("graft_suffix_overlap registers as a SQL function") {
     graft.Api.registerSqlFunctions(spark)
     val out = spark.sql(
