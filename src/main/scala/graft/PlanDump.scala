@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan-dump harness for the optimization rounds:
  * `runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]`
@@ -10,8 +8,8 @@ import org.apache.spark.sql.SparkSession
  * `<outDir>/<query>_<suffix>.txt` (e.g. plans/r15/jac_self_docs_ws_t05_before.txt)
  * WITHOUT executing the query — the optimizer-final (pre-AQE) physical plan,
  * which is what Exchange counts / join strategies / PushedFilters are read
- * from. Session configs mirror graft.Bench exactly (including
- * SPARK_GRAFT_SHUFFLE_PARTITIONS) so dumped plans are the benched plans.
+ * from. It runs in the same [[LocalSession]] as graft.Bench, so dumped plans
+ * are the benched plans.
  * With no query list argument, dumps EVERY registered query.
  */
 object PlanDump {
@@ -22,24 +20,7 @@ object PlanDump {
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("plan-dump")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", true)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", true)
-      .config("spark.sql.adaptive.skewJoin.enabled", true)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.sql.codegen.maxFields", 256)
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Api.quietBoundedWindowLogs()
+    val spark = LocalSession("plan-dump")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

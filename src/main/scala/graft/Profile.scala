@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Plan/profiling harness: `runMain graft.Profile <queryName> [sfDir]`.
  *
@@ -13,39 +11,15 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: Profile <queryName> [sfDir]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     new java.io.File("/tmp/spark-events").mkdirs()
     // extra session configs for experiments: SPARK_GRAFT_CONF="k=v;k=v"
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(';')
       .filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
       }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"profile-$name")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", true)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", true)
-      .config("spark.sql.adaptive.skewJoin.enabled", true)
-      .config("spark.eventLog.enabled", true)
-      .config("spark.eventLog.dir", "/tmp/spark-events")
-      // match Bench's session (see there): value-side broadcast for the
-      // join pipelines, so profiled plans are the benched plans
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // keep the 128-column MinHash aggregate inside whole-stage codegen
-      .config("spark.sql.codegen.maxFields", 256)
-      // the events table stores TIMESTAMP(NANOS) parquet - read as epoch-nano longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      // a single-JVM local run has no real executor liveness to police, and
-      // multi-minute host IO stalls (observed: 7-min freeze -> heartbeat
-      // timeout killed the context mid-bench) must not abort the run
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.ui.enabled", false)
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Api.quietBoundedWindowLogs()
+    val spark = LocalSession(s"profile-$name",
+      Seq("spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> "/tmp/spark-events") ++
+        extraConf: _*)
 
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
     // defensive parse: malformed / non-positive values fall back to 1 run

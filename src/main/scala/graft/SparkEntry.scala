@@ -208,17 +208,6 @@ object SparkEntry {
     // DuckDB running the same bag-token pipeline
     "jac_self_part_wsbag_t07" -> ((s, dir) =>
       JaccardJoin.selfJoinDeduped(tbl(s, dir, "part"), "p_partkey", "p_name", wsBag, 0.7)),
-    // CANDIDATE-JOIN-SHAPED calibration probe (r14 verdict #1): the full
-    // df→rank→prefix→candidate→verify pipeline over a fixed 1/8 slice of
-    // documents — small enough to run twice per bench attempt, same plan
-    // shape as the joins that dominate the headline (the old trio tracked
-    // shuffle/compute/scan but not this, which is why its ratio diverged
-    // from what the candidate joins experienced). docs-only, so it runs on
-    // every profile incl. sf1/sf10 (no part table needed).
-    "calib_jac_docs_slice" -> ((s, dir) =>
-      JaccardJoin.selfJoinDeduped(
-        tbl(s, dir, "documents").where(col("doc_id") % 8 === 0),
-        "doc_id", "text", ws, 0.5)),
 
     // J2/J15: brute-force oracle joins
     "jac_bf_self_part_ws_t05" -> ((s, dir) =>
@@ -1308,9 +1297,6 @@ GROUP BY c_nationkey""")
     "jac_self_part_ws_t03" -> DuckSql.selfJoin(partWs, "p_partkey", 0.3),
     "jac_self_docs_ws_t05" -> DuckSql.selfJoin(docsWs, "doc_id", 0.5),
     "jac_self_part_wsbag_t07" -> DuckSql.selfJoin(partWsBag, "p_partkey", 0.7),
-    "calib_jac_docs_slice" -> DuckSql.selfJoin(
-      DuckSql.delimTokens("(SELECT * FROM documents WHERE doc_id % 8 = 0)",
-        "doc_id", "text", DuckSql.wsClass), "doc_id", 0.5),
     "jac_bf_self_part_ws_t05" -> DuckSql.bruteSelf(partWs, "p_partkey", 0.5),
     // lIsIndexing pinned to the sf0.01 data: widow prefix counts at t=0.3 are
     // l=2813 vs r=110, so `l_widows > r_widows` holds and customer indexes.

@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // value-side broadcast for the join pipelines (see Bench.scala: AQE
-      // converts the verify/expansion SMJs to broadcast when the runtime
-      // size allows; 105.8 -> 36.7 s on the stress t=0.9 join)
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // keep the 128-column MinHash aggregate inside whole-stage codegen
-      .config("spark.sql.codegen.maxFields", 256)
-      // the events table stores TIMESTAMP(NANOS) parquet - read as epoch-nano longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      // a single-JVM local run has no real executor liveness to police, and
-      // multi-minute host IO stalls (observed: 7-min freeze -> heartbeat
-      // timeout killed the context mid-bench) must not abort the run
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "1200s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Api.quietBoundedWindowLogs()
+    val spark = LocalSession("verify")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for fast iteration on one query; the
     // dump lands in the same outDir, so a subsequent check.py --skip-verify

@@ -12,8 +12,8 @@ Per-query timeout: DUCK_BENCH_TIMEOUT_SEC (default 300) — a query that blows
 it records DNF (DuckDB has no interrupt here; the timeout is enforced by a
 fresh subprocess per query so a DNF cannot wedge the sweep).
 
-Run this in the SAME healthy host window as the Spark bench (gate on
-tools/hosthealth.py) or the comparison is window-confounded.
+Run this in the same host window as the Spark bench, right before or after
+it, or the comparison is window-confounded.
 """
 import json
 import os

@@ -6,23 +6,18 @@
 # ann_pq_ivf_trained_refined_topk (ANN/PQ), jac_rs_cust_supp_q3_t03 (R×S
 # jaccard — needs the sf1 customer/supplier fixtures from
 # tools/make_sf1_tpch.py), mm_wav_keep_docs (multimodal + generic Hamming
-# lifecycle), dedup_simhash_docs (SimHash banding). Calibration QUARTET
-# (trio + calib_jac_docs_slice since r15) forced in-session
-# (SPARK_GRAFT_CALIBRATE=1), normalized by the pinned sf1 quartet epoch
-# (Bench.calibrationRefSec — r15 re-pin, chained to the round-11 trio pin
-# via the per-probe times; see BENCH_NOTES round 15).
+# lifecycle), dedup_simhash_docs (SimHash banding).
 # Scale regressions (e.g. the sf1 broadcast->SMJ shift at the 64 MB
 # value-table threshold) become a tracked per-round number instead of an
-# archaeology exercise: record the calibrated walls in BENCH_NOTES'
-# close-out next to the previous round's.
+# archaeology exercise. Walls from two different windows are not comparable
+# on this host: time both builds in one window, interleaved.
 #
 # Usage: tools/sf1_gate.sh            (full artifact -> /tmp/sf1_gate.json)
 # Knobs: SPARK_GRAFT_BENCH_RUNS (default 3 = warm best-of-3),
-#        SPARK_GRAFT_PROBE_WAIT_SEC (default 0 - calibration normalizes the
-#        window; set >0 to gate on a healthy one), SPARK_GRAFT_BENCH_OUT.
+#        SPARK_GRAFT_BENCH_OUT.
 #
-# Requires data/sf1/{documents,embeddings}.parquet (tracked fixtures); the
-# flagship five and the calibration trio touch nothing else.
+# Requires data/sf1/{documents,embeddings}.parquet (tracked fixtures) and
+# the customer/supplier fixtures checked below.
 set -eu
 cd "$(dirname "$0")/.."
 test -f data/sf1/documents.parquet || { echo "data/sf1/documents.parquet missing" >&2; exit 1; }
@@ -46,13 +41,10 @@ ADD_OPENS="--add-opens java.base/java.io=ALL-UNNAMED \
 
 exec env \
   SPARK_GRAFT_SF_DIR="$PWD/data/sf1" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_SHUFFLE_PARTITIONS="${SPARK_GRAFT_SHUFFLE_PARTITIONS:-64}" \
   SPARK_GRAFT_QUERIES=jac_self_docs_ws_t05,jac_self_docs_ws_t09,dedup_minhash_docs,dedup_cluster_docs,pipeline_curate_docs,ann_pq_ivf_trained_refined_topk,jac_rs_cust_supp_q3_t03,mm_wav_keep_docs,dedup_simhash_docs \
-  SPARK_GRAFT_CALIBRATE=1 \
   SPARK_GRAFT_RECALL=0 \
   SPARK_GRAFT_BENCH_RUNS="${SPARK_GRAFT_BENCH_RUNS:-3}" \
-  SPARK_GRAFT_PROBE_WAIT_SEC="${SPARK_GRAFT_PROBE_WAIT_SEC:-0}" \
   SPARK_GRAFT_BENCH_OUT="${SPARK_GRAFT_BENCH_OUT:-/tmp/sf1_gate.json}" \
   java $ADD_OPENS -Xmx64g -Dspark.ui.enabled=false \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench
