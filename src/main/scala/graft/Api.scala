@@ -125,7 +125,18 @@ object Api {
     * re-collecting such a result after clearCache() throws
     * FileNotFoundException (or, if `spark.sql.files.ignoreMissingFiles` is
     * enabled session-wide, silently returns empty slices). Consume
-    * passes-mode results fully before calling this. */
+    * passes-mode results fully before calling this.
+    *
+    * The same holds for results that read a tracked lineage-cut leaf: the
+    * final labels of [[graft.operators.Dedup.clusterIds]], and so every
+    * operator built on it ([[graft.operators.Dedup.clusterKeepIds]], the
+    * incremental keep-sets, the curation pipeline, the ANN admission
+    * keep-set). In the default local mode the leaf is a `localCheckpoint`;
+    * this call drops its blocks, and the truncated lineage has nothing to
+    * recompute from, so re-collecting such a result throws a SparkException
+    * ("Checkpoint block ... not found"; CheckpointsSpec pins it). Under
+    * `spark.graft.checkpoint.reliable=true` the leaf reads its checkpoint
+    * files back and the result stays valid. */
   def clearCache(): Int = PersistTracker.unpersistAll()
 
   /** Raise WindowExec's logger to ERROR. Its "No Partition Defined" warning

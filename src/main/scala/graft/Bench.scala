@@ -8,20 +8,21 @@ import scala.util.control.NonFatal
  * Benchmark main. Runs the headline queries on SPARK_GRAFT_SF_DIR in one
  * [[LocalSession]] and prints ONE JSON line (`metric`, `value`, `unit`,
  * `queries`, `failed`, `artifact`, `sf`); the full artifact (per-query floors
- * with their n, the recall sidecar, the session's CPU and shuffle-partition
- * counts) goes to SPARK_GRAFT_BENCH_OUT (default `BENCH_FULL.json`).
- * Per-query time is the best of SPARK_GRAFT_BENCH_RUNS warm runs (default 5,
- * 1 on the stress corpus): the first run pays JIT/codegen warm-up, and the
- * reference's notebook timings are likewise warm averages over n runs
- * (BASELINE.md). Exits 1 when a query fails or a SPARK_GRAFT_QUERIES name is
- * not registered. Compare two builds with perfbench's interleaved legs, not
- * with two Bench artifacts.
+ * with their n, cold first run and every run time, the recall sidecar, the
+ * session's CPU and shuffle-partition counts) goes to SPARK_GRAFT_BENCH_OUT
+ * (default `BENCH_FULL.json`). Per-query time is the best of
+ * SPARK_GRAFT_BENCH_RUNS runs (default 5, 1 on the stress corpus): the first
+ * run pays persistence and JIT/codegen warm-up, and the reference's notebook
+ * timings are likewise warm averages over n runs (BASELINE.md). Exits 1
+ * when a query fails or a SPARK_GRAFT_QUERIES name is not registered.
+ * Compare two builds with perfbench's interleaved legs, not with two Bench
+ * artifacts.
  */
 object Bench {
 
   /** Headline set: the workloads with BASELINE.md counterparts plus the
     * scale-path operators. Everything else is correctness-only surface. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "jac_self_part_ws_t05",     // ≈ profiles 10K/50K whitespace t=0.5 self-join
     "jac_self_part_q3_t05",     // ≈ profiles 10K QGrams t-sweep
     "jac_bf_self_part_ws_t05",  // brute-force ratio (reference wins ~50x at 5K+)
@@ -75,10 +76,8 @@ object Bench {
     "hybrid_topk_docs",
     // the production ANN admission operator (read-only form)
     "ann_ingest_keep_embs",
-    // round-10 additions — real-codec image decode throughput (PNG render +
-    // ImageIO decode per row) and BPE model-token counting (merge training
-    // paid by the FIRST run via the per-dir memo; warm runs time encode)
-    "mm_decode_docs",
+    // round-10 addition — BPE model-token counting (merge training paid by
+    // the FIRST run via the per-dir memo; warm runs time encode)
     "bpe_token_counts_docs",
     // PQ ADC search over the 32x-compressed codes (codebooks + encode
     // recomputed in-plan — still sub-second at sf0.1)
@@ -91,23 +90,14 @@ object Bench {
     "ann_pq_ivf_refined_topk",
     // round-12: trained-codebook IVF-PQ (index build paid by the FIRST run
     // via buildTableOnce — warm runs time the probe, same convention as the
-    // sampled-codebook entry), the int8 dequantized-domain exact search
-    // (the 4× bandwidth trade), and perceptual dHash throughput (PNG render
-    // + decode + 9×8 resample per row)
+    // sampled-codebook entry) and the int8 dequantized-domain exact search
+    // (the 4× bandwidth trade)
     "ann_pq_ivf_trained_topk",
     "ann_topk_int8",
-    "mm_dhash_docs",
     // round-13: the production PQ composition — trained codebooks +
     // IVFADC+R exact re-rank against the durable indexes (build paid by the
     // FIRST run via buildTableOnce; warm runs time the probe + refine)
     "ann_pq_ivf_trained_refined_topk",
-    // round-14: the heaviest video-family op — per-frame hashes through the
-    // generic Hamming banding (decode + banded join + 25M-pair output at
-    // sf0.1) — so the new modality has a tracked per-round number
-    "mm_y4m_seg_neardup_docs",
-    // round-15: the compressed-codec path — real JPEG encode+decode per row
-    // through the JDK codec into dHash; tracks the codec seam's throughput
-    "mm_jpeg_dhash_docs",
   )
 
   /** Stress profile (SPARK_GRAFT_SF_DIR containing "stress"): the 8×
@@ -116,7 +106,7 @@ object Bench {
     * Single-run by default — the t=0.9 self-join alone is ~100 s class; pair
     * with SPARK_GRAFT_SHUFFLE_PARTITIONS=256 (~128 MB per shuffle partition,
     * zero spill — the A/B in SCALE.md). */
-  private val stressHeadline = Seq(
+  private[graft] val stressHeadline = Seq(
     "jac_self_docs_ws_t09",
     "dedup_minhash_docs",
     "dedup_minhash_rs_docs",
@@ -165,9 +155,11 @@ object Bench {
 
   /** Times each query best-of-`runs` on `spark`, writes the full artifact to
     * `outPath`, and returns the one stdout JSON line with the names of the
-    * queries that threw. A failed query is listed under `"failed"` and left
-    * out of `queries` and of the total `value`. `recall` is evaluated after
-    * the timed loop. Leaves `spark` running. */
+    * queries that threw. Each `queries_floor` entry holds `sec` (the best
+    * run), `n`, `first` (run 1, the cold number) and `runs` (every run time,
+    * in order). A failed query is listed under `"failed"` and left out of
+    * `queries` and of the total `value`. `recall` is evaluated after the
+    * timed loop. Leaves `spark` running. */
   private[graft] def run(spark: SparkSession,
                          queries: Seq[(String, (SparkSession, String) => DataFrame)],
                          runs: Int, sfDir: String, outPath: String,
@@ -188,25 +180,27 @@ object Bench {
     // reference's BASELINE numbers are likewise warm averages over n runs
     val timed = queries.map { case (name, fn) =>
       System.err.println(s"[bench] running $name")
-      val best =
+      val times =
         try {
-          val times = Seq.fill(runs)(timeOnce(fn))
-          System.err.println(f"[bench] $name%-26s ${times.min}%.3f s" +
-            times.map(r => f"$r%.2f").mkString("  (runs: ", " ", ")"))
-          times.minOption
+          val ts = Seq.fill(runs)(timeOnce(fn))
+          System.err.println(f"[bench] $name%-26s ${ts.min}%.3f s" +
+            ts.map(r => f"$r%.2f").mkString("  (runs: ", " ", ")"))
+          Some(ts)
         } catch {
           case NonFatal(t) =>
             System.err.println(s"[bench] $name failed: $t")
             None
         } finally Api.clearCache() // drop graft-persisted intermediates between queries
-      name -> best
+      name -> times
     }
-    val ok = timed.collect { case (name, Some(t)) => name -> t }
+    val ok = timed.collect { case (name, Some(ts)) => name -> ts }
     val failed = timed.collect { case (name, None) => name }
-    val total = f"${ok.map(_._2).sum}%.3f"
-    val qs = ok.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val floors = ok.map { case (k, v) => "\"" + k + "\":" + f"""{"sec":$v%.3f,"n":$runs}""" }
-      .mkString("{", ",", "}")
+    val total = f"${ok.map(_._2.min).sum}%.3f"
+    val qs = ok.map { case (k, ts) => "\"" + k + "\":" + f"${ts.min}%.3f" }.mkString("{", ",", "}")
+    val floors = ok.map { case (k, ts) =>
+      val all = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
+      "\"" + k + "\":" + f"""{"sec":${ts.min}%.3f,"n":$runs,"first":${ts.head}%.3f,"runs":$all}"""
+    }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val session = s""""session":{"cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")}}"""
@@ -290,12 +284,11 @@ object Bench {
 
   /** Approximate-path recall vs the exact twins, emitted as a `"recall"` key
     * of the full artifact. Skipped when the profile's tables are missing (stress corpus
-    * has no embeddings) or SPARK_GRAFT_RECALL=0, and on SPARK_GRAFT_QUERIES
-    * runs unless SPARK_GRAFT_RECALL_ONLY=1; never fails the bench. */
+    * has no embeddings), and on SPARK_GRAFT_QUERIES runs unless
+    * SPARK_GRAFT_RECALL_ONLY=1; never fails the bench. */
   private def recallField(spark: SparkSession, sfDir: String): String = {
     import graft.operators.{Dedup, JaccardJoin, Similarity, WhitespaceTokenizer}
     import org.apache.spark.sql.functions.col
-    if (sys.env.get("SPARK_GRAFT_RECALL").contains("0")) return ""
     if (!new java.io.File(s"$sfDir/embeddings.parquet").exists()) return ""
     try {
       def timed[A](label: String)(body: => A): A = {

@@ -190,7 +190,7 @@ FROM (
   FROM (${evalCountsNorm(gtSql, sjSql)}))"""
 
   // -------------------------------------------------------------------------
-  // Text-analysis / dedup / multimodal / ANN oracles (graft.operators.*)
+  // Text-analysis / dedup / ANN oracles (graft.operators.*)
   // -------------------------------------------------------------------------
 
   /** Whitespace bag tokens as a list expression over `$text` (case kept). */
@@ -586,14 +586,6 @@ SELECT lid, rid, hamming FROM (
 WHERE hamming <= $maxHamming"""
   }
 
-  /** Mirrors Multimodal.withPayload + extractMeta (payload = utf8 bytes of text). */
-  def mmMeta(table: String, key: String, text: String): String =
-    s"""SELECT $key AS id,
-  CAST(octet_length(encode($text)) AS BIGINT) AS n_bytes,
-  lower(hex(encode(substring($text, 1, 4)))) AS magic,
-  md5($text) AS content_md5
-FROM $table"""
-
   /** Mirrors Bpe.tokenCounts with ZERO merges — character-level
     * tokenization, so the model-token count per document is exactly its
     * non-whitespace character count (the end-of-word marker rides the last
@@ -687,497 +679,6 @@ SELECT id, CAST(k AS BIGINT) AS chunk_idx,
   substring(hx, k*$stride*2+1, ${2 * maxTokens}) AS chunk_hex
 FROM (SELECT id, hx, unnest(generate_series(0, nwin - 1)) AS k FROM wins)"""
   }
-
-  /** The synthetic-PNG gradient pixel as SQL printf channels: the EXPECTED
-    * output of Multimodal.decodeImage over Multimodal.synthPng, recomputed
-    * in closed form from the id — the Spark side must round-trip real PNG
-    * bytes through javax.imageio to produce the same witnesses. */
-  def mmDecode(table: String, key: String): String =
-    s"""SELECT id, 'png' AS format, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  printf('%02x%02x%02x', CAST(id % 256 AS INT), CAST(id % 256 AS INT),
-         CAST(id % 256 AS INT)) AS px00,
-  printf('%02x%02x%02x', CAST((id + w - 1) % 256 AS INT), CAST((id + h - 1) % 256 AS INT),
-         CAST((id + w + h - 2) % 256 AS INT)) AS pxc,
-  CAST((SELECT SUM((id+x)%256 + (id+y)%256 + (id+x+y)%256)
-          FROM range(0,16) rx(x), range(0,13) ry(y) WHERE x < w AND y < h)
-       AS BIGINT) AS px_sum
-FROM (SELECT $key AS id, 4 + $key % 13 AS w, 3 + $key % 11 AS h FROM $table)"""
-
-  /** Expected decode of the nearest-neighbor resize of the synthetic PNG:
-    * dst(x,y) = gradient(x·w//tw, y·h//th) — mirrors decodeImage ∘
-    * resizeImage ∘ synthPng, entirely in closed form. */
-  def mmResize(table: String, key: String, tw: Int, th: Int): String =
-    s"""SELECT id, 'png' AS format, CAST($tw AS BIGINT) AS width, CAST($th AS BIGINT) AS height,
-  printf('%02x%02x%02x', CAST(id % 256 AS INT), CAST(id % 256 AS INT),
-         CAST(id % 256 AS INT)) AS px00,
-  printf('%02x%02x%02x', CAST((id + ${tw - 1}*w//$tw) % 256 AS INT),
-         CAST((id + ${th - 1}*h//$th) % 256 AS INT),
-         CAST((id + ${tw - 1}*w//$tw + ${th - 1}*h//$th) % 256 AS INT)) AS pxc,
-  CAST((SELECT SUM((id + x*w//$tw)%256 + (id + y*h//$th)%256
-                 + (id + x*w//$tw + y*h//$th)%256)
-          FROM range(0,$tw) rx(x), range(0,$th) ry(y))
-       AS BIGINT) AS px_sum
-FROM (SELECT $key AS id, 4 + $key % 13 AS w, 3 + $key % 11 AS h FROM $table)"""
-
-  /** Expected per-frame decode of the synthetic animated GIF (5×4 solid
-    * frames, 1 + id%4 of them) — mirrors decodeFrames ∘ synthGif. */
-  def mmFrames(table: String, key: String): String =
-    s"""SELECT id, CAST(x AS BIGINT) AS frame_idx,
-  CAST(5 AS BIGINT) AS width, CAST(4 AS BIGINT) AS height,
-  printf('%02x%02x%02x', CAST((id+x)%256 AS INT), CAST((id+2*x)%256 AS INT),
-         CAST((id+3*x)%256 AS INT)) AS px
-FROM (SELECT $key AS id, 1 + $key % 4 AS nf FROM $table), range(0,4) t(x)
-WHERE x < nf"""
-
-  /** Expected per-frame WAV features (energy + zero crossings over the synth
-    * PCM) — mirrors wavFrameFeatures ∘ synthWav in exact integer arithmetic;
-    * the window-lead form is the sequential oracle of the engine's
-    * per-partition frame fold. */
-  def mmWavFrames(table: String, key: String, frameSize: Int): String =
-    s"""WITH w AS (SELECT $key AS id, 100 + $key % 50 AS ns FROM $table),
-s AS (SELECT id, i, (id*31 + i*17) % 20001 - 10000 AS v
-      FROM w, range(0,150) t(i) WHERE i < ns),
-f AS (SELECT id, i // $frameSize AS frame_idx, i, v,
-        lead(v) OVER (PARTITION BY id, i // $frameSize ORDER BY i) AS nv
-      FROM s)
-SELECT id, CAST(frame_idx AS BIGINT) AS frame_idx,
-  CAST(count(*) AS BIGINT) AS n_samples,
-  CAST(sum(v*v) AS BIGINT) AS sum_sq,
-  CAST(sum(CASE WHEN nv IS NOT NULL AND ((v >= 0) != (nv >= 0)) THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_zero_cross
-FROM f GROUP BY id, frame_idx"""
-
-  /** The closed-form dHash CTE chain shared by [[mmDHash]]/[[mmDHashPairs]]:
-    * mirrors Multimodal.dHash ∘ synthPng — gradient pixel(x,y) =
-    * ((id+x)%256, (id+y)%256, (id+x+y)%256) at w=4+id%13, h=3+id%11,
-    * nearest-neighbor 9×8 downsample (sx = x·w//9, sy = y·h//8), integer
-    * BT.601 luma ×1000, bit y·8+x iff gray(x+1,y) > gray(x,y). Bit 63
-    * contributes the signed value −2⁶³ directly (DuckDB sums BIGINT into
-    * HUGEINT, so the wrap Spark's long OR produces must be spelled out). */
-  private def dHashCtes(table: String, key: String): String =
-    s"""dims AS (SELECT $key AS id, 4 + $key % 13 AS w, 3 + $key % 11 AS h FROM $table),
-g AS (
-  SELECT id, x, y,
-    (299*((id + (x*w)//9) % 256) + 587*((id + (y*h)//8) % 256)
-      + 114*((id + (x*w)//9 + (y*h)//8) % 256)) AS g1,
-    (299*((id + ((x+1)*w)//9) % 256) + 587*((id + (y*h)//8) % 256)
-      + 114*((id + ((x+1)*w)//9 + (y*h)//8) % 256)) AS g2
-  FROM dims, range(0,8) tx(x), range(0,8) ty(y)),
-dh AS (
-  SELECT id, CAST(SUM(CASE WHEN g2 > g1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS dhash
-  FROM g GROUP BY id)"""
-
-  /** Mirrors Multimodal.dHash over the synth PNG fixture. */
-  def mmDHash(table: String, key: String): String =
-    s"""WITH ${dHashCtes(table, key)}
-SELECT id, dhash FROM dh"""
-
-  /** Mirrors Dedup.hammingPairs64 ∘ Multimodal.dHash: every image pair
-    * within Hamming `maxHamming` of each other's dHash, lid < rid. The
-    * oracle verifies all pairs directly (n² at oracle scale); the engine
-    * side goes through the 4-band pigeonhole join. */
-  def mmDHashPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${dHashCtes(table, key)}
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-FROM dh a, dh b
-WHERE a.id < b.id AND bit_count(xor(a.dhash, b.dhash)) <= $maxHamming"""
-
-  /** Closed-form witnesses of decodeImage ∘ synthJpeg: block-constant gray
-    * raster, w = 8·(2+id%5), h = 8·(2+id%3), block (bx,by) luma
-    * (id + 5·bx + 9·by) % 256 — the Spark side must decode REAL
-    * entropy-coded JPEG bytes to reproduce them (the fixture is built so
-    * the lossy codec round-trips exactly; Multimodal.synthJpeg). */
-  def mmJpegDecode(table: String, key: String): String =
-    s"""SELECT id, 'jpeg' AS format, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  printf('%02x%02x%02x', CAST(id % 256 AS INT), CAST(id % 256 AS INT),
-         CAST(id % 256 AS INT)) AS px00,
-  printf('%02x%02x%02x', CAST((id + 5*(w//8 - 1) + 9*(h//8 - 1)) % 256 AS INT),
-         CAST((id + 5*(w//8 - 1) + 9*(h//8 - 1)) % 256 AS INT),
-         CAST((id + 5*(w//8 - 1) + 9*(h//8 - 1)) % 256 AS INT)) AS pxc,
-  CAST((SELECT SUM(3 * 64 * ((id + 5*bx + 9*by) % 256))
-          FROM range(0,6) tbx(bx), range(0,4) tby(by)
-          WHERE bx < w//8 AND by < h//8)
-       AS BIGINT) AS px_sum
-FROM (SELECT $key AS id, 8*(2 + $key % 5) AS w, 8*(2 + $key % 3) AS h FROM $table)"""
-
-  /** The closed-form dHash CTE chain over the synthJpeg fixture: sampled
-    * pixel (x·w//9, y·h//8) falls in block (sx//8, sy//8) whose luma is
-    * (id + 5·bx + 9·by) % 256; gray = 1000·luma (BT.601 on (l,l,l)), so the
-    * bit comparisons reduce to the luma values themselves. */
-  private def jpegDHashCtes(table: String, key: String): String =
-    s"""dims AS (SELECT $key AS id, 8*(2 + $key % 5) AS w, 8*(2 + $key % 3) AS h FROM $table),
-g AS (
-  SELECT id, x, y,
-    ((id + 5*(((x*w)//9)//8) + 9*(((y*h)//8)//8)) % 256) AS l1,
-    ((id + 5*((((x+1)*w)//9)//8) + 9*(((y*h)//8)//8)) % 256) AS l2
-  FROM dims, range(0,8) tx(x), range(0,8) ty(y)),
-dh AS (
-  SELECT id, CAST(SUM(CASE WHEN l2 > l1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS dhash
-  FROM g GROUP BY id)"""
-
-  /** Mirrors Multimodal.dHash over the synth JPEG fixture. */
-  def mmJpegDHash(table: String, key: String): String =
-    s"""WITH ${jpegDHashCtes(table, key)}
-SELECT id, dhash FROM dh"""
-
-  /** Mirrors Dedup.hammingPairs64 ∘ dHash ∘ synthJpeg (the [[mmDHashPairs]]
-    * convention: oracle verifies all pairs directly at oracle scale). */
-  def mmJpegDHashPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${jpegDHashCtes(table, key)}
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-FROM dh a, dh b
-WHERE a.id < b.id AND bit_count(xor(a.dhash, b.dhash)) <= $maxHamming"""
-
-  /** Mirrors decodeUlaw ∘ synthUlawWav: CCITT G.711 µ-law encode∘decode in
-    * closed form over the synth PCM (sample i = (id·31+i·17)%20001−10000).
-    * The Spark side must run the JDK's REAL companding codec both ways to
-    * reproduce the quantized sample sum — the fixture's ±10000 range stays
-    * inside the domain where the JDK encoder equals spec arithmetic
-    * (verified exhaustively; Multimodal.synthUlawWav's doc). */
-  def mmUlawDecode(table: String, key: String): String =
-    s"""WITH uw AS (SELECT $key AS id, 100 + $key % 50 AS ns FROM $table),
-us AS (SELECT id, ns, (id*31 + i*17) % 20001 - 10000 AS v
-      FROM uw, range(0,150) t(i) WHERE i < ns),
-ue AS (SELECT id, ns, CASE WHEN v < 0 THEN 1 ELSE 0 END AS sgn,
-        LEAST(abs(v), 32635) + 132 AS m FROM us),
-ux AS (SELECT id, ns, sgn, m,
-        CASE WHEN m >= 16384 THEN 7 WHEN m >= 8192 THEN 6 WHEN m >= 4096 THEN 5
-             WHEN m >= 2048 THEN 4 WHEN m >= 1024 THEN 3 WHEN m >= 512 THEN 2
-             WHEN m >= 256 THEN 1 ELSE 0 END AS ex FROM ue),
-ud AS (SELECT id, ns,
-        (CASE WHEN sgn = 1 THEN -1 ELSE 1 END) *
-        ((((m >> (ex+3)) & 15) * 8 + 132) * (1 << ex) - 132) AS dv FROM ux)
-SELECT id, CAST(8000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS channels,
-  CAST(8 AS BIGINT) AS bits, CAST(min(ns) AS BIGINT) AS n_frames,
-  CAST(SUM(dv) AS BIGINT) AS sample_sum
-FROM ud GROUP BY id"""
-
-  /** Shared dims CTE of the MJPEG/AVI fixture (Multimodal.synthAvi):
-    * w = 8·(2+id%5), h = 8·(2+id%3), nf = 1+id%4, frame f block (bx,by)
-    * luma (id + 5·bx + 9·by + 17·f) % 256. */
-  private def aviDims(table: String, key: String): String =
-    s"""avidims AS (SELECT $key AS id, 8*(2 + $key % 5) AS w,
-  8*(2 + $key % 3) AS h, 1 + $key % 4 AS nf FROM $table)"""
-
-  /** Closed-form witnesses of decodeAvi ∘ synthAvi — the Spark side must
-    * parse the real RIFF chunk walk AND run the JPEG entropy decoder per
-    * frame to reproduce them. */
-  def mmAviDecode(table: String, key: String): String =
-    s"""WITH ${aviDims(table, key)}
-SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  CAST(25 AS BIGINT) AS fps_num, CAST(1 AS BIGINT) AS fps_den,
-  CAST(nf AS BIGINT) AS n_frames, 'MJPG' AS codec,
-  CAST(id % 256 AS BIGINT) AS px00,
-  CAST((SELECT SUM(64 * ((id + 5*bx + 9*by + 17*f) % 256))
-          FROM range(0,4) tf(f), range(0,6) tbx(bx), range(0,4) tby(by)
-          WHERE f < nf AND bx < w//8 AND by < h//8)
-       AS BIGINT) AS y_sum
-FROM avidims"""
-
-  /** Per-frame dHash CTE chain over the AVI fixture (sampled pixel
-    * (x·w//9, y·h//8) falls in block (sx//8, sy//8); gray = 1000·luma). */
-  private def aviFrameHashCtes(table: String, key: String): String =
-    s"""${aviDims(table, key)},
-avig AS (
-  SELECT id, f, x, y,
-    ((id + 5*(((x*w)//9)//8) + 9*(((y*h)//8)//8) + 17*f) % 256) AS l1,
-    ((id + 5*((((x+1)*w)//9)//8) + 9*(((y*h)//8)//8) + 17*f) % 256) AS l2
-  FROM avidims, range(0,4) tf(f), range(0,8) tx(x), range(0,8) ty(y)
-  WHERE f < nf),
-avifh AS (
-  SELECT id, f, CAST(SUM(CASE WHEN l2 > l1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS fhash
-  FROM avig GROUP BY id, f)"""
-
-  /** Mirrors aviFrameHashes ∘ synthAvi. */
-  def mmAviFrameHash(table: String, key: String): String =
-    s"""WITH ${aviFrameHashCtes(table, key)}
-SELECT id, CAST(f AS BIGINT) AS frame_idx, fhash FROM avifh"""
-
-  /** Mirrors Dedup.hammingPairs64 ∘ aviHash ∘ synthAvi (vhash = frame
-    * nf/2's hash; oracle verifies all pairs directly at oracle scale). */
-  def mmAviHashPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${aviFrameHashCtes(table, key)},
-avivh AS (
-  SELECT avifh.id, fhash AS vhash FROM avifh, avidims
-  WHERE avifh.id = avidims.id AND avifh.f = avidims.nf // 2)
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.vhash, b.vhash)) AS BIGINT) AS hamming
-FROM avivh a, avivh b
-WHERE a.id < b.id AND bit_count(xor(a.vhash, b.vhash)) <= $maxHamming"""
-
-  /** Mirrors Dedup.incrementalKeepIdsHamming64Indexed over wavHash
-    * signatures (corpus = id%10 != 0, incoming = id%10 = 0): drop incoming
-    * within Hamming `maxHamming` of a corpus item, then collapse the
-    * survivors' within-batch Hamming clusters to min-id representatives —
-    * the [[clusterIds]] recursive-CC collapse over the survivor pairs. */
-  def mmWavKeep(table: String, key: String, maxHamming: Int): String =
-    hammingKeepSql(wavHashCtes(table, key), "wh", "whash", maxHamming)
-
-  /** Shared generator of the generic-Hamming KEEP oracles (mirrors
-    * Dedup.incrementalKeepIdsHamming64Indexed; corpus = id%10 != 0,
-    * incoming = id%10 = 0): drop in-radius incoming, then the
-    * [[clusterIds]] recursive-CC collapse over the survivor pairs — ONE
-    * body so the keep-set convention can never drift between the signature
-    * families' oracles. `cte`/`sig` name the signature CTE and column of
-    * the supplied `ctes` chain. */
-  private def hammingKeepSql(ctes: String, cte: String, sig: String,
-                             maxHamming: Int): String = {
-    val pairs =
-      s"""SELECT a.id AS l, b.id AS r FROM $cte a, $cte b
-WHERE a.id % 10 = 0 AND b.id % 10 = 0 AND a.id < b.id
-  AND a.id NOT IN (SELECT rid FROM drops)
-  AND b.id NOT IN (SELECT rid FROM drops)
-  AND bit_count(xor(a.$sig, b.$sig)) <= $maxHamming"""
-    s"""WITH $ctes,
-drops AS (
-  SELECT DISTINCT b.id AS rid FROM $cte a, $cte b
-  WHERE a.id % 10 != 0 AND b.id % 10 = 0
-    AND bit_count(xor(a.$sig, b.$sig)) <= $maxHamming)
-SELECT s.id AS id FROM $cte s
-WHERE s.id % 10 = 0 AND s.id NOT IN (SELECT rid FROM drops)
-  AND s.id NOT IN (SELECT id FROM (${clusterIds(pairs)}) WHERE cluster_id != id)"""
-  }
-
-  /** Shared generator of the generic-Hamming R×S oracles (mirrors
-    * Dedup.hammingPairsRs64 and its indexed twin — the lossless bucket
-    * encoding makes them equal): all cross-side pairs within `maxHamming`,
-    * corpus = id%10 != 0, incoming = id%10 = 0. */
-  private def hammingPairsRsSql(ctes: String, cte: String, sig: String,
-                                maxHamming: Int): String =
-    s"""WITH $ctes
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.$sig, b.$sig)) AS BIGINT) AS hamming
-FROM $cte a, $cte b
-WHERE a.id % 10 != 0 AND b.id % 10 = 0
-  AND bit_count(xor(a.$sig, b.$sig)) <= $maxHamming"""
-
-  /** Mirrors Dedup.incrementalKeepIdsHamming64Indexed over dHash signatures
-    * — the [[mmWavKeep]] construction on the image family. */
-  def mmDHashKeep(table: String, key: String, maxHamming: Int): String =
-    hammingKeepSql(dHashCtes(table, key), "dh", "dhash", maxHamming)
-
-  /** Mirrors Dedup.hammingPairsRs64 (and its indexed twin) over dHash
-    * signatures — [[hammingPairsRsSql]] on the image family. */
-  def mmDHashPairsRs(table: String, key: String, maxHamming: Int): String =
-    hammingPairsRsSql(dHashCtes(table, key), "dh", "dhash", maxHamming)
-
-  /** Expected WAV decode (16-bit mono 8 kHz PCM, 100 + id%50 samples,
-    * sample i = (id·31 + i·17) % 20001 − 10000) — mirrors
-    * decodeWav ∘ synthWav; the sample sum is exact integer arithmetic. */
-  def mmWav(table: String, key: String): String =
-    s"""SELECT id, CAST(8000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS channels,
-  CAST(16 AS BIGINT) AS bits, CAST(ns AS BIGINT) AS n_frames,
-  CAST((SELECT SUM((id*31 + i*17) % 20001 - 10000)
-          FROM range(0,150) t(i) WHERE i < ns) AS BIGINT) AS sample_sum
-FROM (SELECT $key AS id, 100 + $key % 50 AS ns FROM $table)"""
-
-  /** The closed-form WAV-fingerprint CTE chain shared by
-    * [[mmWavHash]]/[[mmWavHashPairs]]: mirrors Multimodal.wavHash ∘ synthWav
-    * — ns = 100 + id%50 samples, sample i = (id·31 + i·17) % 20001 − 10000,
-    * 65 energy segments with nearest-neighbor boundaries
-    * [j·ns//65, (j+1)·ns//65), bit j iff energy(j+1) > energy(j). Same
-    * bit-63 signed-wrap spelling as [[dHashCtes]]. */
-  private def wavHashCtes(table: String, key: String): String =
-    s"""w AS (SELECT $key AS id, 100 + $key % 50 AS ns FROM $table),
-seg AS (
-  SELECT id, j,
-    SUM(CASE WHEN i >= (j*ns)//65 AND i < ((j+1)*ns)//65
-        THEN ((id*31 + i*17) % 20001 - 10000) * ((id*31 + i*17) % 20001 - 10000)
-        ELSE 0 END) AS en
-  FROM w, range(0,65) tj(j), range(0,150) ti(i) WHERE i < ns
-  GROUP BY id, j),
-wh AS (
-  SELECT a.id AS id, CAST(SUM(CASE WHEN b.en > a.en THEN
-      CASE WHEN a.j = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << CAST(a.j AS INT)) END
-    ELSE 0 END) AS BIGINT) AS whash
-  FROM seg a JOIN seg b ON b.id = a.id AND b.j = a.j + 1
-  GROUP BY a.id)"""
-
-  /** Mirrors Multimodal.wavHash over the synth WAV fixture. */
-  def mmWavHash(table: String, key: String): String =
-    s"""WITH ${wavHashCtes(table, key)}
-SELECT id, whash FROM wh"""
-
-  /** Mirrors Dedup.hammingPairs64 ∘ Multimodal.wavHash: every audio pair
-    * within Hamming `maxHamming`, lid < rid — all-pairs at oracle scale vs
-    * the engine's 4-band pigeonhole join (the [[mmDHashPairs]] convention). */
-  def mmWavHashPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${wavHashCtes(table, key)}
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.whash, b.whash)) AS BIGINT) AS hamming
-FROM wh a, wh b
-WHERE a.id < b.id AND bit_count(xor(a.whash, b.whash)) <= $maxHamming"""
-
-  /** Mirrors Dedup.hammingPairsRs64 (and its indexed twin — the lossless
-    * bucket encoding makes them equal) over wavHash signatures: all
-    * cross-side pairs within Hamming `maxHamming`, corpus = id%10 != 0,
-    * incoming = id%10 = 0 (the text families' 90/10 rs convention). */
-  def mmWavHashPairsRs(table: String, key: String, maxHamming: Int): String =
-    hammingPairsRsSql(wavHashCtes(table, key), "wh", "whash", maxHamming)
-
-  /** The synth-Y4M geometry subquery shared by every video oracle: the
-    * DECADE of the id picks width/height/frame-count (so same-decade ids are
-    * controlled near-duplicates — Multimodal.synthY4m's fixture design);
-    * luma stays closed-form in the full id. */
-  private def y4mDims(table: String, key: String): String =
-    s"""vdims AS (SELECT $key AS id, 4 + ($key // 10) % 13 AS w,
-  3 + ($key // 10) % 11 AS h, 1 + ($key // 10) % 4 AS nf FROM $table)"""
-
-  /** Expected Y4M decode — mirrors decodeY4m ∘ synthY4m in closed form:
-    * header fields from the decade geometry, luma(x,y,f) =
-    * (id + 3x + 7y + 11f) % 256 folded into the first/last-pixel witnesses
-    * and the whole-stream luma sum. */
-  def mmY4m(table: String, key: String): String =
-    s"""WITH ${y4mDims(table, key)}
-SELECT id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-  CAST(25 AS BIGINT) AS fps_num, CAST(1 AS BIGINT) AS fps_den,
-  CAST(nf AS BIGINT) AS n_frames,
-  CAST(id % 256 AS BIGINT) AS px00,
-  CAST((id + 3*(w-1) + 7*(h-1) + 11*(nf-1)) % 256 AS BIGINT) AS pxl,
-  CAST((SELECT SUM((id + 3*x + 7*y + 11*f) % 256)
-          FROM range(0,16) rx(x), range(0,13) ry(y), range(0,4) rf(f)
-         WHERE x < w AND y < h AND f < nf) AS BIGINT) AS y_sum
-FROM vdims"""
-
-  /** Mirrors Multimodal.y4mFrameHashes ∘ synthY4m: per-frame luma dHash —
-    * 9×8 nearest-neighbor grid (sx = x·w//9, sy = y·h//8), luma used
-    * directly as gray (mono plane), bit y·8+x iff luma(x+1,y) > luma(x,y).
-    * Same bit-63 signed-wrap spelling as [[dHashCtes]]. */
-  def mmY4mFrameHash(table: String, key: String): String =
-    s"""WITH ${y4mDims(table, key)},
-fg AS (
-  SELECT id, f, x, y,
-    (id + 3*((x*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l1,
-    (id + 3*(((x+1)*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l2
-  FROM vdims, range(0,4) tf(f), range(0,8) tx(x), range(0,8) ty(y)
-  WHERE f < nf)
-SELECT id, CAST(f AS BIGINT) AS frame_idx,
-  CAST(SUM(CASE WHEN l2 > l1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS fhash
-FROM fg GROUP BY id, f"""
-
-  /** The closed-form video-signature CTE chain shared by the y4m hash/pairs/
-    * keep oracles: the MIDDLE frame's (nf//2) luma dHash — mirrors
-    * Multimodal.y4mHash ∘ synthY4m. */
-  private def y4mHashCtes(table: String, key: String): String =
-    s"""${y4mDims(table, key)},
-vg AS (
-  SELECT id, x, y,
-    (id + 3*((x*w)//9) + 7*((y*h)//8) + 11*(nf//2)) % 256 AS l1,
-    (id + 3*(((x+1)*w)//9) + 7*((y*h)//8) + 11*(nf//2)) % 256 AS l2
-  FROM vdims, range(0,8) tx(x), range(0,8) ty(y)),
-vh AS (
-  SELECT id, CAST(SUM(CASE WHEN l2 > l1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS vhash
-  FROM vg GROUP BY id)"""
-
-  /** Mirrors Multimodal.y4mHash over the synth Y4M fixture. */
-  def mmY4mHash(table: String, key: String): String =
-    s"""WITH ${y4mHashCtes(table, key)}
-SELECT id, vhash FROM vh"""
-
-  /** Mirrors Dedup.hammingPairs64 ∘ Multimodal.y4mHash: every video pair
-    * within Hamming `maxHamming`, lid < rid — all-pairs at oracle scale vs
-    * the engine's 4-band pigeonhole join (the [[mmDHashPairs]] convention). */
-  def mmY4mHashPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${y4mHashCtes(table, key)}
-SELECT a.id AS lid, b.id AS rid,
-  CAST(bit_count(xor(a.vhash, b.vhash)) AS BIGINT) AS hamming
-FROM vh a, vh b
-WHERE a.id < b.id AND bit_count(xor(a.vhash, b.vhash)) <= $maxHamming"""
-
-  /** Mirrors Dedup.hammingPairsRs64 (and its indexed twin) over video
-    * signatures — [[hammingPairsRsSql]] on the video family. */
-  def mmY4mHashPairsRs(table: String, key: String, maxHamming: Int): String =
-    hammingPairsRsSql(y4mHashCtes(table, key), "vh", "vhash", maxHamming)
-
-  /** Mirrors Dedup.incrementalKeepIdsHamming64Indexed over video signatures
-    * — the [[mmWavKeep]] construction on the video family. */
-  def mmY4mKeep(table: String, key: String, maxHamming: Int): String =
-    hammingKeepSql(y4mHashCtes(table, key), "vh", "vhash", maxHamming)
-
-  /** Mirrors Multimodal.y4mScenes ∘ synthY4m: consecutive-frame luma-dHash
-    * Hamming deltas above the threshold (frame f vs f−1, f >= 1) — the
-    * shot-boundary signal, entirely in closed form. */
-  def mmY4mScenes(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${y4mDims(table, key)},
-fg AS (
-  SELECT id, f, x, y,
-    (id + 3*((x*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l1,
-    (id + 3*(((x+1)*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l2
-  FROM vdims, range(0,4) tf(f), range(0,8) tx(x), range(0,8) ty(y)
-  WHERE f < nf),
-fh AS (
-  SELECT id, f,
-    CAST(SUM(CASE WHEN l2 > l1 THEN
-        CASE WHEN y*8+x = 63 THEN -9223372036854775808
-             ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-      ELSE 0 END) AS BIGINT) AS fhash
-  FROM fg GROUP BY id, f)
-SELECT a.id AS id, CAST(a.f AS BIGINT) AS frame_idx,
-  CAST(bit_count(xor(a.fhash, b.fhash)) AS BIGINT) AS hamming_prev
-FROM fh a JOIN fh b ON b.id = a.id AND b.f = a.f - 1
-WHERE bit_count(xor(a.fhash, b.fhash)) > $maxHamming"""
-
-  /** Mirrors dHash ∘ y4mKeyframes ∘ synthY4m: the extracted keyframes'
-    * downstream IMAGE dHash under the composite key id·10 + f. The gray
-    * re-encode makes BT.601 luma 1000·l (order-preserving), so the image
-    * dHash of a keyframe equals the frame's luma dHash — the whole
-    * video→PNG→image-pipeline composition stays closed-form. */
-  def mmY4mKeyframeDHash(table: String, key: String, every: Int): String =
-    s"""WITH ${y4mDims(table, key)},
-fg AS (
-  SELECT id, f, x, y,
-    (id + 3*((x*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l1,
-    (id + 3*(((x+1)*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l2
-  FROM vdims, range(0,4) tf(f), range(0,8) tx(x), range(0,8) ty(y)
-  WHERE f < nf AND f % $every = 0)
-SELECT id*10 + f AS id,
-  CAST(SUM(CASE WHEN l2 > l1 THEN
-      CASE WHEN y*8+x = 63 THEN -9223372036854775808
-           ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-    ELSE 0 END) AS BIGINT) AS dhash
-FROM fg GROUP BY id, f"""
-
-  /** Mirrors Dedup.hammingPairs64 over PER-FRAME video hashes keyed by the
-    * composite segment id (id·10 + frame_idx): every segment pair within
-    * Hamming `maxHamming`, lseg < rseg — temporal near-dup, same-video
-    * pairs included by design (the frame-hash CTE is [[mmY4mFrameHash]]'s). */
-  def mmY4mSegPairs(table: String, key: String, maxHamming: Int): String =
-    s"""WITH ${y4mDims(table, key)},
-fg AS (
-  SELECT id, f, x, y,
-    (id + 3*((x*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l1,
-    (id + 3*(((x+1)*w)//9) + 7*((y*h)//8) + 11*f) % 256 AS l2
-  FROM vdims, range(0,4) tf(f), range(0,8) tx(x), range(0,8) ty(y)
-  WHERE f < nf),
-fh AS (
-  SELECT id*10 + f AS seg_id,
-    CAST(SUM(CASE WHEN l2 > l1 THEN
-        CASE WHEN y*8+x = 63 THEN -9223372036854775808
-             ELSE (CAST(1 AS BIGINT) << (y*8+x)) END
-      ELSE 0 END) AS BIGINT) AS fhash
-  FROM fg GROUP BY id, f)
-SELECT a.seg_id AS lid, b.seg_id AS rid,
-  CAST(bit_count(xor(a.fhash, b.fhash)) AS BIGINT) AS hamming
-FROM fh a, fh b
-WHERE a.seg_id < b.seg_id AND bit_count(xor(a.fhash, b.fhash)) <= $maxHamming"""
 
   /** Double-precision sequential-fold cosine between two embedding columns
     * (matches Spark's zip_with + aggregate fold). */

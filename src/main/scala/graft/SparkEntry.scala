@@ -482,258 +482,6 @@ object SparkEntry {
         family = Dedup.Md5Family)
     }),
 
-    // Multimodal: REAL codec passes (JDK ImageIO / javax.sound) over
-    // deterministic synthetic media — the oracle recomputes the decoded
-    // witnesses (dims, corner pixels, raster/sample checksums) in closed
-    // form from the id, while Spark must round-trip actual encoded bytes.
-    "mm_meta_docs" -> ((s, dir) =>
-      Multimodal.extractMeta(
-        Multimodal.withPayload(tbl(s, dir, "documents"), "text"), "doc_id")),
-    "mm_decode_docs" -> ((s, dir) =>
-      Multimodal.decodeImage(
-        Multimodal.synthPng(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    "mm_frames_docs" -> ((s, dir) =>
-      Multimodal.decodeFrames(
-        Multimodal.synthGif(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    "mm_resize_docs" -> ((s, dir) =>
-      Multimodal.decodeImage(
-        Multimodal.resizeImage(
-          Multimodal.synthPng(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id", 8, 6).toDF(), "id").toDF()),
-    // perceptual image near-dup: dHash (real decode + 9×8 nearest-neighbor
-    // gray downsample) feeding the SAME Hamming-band machinery as text
-    // SimHash — multimodal wired into the dedup lifecycle (r11 verdict #5)
-    "mm_dhash_docs" -> ((s, dir) =>
-      Multimodal.dHash(
-        Multimodal.synthPng(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    // COMPRESSED-codec proof (r14 verdict #4): real entropy-coded baseline
-    // JPEG payloads decoded by the JDK's JPEG READER through the same
-    // decodeImage/dHash/Hamming-banding passes as PNG. The fixture makes the
-    // lossy round trip exact (block-constant grayscale at quality 1.0 —
-    // Multimodal.synthJpeg's doc carries the argument), so every witness
-    // stays closed-form oracle-able while the bytes on the wire are a
-    // genuine compressed container.
-    "mm_jpeg_decode_docs" -> ((s, dir) =>
-      Multimodal.decodeImage(
-        Multimodal.synthJpeg(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_jpeg_dhash_docs" -> ((s, dir) =>
-      Multimodal.dHash(
-        Multimodal.synthJpeg(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_jpeg_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.dHash(
-          Multimodal.synthJpeg(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id").toDF(),
-        "id", "dhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    // COMPRESSED VIDEO container (r14 verdict missing #1, closed fully):
-    // MJPEG-in-AVI — real RIFF chunk walk (nested LISTs, even padding,
-    // strh/strf headers) + the JDK's JPEG entropy decoder per frame; the
-    // Y4M family's decode/frame-hash/signature/near-dup symmetry on a
-    // container where NO pixel exists until the codec runs
-    "mm_avi_decode_docs" -> ((s, dir) =>
-      Multimodal.decodeAvi(
-        Multimodal.synthAvi(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_avi_frame_dhash_docs" -> ((s, dir) =>
-      Multimodal.aviFrameHashes(
-        Multimodal.synthAvi(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_avi_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.aviHash(
-          Multimodal.synthAvi(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id").toDF(),
-        "id", "vhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    // COMPRESSED AUDIO codec: the synth PCM companded through the JDK's
-    // real G.711 µ-law encoder into a format-tag-7 WAV, then expanded back
-    // by its µ-law DECODER — the witness sum only matches if both lossy
-    // transforms ran (completes image/video/audio compressed-codec symmetry)
-    "mm_ulaw_decode_docs" -> ((s, dir) =>
-      Multimodal.decodeUlaw(
-        Multimodal.synthUlawWav(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.dHash(
-          Multimodal.synthPng(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id").toDF(),
-        "id", "dhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    // the image half of the incremental multimodal convention: dHash through
-    // the same generic Hamming R×S + durable-index paths as wavHash
-    "mm_neardup_rs_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.dHash(Multimodal.synthPng(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64(
-          sig(docs.where(col("doc_id") % 10 =!= 0)),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "dhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    "mm_neardup_rs_indexed_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.dHash(Multimodal.synthPng(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64Indexed(
-          Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "dhash"),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "dhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    // the image admission twin of mm_wav_keep_docs — same generic operator,
-    // dHash signatures
-    "mm_keep_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.dHash(Multimodal.synthPng(d, "doc_id").toDF(), "id").toDF()
-      Dedup.incrementalKeepIdsHamming64Indexed(
-        Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "dhash"),
-        sig(docs.where(col("doc_id") % 10 === 0)), "id", "dhash", 3)
-    }),
-    "mm_wav_docs" -> ((s, dir) =>
-      Multimodal.decodeWav(
-        Multimodal.synthWav(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    "mm_wav_frames_docs" -> ((s, dir) =>
-      Multimodal.wavFrameFeatures(
-        Multimodal.synthWav(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id", 50).toDF()),
-    // audio near-dup: sign-of-delta energy-envelope fingerprint (the dHash
-    // recipe on decoded PCM) feeding the SAME 64-bit Hamming-band machinery
-    // as images and text SimHash — the audio half of the multimodal dedup
-    // symmetry (r12 verdict #5)
-    "mm_wav_hash_docs" -> ((s, dir) =>
-      Multimodal.wavHash(
-        Multimodal.synthWav(tbl(s, dir, "documents"), "doc_id").toDF(),
-        "id").toDF()),
-    "mm_wav_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.wavHash(
-          Multimodal.synthWav(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id").toDF(),
-        "id", "whash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    // incremental multimodal near-dup (the text families' 90/10 rs
-    // convention): an incoming batch of audio fingerprints against the
-    // corpus through the generic Hamming R×S path — no self-join on either
-    // side — and through a durable bucketed index (lossless bucket encoding
-    // ⇒ indexed == direct, so both share one oracle)
-    "mm_wav_neardup_rs_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.wavHash(Multimodal.synthWav(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64(
-          sig(docs.where(col("doc_id") % 10 =!= 0)),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "whash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    "mm_wav_neardup_rs_indexed_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.wavHash(Multimodal.synthWav(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64Indexed(
-          Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "whash"),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "whash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    // the generic-signature ADMISSION operator (batch form of the streaming
-    // ingestHamming64 loop): drop incoming audio within Hamming 3 of the
-    // corpus index, collapse within-batch clusters to min-id keepers —
-    // oracled end to end incl. the connected-components collapse
-    "mm_wav_keep_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.wavHash(Multimodal.synthWav(d, "doc_id").toDF(), "id").toDF()
-      Dedup.incrementalKeepIdsHamming64Indexed(
-        Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "whash"),
-        sig(docs.where(col("doc_id") % 10 === 0)), "id", "whash", 3)
-    }),
-    // VIDEO: real YUV4MPEG2 container decode (plain-text header + raw planar
-    // frames, parsed from spec — no codec library exists in the JDK, none is
-    // needed for Y4M) with header + pixel witnesses the oracle recomputes in
-    // closed form from the synth generator
-    "mm_y4m_docs" -> ((s, dir) =>
-      Multimodal.decodeY4m(
-        Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    // per-frame luma dHash — the frame-level featurizer a temporal-segment
-    // near-dup or frame-sampling join consumes
-    "mm_y4m_frames_docs" -> ((s, dir) =>
-      Multimodal.y4mFrameHashes(
-        Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    // video-level signature: middle-frame luma dHash — same 64-bit Hamming
-    // machinery as images (dHash), audio (wavHash), and text SimHash
-    "mm_y4m_hash_docs" -> ((s, dir) =>
-      Multimodal.y4mHash(
-        Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()),
-    "mm_y4m_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.y4mHash(
-          Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF(),
-        "id", "vhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    // the video half of the incremental multimodal convention: y4m signatures
-    // through the generic Hamming R×S + durable-index + admission paths —
-    // exact lifecycle parity with the image and audio families
-    "mm_y4m_neardup_rs_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.y4mHash(Multimodal.synthY4m(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64(
-          sig(docs.where(col("doc_id") % 10 =!= 0)),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "vhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    "mm_y4m_neardup_rs_indexed_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.y4mHash(Multimodal.synthY4m(d, "doc_id").toDF(), "id").toDF()
-      Dedup.hammingPairsRs64Indexed(
-          Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "vhash"),
-          sig(docs.where(col("doc_id") % 10 === 0)), "id", "vhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))
-    }),
-    // scene-cut detection: consecutive-frame hash deltas computed INSIDE the
-    // decode pass (frames share a payload) — no window, no shuffle, no state
-    "mm_y4m_scenes_docs" -> ((s, dir) =>
-      Multimodal.y4mScenes(
-        Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id", 3).toDF()),
-    // the video→image bridge: every 2nd frame re-encoded as a REAL gray PNG
-    // under separate (id, frame_idx) columns, then the IMAGE dHash over those
-    // payloads keyed by the composite id·10+frame_idx — built HERE, where the
-    // synth fixture's nf <= 4 bound makes it provably collision-free (the
-    // operator itself emits separate columns and has no frame bound); the
-    // gray re-encode keeps the whole composition closed-form oracle-able
-    "mm_y4m_keyframe_dhash_docs" -> ((s, dir) =>
-      Multimodal.dHash(
-        Multimodal.y4mKeyframes(
-          Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(),
-          "id", 2).toDF()
-          .select((col("id") * 10 + col("frame_idx")).as("id"), col("payload")),
-        "id").toDF()),
-    // temporal/segment-level video near-dup: per-frame hashes under a
-    // composite segment key (id·10 + frame_idx — nf <= 4 keeps it lossless)
-    // through the SAME generic Hamming banding; pairs inside one video are
-    // intentional signal (shared intros/outros, still scenes) — the frame
-    // analogue of span-level exact-substring dedup on text
-    "mm_y4m_seg_neardup_docs" -> ((s, dir) =>
-      Dedup.hammingPairs64(
-        Multimodal.y4mFrameHashes(
-          Multimodal.synthY4m(tbl(s, dir, "documents"), "doc_id").toDF(), "id").toDF()
-          .select((col("id") * 10 + col("frame_idx")).as("seg_id"), col("fhash")),
-        "seg_id", "fhash", 3)
-        .select(col("lid"), col("rid"), col("hamming").cast("long").as("hamming"))),
-    "mm_y4m_keep_docs" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      def sig(d: DataFrame) =
-        Multimodal.y4mHash(Multimodal.synthY4m(d, "doc_id").toDF(), "id").toDF()
-      Dedup.incrementalKeepIdsHamming64Indexed(
-        Dedup.hammingIndex64(sig(docs.where(col("doc_id") % 10 =!= 0)), "id", "vhash"),
-        sig(docs.where(col("doc_id") % 10 === 0)), "id", "vhash", 3)
-    }),
-
     // Similarity search over embeddings
     "ann_topk_exact" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
@@ -1340,7 +1088,7 @@ GROUP BY c_nationkey""")
         s"SELECT l_p_partkey AS sk1, r_p_partkey AS sk2 FROM (${DuckSql.selfJoin(partWs, "p_partkey", t)})")
     }.mkString("\nUNION ALL\n"),
 
-    // Text analysis / dedup / multimodal / ANN
+    // Text analysis / dedup / ANN
     "text_stats_docs" -> DuckSql.textStats("documents", "doc_id", "text"),
     "lang_id_docs" -> DuckSql.langId("documents", "doc_id", "text"),
     "token_counts_docs" -> DuckSql.tokenCounts("documents", "doc_id", "text"),
@@ -1411,39 +1159,6 @@ WHERE cluster_id != id)""",
       corpusSplit, incomingSplit, "doc_id", "text", DuckSql.wsClass, 3),
     "dedup_incremental_keep_simhash_indexed_docs" -> DuckSql.incrementalKeepSimHash(
       corpusSplit, incomingSplit, "doc_id", "text", DuckSql.wsClass, 3),
-    "mm_meta_docs" -> DuckSql.mmMeta("documents", "doc_id", "text"),
-    "mm_decode_docs" -> DuckSql.mmDecode("documents", "doc_id"),
-    "mm_frames_docs" -> DuckSql.mmFrames("documents", "doc_id"),
-    "mm_resize_docs" -> DuckSql.mmResize("documents", "doc_id", 8, 6),
-    "mm_dhash_docs" -> DuckSql.mmDHash("documents", "doc_id"),
-    "mm_jpeg_decode_docs" -> DuckSql.mmJpegDecode("documents", "doc_id"),
-    "mm_jpeg_dhash_docs" -> DuckSql.mmJpegDHash("documents", "doc_id"),
-    "mm_jpeg_neardup_docs" -> DuckSql.mmJpegDHashPairs("documents", "doc_id", 3),
-    "mm_avi_decode_docs" -> DuckSql.mmAviDecode("documents", "doc_id"),
-    "mm_avi_frame_dhash_docs" -> DuckSql.mmAviFrameHash("documents", "doc_id"),
-    "mm_avi_neardup_docs" -> DuckSql.mmAviHashPairs("documents", "doc_id", 3),
-    "mm_ulaw_decode_docs" -> DuckSql.mmUlawDecode("documents", "doc_id"),
-    "mm_neardup_docs" -> DuckSql.mmDHashPairs("documents", "doc_id", 3),
-    "mm_neardup_rs_docs" -> DuckSql.mmDHashPairsRs("documents", "doc_id", 3),
-    "mm_neardup_rs_indexed_docs" -> DuckSql.mmDHashPairsRs("documents", "doc_id", 3),
-    "mm_wav_docs" -> DuckSql.mmWav("documents", "doc_id"),
-    "mm_wav_frames_docs" -> DuckSql.mmWavFrames("documents", "doc_id", 50),
-    "mm_wav_hash_docs" -> DuckSql.mmWavHash("documents", "doc_id"),
-    "mm_wav_neardup_docs" -> DuckSql.mmWavHashPairs("documents", "doc_id", 3),
-    "mm_wav_neardup_rs_docs" -> DuckSql.mmWavHashPairsRs("documents", "doc_id", 3),
-    "mm_wav_neardup_rs_indexed_docs" -> DuckSql.mmWavHashPairsRs("documents", "doc_id", 3),
-    "mm_wav_keep_docs" -> DuckSql.mmWavKeep("documents", "doc_id", 3),
-    "mm_keep_docs" -> DuckSql.mmDHashKeep("documents", "doc_id", 3),
-    "mm_y4m_docs" -> DuckSql.mmY4m("documents", "doc_id"),
-    "mm_y4m_frames_docs" -> DuckSql.mmY4mFrameHash("documents", "doc_id"),
-    "mm_y4m_hash_docs" -> DuckSql.mmY4mHash("documents", "doc_id"),
-    "mm_y4m_neardup_docs" -> DuckSql.mmY4mHashPairs("documents", "doc_id", 3),
-    "mm_y4m_neardup_rs_docs" -> DuckSql.mmY4mHashPairsRs("documents", "doc_id", 3),
-    "mm_y4m_neardup_rs_indexed_docs" -> DuckSql.mmY4mHashPairsRs("documents", "doc_id", 3),
-    "mm_y4m_keep_docs" -> DuckSql.mmY4mKeep("documents", "doc_id", 3),
-    "mm_y4m_seg_neardup_docs" -> DuckSql.mmY4mSegPairs("documents", "doc_id", 3),
-    "mm_y4m_scenes_docs" -> DuckSql.mmY4mScenes("documents", "doc_id", 3),
-    "mm_y4m_keyframe_dhash_docs" -> DuckSql.mmY4mKeyframeDHash("documents", "doc_id", 2),
     "ann_topk_exact" -> DuckSql.annTopKExact("embeddings", "vec_id", "embedding",
       "vec_id < 5", 10),
     "ann_topk_exact_strkey" -> DuckSql.annTopKExact(

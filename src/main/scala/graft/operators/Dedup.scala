@@ -763,8 +763,7 @@ object Dedup {
     require(maxHamming < 4, "4-band blocking only guarantees recall for hamming <= 3")
     // persist the (id, simhash) signatures: they feed BOTH sides of the band
     // self-join, and rebuilding them re-runs tokenize + the 64-column bit-sum
-    // aggregation per side (the dominant per-doc compute of this path —
-    // the same both-sides reuse as hammingPairs64)
+    // aggregation per side (the dominant per-doc compute of this path)
     val tokens = tokenizer.tokenize(Parallelize.ensureMinParallelism(df), key, value)
     val withBand = banded64(simHash64(tokens, family).persistTracked, family.bits)
     // First-matching-band emission (same pattern as minHashPairs): a pair
@@ -995,9 +994,9 @@ object Dedup {
 
   /** 4-band explosion of any (id, simhash) signature frame — the
     * signature-agnostic core of [[simHashBanded]], shared with
-    * [[hammingPairs64]] so PERCEPTUAL hashes (dHash over decoded rasters)
-    * ride the same Hamming-band machinery as text SimHash. One row per
-    * (id, band) with that band's bits/4-wide window as `bandval`. */
+    * [[hammingIndex64]] so precomputed 64-bit fingerprints ride the same
+    * Hamming-band machinery as text SimHash. One row per (id, band) with
+    * that band's bits/4-wide window as `bandval`. */
   private[graft] def banded64(sigs: DataFrame, bits: Int): DataFrame = {
     val bandBits = bits / 4
     val bandMask = (1L << bandBits) - 1L
@@ -1010,66 +1009,9 @@ object Dedup {
   }
 
   /**
-   * Hamming near-dup pairs over ANY precomputed 64-bit signature column —
-   * the [[simHashPairs]] candidate/verify machinery detached from
-   * tokenization, so signatures that are not token-built (the perceptual
-   * dHash of [[graft.operators.Multimodal.dHash]], an externally computed
-   * fingerprint…) get the same scale shape: 4-band pigeonhole equi-join
-   * (Hamming ≤ 3 ⇒ some 16-bit band identical — never all-pairs),
-   * first-matching-band exactly-once emission, one XOR + bit_count verify.
-   *
-   * Input: `sigs` with a unique `key` column and a long `sigCol`. Output:
-   * (lid, rid, hamming) with lid < rid.
-   */
-  def hammingPairs64(sigs: DataFrame, key: String, sigCol: String,
-                     maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < 4, "4-band blocking only guarantees recall for hamming <= 3")
-    // the signature frame feeds BOTH sides of the band self-join, and for
-    // the multimodal callers it is a full codec pass (synth + decode +
-    // perceptual hash per payload) — persist the narrow (id, simhash)
-    // projection so the decode runs once, not once per join side (measured
-    // round 16: the mm_y4m_seg_neardup plan ran the whole object-space
-    // decode pipeline twice). Two longs per row; released via Api.clearCache.
-    val withBand = banded64(
-      sigs.select(col(key).as("id"), col(sigCol).as("simhash")).persistTracked, 64)
-    val xor = col("a.simhash").bitwiseXOR(col("b.simhash"))
-    withBand.alias("a")
-      .join(withBand.alias("b"),
-        col("a.band") === col("b.band") && col("a.bandval") === col("b.bandval") &&
-        col("a.id") < col("b.id") &&
-        !earlierSimBandMatches(xor, col("a.band"), 16))
-      .select(col("a.id").as("lid"), col("b.id").as("rid"),
-        bit_count(xor).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
-  /**
-   * Incremental (R×S) Hamming near-dup over ANY precomputed 64-bit
-   * signatures — [[simHashPairsRs]] detached from tokenization, so an
-   * INCOMING batch of images/audio ([[graft.operators.Multimodal.dHash]],
-   * [[graft.operators.Multimodal.wavHash]]) checks against an existing
-   * corpus with the same daily-ingest shape as the text families: candidates
-   * only on the (band, bandval) equi-join between the two sides (no
-   * self-join on either), first-matching-band exactly-once emission, one
-   * XOR + bit_count verify. Output (lid, rid, hamming), lid from `corpus`.
-   */
-  def hammingPairsRs64(corpus: DataFrame, incoming: DataFrame, key: String,
-                       sigCol: String, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < 4, "4-band blocking only guarantees recall for hamming <= 3")
-    val xor = col("a.simhash").bitwiseXOR(col("b.simhash"))
-    banded64(corpus.select(col(key).as("id"), col(sigCol).as("simhash")), 64).alias("a")
-      .join(banded64(incoming.select(col(key).as("id"), col(sigCol).as("simhash")), 64).alias("b"),
-        col("a.band") === col("b.band") && col("a.bandval") === col("b.bandval") &&
-          !earlierSimBandMatches(xor, col("a.band"), 16))
-      .select(col("a.id").as("lid"), col("b.id").as("rid"),
-        bit_count(xor).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-  }
-
-  /**
    * Materializable Hamming INDEX over ANY precomputed 64-bit signatures —
    * [[simHashIndex]]'s layout (id, simhash, band, bandval, bucket) without
-   * the tokenize+fold step, so perceptual-hash corpora get the same durable
+   * the tokenize+fold step, so fingerprint corpora get the same durable
    * daily-ingest index as text: persist with
    * `Stages.writeBucketed(index, table, "bucket", n)`, append admitted
    * batches with `appendBucketed`, and the bucket is the LOSSLESS
@@ -1083,7 +1025,8 @@ object Dedup {
         shiftleft(col("band").cast("long"), 16).bitwiseOR(col("bandval")))
 
   /**
-   * [[hammingPairsRs64]] against a prebuilt corpus [[hammingIndex64]]: the
+   * Incremental (R×S) Hamming near-dup of incoming precomputed 64-bit
+   * signatures against a prebuilt corpus [[hammingIndex64]]: the
    * incoming signatures are indexed on the fly and joined bucket-to-bucket;
    * on a `bucket`-bucketed table the corpus side joins with no exchange
    * (the [[simHashPairsRsIndexed]] argument, verbatim — the join layouts
@@ -1100,9 +1043,8 @@ object Dedup {
   /**
    * Incremental keep-set over ANY precomputed 64-bit signatures against a
    * DURABLE [[hammingIndex64]] table — the generic-signature production
-   * daily-ingest operator, giving image/audio fingerprints
-   * ([[graft.operators.Multimodal.dHash]], [[graft.operators.Multimodal.wavHash]])
-   * the exact admission lifecycle the text families have: (1) drop every
+   * daily-ingest operator, giving precomputed 64-bit fingerprints the exact
+   * admission lifecycle the text families have: (1) drop every
    * incoming item within Hamming `maxHamming` of an indexed one, (2) collapse
    * the survivors' within-batch clusters to min-id representatives
    * ([[clusterKeepIds]]), (3) with `admitTo`, append the kept items' index

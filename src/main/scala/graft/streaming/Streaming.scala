@@ -407,10 +407,9 @@ object Streaming {
 
   /**
    * Streaming GENERIC-SIGNATURE near-dup against a durable
-   * [[graft.operators.Dedup.hammingIndex64]] table — the multimodal
-   * counterpart of [[simHashAgainstIndex]]: arriving precomputed 64-bit
-   * fingerprints (perceptual dHash / audio wavHash rows, computed upstream
-   * with the flatMap operators) band statelessly into the SAME lossless
+   * [[graft.operators.Dedup.hammingIndex64]] table — the precomputed-
+   * signature counterpart of [[simHashAgainstIndex]]: arriving 64-bit
+   * fingerprints (computed upstream) band statelessly into the SAME lossless
    * bucket encoding and join the bucketed index exchange-free on the corpus
    * side. Match-reporting only (emit pairs, mutate nothing) — the admission
    * half is [[ingestHamming64]]. Semantics equal the batch
@@ -592,13 +591,10 @@ object Streaming {
       .start()
 
   /** The GENERIC-SIGNATURE mirror of [[ingestDedup]]: continuous admission
-    * of precomputed 64-bit fingerprints (perceptual dHash, audio wavHash, an
-    * external signature…) against a durable
-    * [[graft.operators.Dedup.hammingIndex64]] table via
-    * [[graft.operators.Dedup.incrementalKeepIdsHamming64Indexed]] — the
-    * streaming end of the multimodal dedup lifecycle. The stream carries
-    * (key, sigCol) rows: compute signatures upstream with the flatMap
-    * operators (they compose with streaming Datasets). Same
+    * of precomputed 64-bit fingerprints (any externally computed signature)
+    * against a durable [[graft.operators.Dedup.hammingIndex64]] table via
+    * [[graft.operators.Dedup.incrementalKeepIdsHamming64Indexed]]. The
+    * stream carries (key, sigCol) rows: compute signatures upstream. Same
     * state-in-the-table design and at-least-once admission semantics as the
     * text families. */
   def ingestHamming64(stream: DataFrame, indexTable: String, key: String,

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** [[Bench.run]]'s timing loop on the shared test session: each query is
-  * timed best-of-n, and a query that throws is named under `"failed"` and
-  * kept out of the total instead of disappearing. */
+  * timed best-of-n with its first (cold) run and every run time kept, and a
+  * query that throws is named under `"failed"` and kept out of the total
+  * instead of disappearing. */
 class BenchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,6 +32,13 @@ class BenchSpec extends SparkSpec {
       val floors = doc.select("queries_floor.*")
       assert(floors.columns.toSeq == Seq("five"))
       assert(floors.columns.forall(q => doc.select(col(s"queries_floor.$q.n")).as[Long].head() == runs))
+      // the cold number and every run time sit next to the best-of-n floor
+      val (sec, first, all) = doc.select("queries_floor.five.sec", "queries_floor.five.first",
+        "queries_floor.five.runs").as[(Double, Double, Seq[Double])].head()
+      assert(all.length == runs)
+      assert(sec == all.min)
+      assert(first == all.head)
+      assert(five == sec)
       assert(doc.select("session.cpus").as[Long].head() == spark.sparkContext.defaultParallelism)
     } finally java.nio.file.Files.deleteIfExists(out): Unit
   }

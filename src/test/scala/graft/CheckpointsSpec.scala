@@ -41,6 +41,24 @@ class CheckpointsSpec extends SparkSpec {
     assert(reliable === expected)
   }
 
+  test("clusterIds after Api.clearCache: a local cut cannot be re-collected, a reliable one can") {
+    // the final labels leaf is tracked, so clearCache drops its blocks; a
+    // localCheckpoint leaf has no lineage to recompute from
+    val local = Dedup.clusterIds(pairs, "l", "r")
+    assert(labels(local) === expected)
+    Api.clearCache()
+    val e = intercept[org.apache.spark.SparkException](local.collect())
+    assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
+    // a reliable cut reads its checkpoint files back
+    val reliable = withReliable {
+      val r = Dedup.clusterIds(pairs, "l", "r")
+      assert(labels(r) === expected)
+      Api.clearCache()
+      labels(r)
+    }
+    assert(reliable === expected)
+  }
+
   test("reliable mode writes checkpoint files to the configured dir") {
     withReliable {
       val cut = Checkpoints.cut(Seq(1, 2, 3).toDF("x"))

@@ -125,18 +125,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("JPEG near-dup: banded Hamming equi-join, no cartesian, no window") {
-    // the compressed-codec family rides the generic 4-band pigeonhole join;
-    // the pairs plan must be band-bucket equi-keyed like every other
-    // signature family (all-pairs would be quadratic in the corpus)
-    val sigs = Multimodal.dHash(
-      Multimodal.synthJpeg((0L until 30L).toDF("id"), "id").toDF(), "id").toDF()
-    val plan = finalPlan(Dedup.hammingPairs64(sigs, "id", "dhash", 3))
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("Window"), plan)
-  }
-
   test("incremental R×S minhash join: equi-join on buckets, no cartesian") {
     val corpus = (0L until 40L).map(i => (i, s"w$i x$i y$i z$i a b")).toDF("id", "txt")
     val incoming = (100L until 110L).map(i => (i, s"w$i x$i y$i z$i a b")).toDF("id", "txt")

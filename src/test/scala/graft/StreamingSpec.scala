@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.{Dedup, Multimodal, Similarity, WhitespaceTokenizer}
+import graft.operators.{Dedup, Similarity, WhitespaceTokenizer}
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -786,111 +786,6 @@ class StreamingSpec extends SparkSpec {
       val expected = (0L until 30L).toSet ++ (1 to 3).flatMap(sigExpectedKeep)
       assert(ids === expected, "index after 3 micro-batches = corpus + admissions")
     } finally spark.sql("DROP TABLE IF EXISTS graft_si_h64")
-  }
-
-  test("ingestHamming64: VIDEO signatures (y4mHash over real Y4M payloads) — stream == batch") {
-    // the video end of the multimodal admission symmetry (r14 verdict #6):
-    // real Y4M decode → middle-frame luma dHash → the SAME generic-Hamming
-    // admission loop images/audio use. Corpus = ids with id%10 != 0 (decades
-    // give engineered near-dups: same geometry, luma shift 1..9); incoming
-    // = the id%10 == 0 representatives, streamed in 3 micro-batch days and
-    // pinned row-for-row against the sequential BATCH admission on a twin
-    // index.
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.Stages
-    def vsigs(ids: Seq[Long]) =
-      Multimodal.y4mHash(
-        Multimodal.synthY4m(ids.toDF("doc_id"), "doc_id").toDF(), "id").toDF()
-    // corpus decades 0..9; incoming mixes decade representatives (id%10 == 0
-    // — within Hamming 3 of their corpus siblings → dropped) with genuinely
-    // FAR signatures (186/220/240: closed-form min Hamming to the corpus > 3
-    // and pairwise ≥ 9 apart → admitted; the y4m hash space is small, so
-    // mere decade freshness does NOT imply distance — these are computed)
-    val corpusIds = (0L until 100L).filter(_ % 10 != 0)
-    val days: Seq[Seq[Long]] =
-      Seq(Seq(0L, 10L, 186L), Seq(30L, 220L, 50L, 60L), Seq(70L, 240L, 90L))
-    try {
-      for (t <- Seq("graft_si_v64", "graft_si_v64b"))
-        Stages.writeBucketed(
-          Dedup.hammingIndex64(vsigs(corpusIds), "id", "vhash"), t, "bucket", 8)
-      // STREAM: signatures computed inside the streaming pipeline (the
-      // flatMap codec passes compose with streaming Datasets)
-      val streamKeeps = scala.collection.mutable.Map[Long, Set[Long]]()
-      val in = MemoryStream[Long]
-      val sigStream = Multimodal.y4mHash(
-        Multimodal.synthY4m(in.toDF().toDF("doc_id"), "doc_id").toDF(), "id").toDF()
-      val q = Streaming.ingestHamming64(sigStream, "graft_si_v64", "id", "vhash", 3,
-        onBatch = (kept, bid) => streamKeeps(bid) = kept.collect().map(_.getLong(0)).toSet)
-      try {
-        for (day <- days) { in.addData(day: _*); q.processAllAvailable() }
-      } finally q.stop()
-      // BATCH twin: the same days applied sequentially to the twin index
-      val batchKeeps = days.map { day =>
-        Dedup.incrementalKeepIdsHamming64Indexed(
-          spark.table("graft_si_v64b"), vsigs(day), "id", "vhash", 3,
-          admitTo = Some("graft_si_v64b"), admitBuckets = 8)
-          .collect().map(_.getLong(0)).toSet
-      }
-      assert(streamKeeps.keySet === days.indices.map(_.toLong).toSet)
-      for (d <- days.indices)
-        assert(streamKeeps(d.toLong) === batchKeeps(d), s"day $d stream == batch keep-set")
-      // at least one incoming video must be dropped as a near-dup of its
-      // decade's corpus siblings AND at least one admitted — else the radius
-      // did no work and the fixture proves nothing
-      val allKept = batchKeeps.flatten.toSet
-      assert(allKept.nonEmpty && allKept.size < days.flatten.size,
-        s"degenerate fixture: kept ${allKept.size} of ${days.flatten.size}")
-      // the two indexes converged to the same admitted id set
-      val idsOf = (t: String) =>
-        spark.table(t).select("id").distinct().collect().map(_.getLong(0)).toSet
-      assert(idsOf("graft_si_v64") === idsOf("graft_si_v64b"))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_si_v64")
-      spark.sql("DROP TABLE IF EXISTS graft_si_v64b")
-    }
-  }
-
-  test("ingestHamming64: COMPRESSED-container signatures (aviHash) — stream == batch") {
-    // the MJPEG/AVI twin of the y4m admission pin: signatures that only
-    // exist after a real RIFF walk + JPEG entropy decode, streamed through
-    // the same generic loop and pinned against sequential batch admission.
-    // aviHash's mod-15 geometry classes carry constant luma shifts, so the
-    // corpus/incoming structure mirrors the y4m decade fixture.
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.Stages
-    def vsigs(ids: Seq[Long]) =
-      Multimodal.aviHash(
-        Multimodal.synthAvi(ids.toDF("doc_id"), "doc_id").toDF(), "id").toDF()
-    val corpusIds = (0L until 120L).filter(_ % 15 != 0)
-    val days: Seq[Seq[Long]] = Seq(Seq(0L, 15L, 30L), Seq(45L, 60L, 75L), Seq(90L, 105L))
-    try {
-      for (t <- Seq("graft_si_avi", "graft_si_avib"))
-        Stages.writeBucketed(
-          Dedup.hammingIndex64(vsigs(corpusIds), "id", "vhash"), t, "bucket", 8)
-      val streamKeeps = scala.collection.mutable.Map[Long, Set[Long]]()
-      val in = MemoryStream[Long]
-      val sigStream = Multimodal.aviHash(
-        Multimodal.synthAvi(in.toDF().toDF("doc_id"), "doc_id").toDF(), "id").toDF()
-      val q = Streaming.ingestHamming64(sigStream, "graft_si_avi", "id", "vhash", 3,
-        onBatch = (kept, bid) => streamKeeps(bid) = kept.collect().map(_.getLong(0)).toSet)
-      try {
-        for (day <- days) { in.addData(day: _*); q.processAllAvailable() }
-      } finally q.stop()
-      val batchKeeps = days.map { day =>
-        Dedup.incrementalKeepIdsHamming64Indexed(
-          spark.table("graft_si_avib"), vsigs(day), "id", "vhash", 3,
-          admitTo = Some("graft_si_avib"), admitBuckets = 8)
-          .collect().map(_.getLong(0)).toSet
-      }
-      for (d <- days.indices)
-        assert(streamKeeps(d.toLong) === batchKeeps(d), s"day $d stream == batch keep-set")
-      val idsOf = (t: String) =>
-        spark.table(t).select("id").distinct().collect().map(_.getLong(0)).toSet
-      assert(idsOf("graft_si_avi") === idsOf("graft_si_avib"))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_si_avi")
-      spark.sql("DROP TABLE IF EXISTS graft_si_avib")
-    }
   }
 
   test("ingestDedupSimHash: Hamming-side admission loop across micro-batches") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB side of the BENCH_NOTES head-to-head: time registered oracle SQL
-(the reference's exact pipeline) on the sf0.1 parquet at 32 threads, warm
-best-of-2.
+(the reference's exact pipeline) on the sf0.1 parquet with one DuckDB thread
+per host core (as many as graft.LocalSession gives Spark), warm best-of-2.
 
 Usage:
   python3 tools/duck_bench.py [sfDir] [oracleJson] [q1,q2,... ]
@@ -48,9 +48,9 @@ DEFAULT_QUERIES = [
 
 WORKER = r"""
 import duckdb, glob, json, os, sys, time
-sfdir, sql, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
+sfdir, sql, runs, threads = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 con = duckdb.connect()
-con.execute("SET threads TO 32")
+con.execute(f"SET threads TO {threads}")
 try:
     con.execute("SET enable_progress_bar = false")
 except Exception:
@@ -67,6 +67,10 @@ for _ in range(runs):
 print(json.dumps({"sec": best, "rows": rows}))
 """
 
+# the host's core count, as graft.LocalSession gives Spark, so a ratio
+# compares equal thread counts
+THREADS = os.cpu_count() or 1
+
 
 def main():
     sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -74,7 +78,7 @@ def main():
     names = sys.argv[3].split(",") if len(sys.argv) > 3 else DEFAULT_QUERIES
     timeout = int(os.environ.get("DUCK_BENCH_TIMEOUT_SEC", "300"))
     sqls = json.load(open(oracle))
-    print(f"| query | DuckDB (32 threads, warm best-of-2) | rows |")
+    print(f"| query | DuckDB ({THREADS} threads, warm best-of-2) | rows |")
     print(f"|---|---|---|")
     for name in names:
         sql = sqls.get(name)
@@ -84,7 +88,7 @@ def main():
         t0 = time.time()
         try:
             out = subprocess.run(
-                [sys.executable, "-c", WORKER, sfdir, sql, "2"],
+                [sys.executable, "-c", WORKER, sfdir, sql, "2", str(THREADS)],
                 capture_output=True, text=True, timeout=timeout)
             if out.returncode != 0:
                 msg = (out.stderr or "").strip().splitlines()

@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Automated same-window DuckDB head-to-head (r14 verdict #3): for every
 headline query in a BENCH_FULL.json whose Spark floor is >= 1 s and whose
-oracle SQL is registered, time the oracle on the SAME parquet at 32 threads
+oracle SQL is registered, time the oracle on the SAME parquet with one
+DuckDB thread per host core, as many as graft.LocalSession gives Spark
 (warm best-of-2, subprocess-per-query timeout like duck_bench.py) and MERGE
 a machine-comparable block back into the artifact:
 
     "duck": {name: {"spark_sec": s, "duck_sec": d, "ratio": s/d}, ...},
-    "duck_meta": {"threads": 32, "timeout_sec": T, "min_spark_sec": 1.0,
+    "duck_meta": {"threads": N, "timeout_sec": T, "min_spark_sec": 1.0,
                   "generated_unix_ms": ...}
 
 ratio < 1 = Spark faster (the 0.27-0.75x class from BENCH_NOTES becomes a
@@ -28,9 +29,9 @@ import time
 
 WORKER = r"""
 import duckdb, glob, json, os, sys, time
-sfdir, sql, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
+sfdir, sql, runs, threads = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 con = duckdb.connect()
-con.execute("SET threads TO 32")
+con.execute(f"SET threads TO {threads}")
 try:
     con.execute("SET enable_progress_bar = false")
 except Exception:
@@ -47,11 +48,15 @@ for _ in range(runs):
 print(json.dumps({"sec": best, "rows": rows}))
 """
 
+# the host's core count, as graft.LocalSession gives Spark, so a ratio
+# compares equal thread counts
+THREADS = os.cpu_count() or 1
+
 
 def time_one(sfdir, sql, timeout):
     try:
         out = subprocess.run(
-            [sys.executable, "-c", WORKER, sfdir, sql, "2"],
+            [sys.executable, "-c", WORKER, sfdir, sql, "2", str(THREADS)],
             capture_output=True, text=True, timeout=timeout)
     except subprocess.TimeoutExpired:
         return -1.0, "DNF"
@@ -90,28 +95,18 @@ def main():
             continue
         sec, err = time_one(sfdir, sql, timeout)
         entry = {"spark_sec": round(spark_sec, 3), "duck_sec": round(sec, 3)}
-        # multimodal DECODE-witness oracles recompute a closed form — DuckDB
-        # never runs a codec there, so the ratio compares decoding against
-        # arithmetic. Flag those entries so readers (and future notes) can't
-        # mistake them for head-to-heads; the pair/join-side mm_* entries
-        # (neardup/keep/seg: DuckDB does the same n^2 Hamming work) stay
-        # comparable.
-        if name.startswith("mm_") and not any(
-                t in name for t in ("neardup", "keep", "seg")):
-            entry["codec_vs_formula"] = True
         if err:
             entry["note"] = err
             print(f"[duck_ratio] {name:28s} spark {spark_sec:7.2f} s  duck {err}")
         else:
             entry["ratio"] = round(spark_sec / sec, 3) if sec > 0 else None
-            flag = "  [codec-vs-formula]" if entry.get("codec_vs_formula") else ""
             print(f"[duck_ratio] {name:28s} spark {spark_sec:7.2f} s  "
-                  f"duck {sec:7.2f} s  ratio {entry['ratio']}{flag}")
+                  f"duck {sec:7.2f} s  ratio {entry['ratio']}")
         duck[name] = entry
         sys.stdout.flush()
 
     doc["duck"] = duck
-    doc["duck_meta"] = {"threads": 32, "timeout_sec": timeout,
+    doc["duck_meta"] = {"threads": THREADS, "timeout_sec": timeout,
                         "min_spark_sec": min_spark, "sf_dir": sfdir,
                         "generated_unix_ms": int(time.time() * 1000)}
     with open(bench_path, "w") as f:
