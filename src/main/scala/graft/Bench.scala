@@ -9,14 +9,14 @@ import scala.util.control.NonFatal
  * [[LocalSession]] and prints ONE JSON line (`metric`, `value`, `unit`,
  * `queries`, `failed`, `artifact`, `sf`); the full artifact (per-query floors
  * with their n, cold first run and every run time, the recall sidecar, the
- * session's CPU and shuffle-partition counts) goes to SPARK_GRAFT_BENCH_OUT
- * (default `BENCH_FULL.json`). Per-query time is the best of
- * SPARK_GRAFT_BENCH_RUNS runs (default 5, 1 on the stress corpus): the first
- * run pays persistence and JIT/codegen warm-up, and the reference's notebook
- * timings are likewise warm averages over n runs (BASELINE.md). Exits 1
- * when a query fails or a SPARK_GRAFT_QUERIES name is not registered.
- * Compare two builds with perfbench's interleaved legs, not with two Bench
- * artifacts.
+ * session's CPU and shuffle-partition counts and its untimed warm-up time)
+ * goes to SPARK_GRAFT_BENCH_OUT (default `BENCH_FULL.json`). Per-query time
+ * is the best of SPARK_GRAFT_BENCH_RUNS runs (default 5, 1 on the stress
+ * corpus): the first run pays persistence and JIT/codegen warm-up, and the
+ * reference's notebook timings are likewise warm averages over n runs
+ * (BASELINE.md). Exits 1 when a query fails or a SPARK_GRAFT_QUERIES name
+ * is not registered. Compare two builds with perfbench's interleaved legs,
+ * not with two Bench artifacts.
  */
 object Bench {
 
@@ -39,10 +39,6 @@ object Bench {
     // best-of-n min times the warm catalog read-back join
     "dedup_minhash_rs_indexed_docs",
     "dedup_exact_docs",
-    "ann_topk_exact",           // brute-force cosine top-k baseline
-    "ann_topk_lsh",             // bucketed scale path
-    "ann_topk_ivf",             // inverted-file scale path
-    "emb_neardup_lsh",          // bucketed embedding dedup
     "text_stats_docs",
     "winnow_overlap_docs",      // MOSS partial-overlap pairs
     "bm25_topk_docs",           // BM25 keyword retrieval
@@ -62,42 +58,11 @@ object Bench {
     "lm_bigram_docs",           // corpus-trained bigram LM quality score
     "substring_dup_docs",       // span-level exact-substring duplication
     // round-9 additions #2 — DSIR importance resampling (two bigram models +
-    // scoring pass) and the durable-IVF warm probe (index build paid by the
-    // first run only via buildTableOnce, same convention as the dedup
-    // indexed entry above)
+    // scoring pass)
     "importance_sample_docs",
-    "ann_topk_ivf_indexed",
-    // the IVF ingestion shape: threshold near-match probe against the same
-    // stored index (no ranking window — the append-mode streaming twin's
-    // exact batch plan), warm for the same buildTableOnce reason
-    "emb_neardup_ivf_indexed",
-    // two-tower RRF fusion — benched so a regression in either tower's
-    // ranking plan (BM25 tf shuffle, dense TakeOrdered) surfaces per-round
-    "hybrid_topk_docs",
-    // the production ANN admission operator (read-only form)
-    "ann_ingest_keep_embs",
     // round-10 addition — BPE model-token counting (merge training paid by
     // the FIRST run via the per-dir memo; warm runs time encode)
     "bpe_token_counts_docs",
-    // PQ ADC search over the 32x-compressed codes (codebooks + encode
-    // recomputed in-plan — still sub-second at sf0.1)
-    "ann_pq_topk",
-    // round-11: the list-pruned IVF-PQ search against the durable
-    // (id, cid, codes) index (build paid by the FIRST run via
-    // buildTableOnce; warm runs time the probe) and the IVFADC+R refined
-    // form (ADC shortlist re-ranked exact) — the production PQ paths
-    "ann_pq_ivf_topk",
-    "ann_pq_ivf_refined_topk",
-    // round-12: trained-codebook IVF-PQ (index build paid by the FIRST run
-    // via buildTableOnce — warm runs time the probe, same convention as the
-    // sampled-codebook entry) and the int8 dequantized-domain exact search
-    // (the 4× bandwidth trade)
-    "ann_pq_ivf_trained_topk",
-    "ann_topk_int8",
-    // round-13: the production PQ composition — trained codebooks +
-    // IVFADC+R exact re-rank against the durable indexes (build paid by the
-    // FIRST run via buildTableOnce; warm runs time the probe + refine)
-    "ann_pq_ivf_trained_refined_topk",
   )
 
   /** Stress profile (SPARK_GRAFT_SF_DIR containing "stress"): the 8×
@@ -158,8 +123,10 @@ object Bench {
     * queries that threw. Each `queries_floor` entry holds `sec` (the best
     * run), `n`, `first` (run 1, the cold number) and `runs` (every run time,
     * in order). A failed query is listed under `"failed"` and left out of
-    * `queries` and of the total `value`. `recall` is evaluated after the
-    * timed loop. Leaves `spark` running. */
+    * `queries` and of the total `value`. Before the first query, [[warmup]]
+    * runs once untimed; its wall time is `session.warmup_s` (null when it
+    * throws). `recall` is evaluated after the timed loop. Leaves `spark`
+    * running. */
   private[graft] def run(spark: SparkSession,
                          queries: Seq[(String, (SparkSession, String) => DataFrame)],
                          runs: Int, sfDir: String, outPath: String,
@@ -176,6 +143,15 @@ object Bench {
       fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
       (System.nanoTime() - t0) / 1e9
     }
+    // the JVM's and the session's first job would otherwise land in the
+    // first query's cold run
+    val warmupS =
+      try Some(timeOnce(warmup))
+      catch {
+        case NonFatal(t) =>
+          System.err.println(s"[bench] warm-up failed: $t")
+          None
+      }
     // best of n: the first run pays persist materialization + codegen; the
     // reference's BASELINE numbers are likewise warm averages over n runs
     val timed = queries.map { case (name, fn) =>
@@ -203,7 +179,8 @@ object Bench {
     }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val session = s""""session":{"cpus":${spark.sparkContext.defaultParallelism},""" +
-      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")}}"""
+      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""warmup_s":${warmupS.fold("null")(w => f"$w%.3f")}}"""
     val fullDoc = s"""{"metric":"total","value":$total,"unit":"sec","headline_count":${ok.size},"queries":$qs,"queries_floor":$floors,"failed":$failedJson$recall,$session,"sf":"$sfDir","generated_unix_ms":${System.currentTimeMillis()}}"""
     // a failed write must be VISIBLE in the stdout line: recall detail lives
     // only in the file, so a line advertising a path that was never written
@@ -223,22 +200,11 @@ object Bench {
       failed)
   }
 
-  /** Deterministic clustered embedding fixture: `n` vectors in `nClusters`
-    * well-separated clusters (center components and per-vector noise both
-    * hash-derived from (cluster|id, dim index) — reproducible across runs
-    * and machines, no RNG). Noise amplitude 0.15 of the center component
-    * range keeps members far closer to their own center than to any other,
-    * the geometry ANN workloads presuppose. */
-  private def clusteredEmbeddings(spark: SparkSession, n: Int, nClusters: Int,
-                                  dim: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    def unit(h: org.apache.spark.sql.Column) = // hash -> float in [-1, 1]
-      ((pmod(h, lit(2001L)) - 1000L).cast("float") / 1000.0f)
-    spark.range(n).select(col("id").cast("long").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)), j =>
-        (unit(xxhash64(col("id") % nClusters, j)) +
-          unit(xxhash64(col("id"), j, lit(7))) * lit(0.15f)).cast("float"))
-        .as("embedding"))
+  /** The fixed warm-up action: one scan of the documents table and one
+    * shuffle (a grouped count). */
+  private def warmup(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, length}
+    s.read.parquet(s"$dir/documents.parquet").groupBy(length(col("text")) % 16).count()
   }
 
   /** Content tag of a fixture file/dir: every file's (path, size, mtime)
@@ -283,13 +249,13 @@ object Bench {
   }
 
   /** Approximate-path recall vs the exact twins, emitted as a `"recall"` key
-    * of the full artifact. Skipped when the profile's tables are missing (stress corpus
-    * has no embeddings), and on SPARK_GRAFT_QUERIES runs unless
-    * SPARK_GRAFT_RECALL_ONLY=1; never fails the bench. */
+    * of the full artifact. Skipped when the profile has no documents table,
+    * and on SPARK_GRAFT_QUERIES runs unless SPARK_GRAFT_RECALL_ONLY=1; never
+    * fails the bench. */
   private def recallField(spark: SparkSession, sfDir: String): String = {
-    import graft.operators.{Dedup, JaccardJoin, Similarity, WhitespaceTokenizer}
+    import graft.operators.{Dedup, JaccardJoin, WhitespaceTokenizer}
     import org.apache.spark.sql.functions.col
-    if (!new java.io.File(s"$sfDir/embeddings.parquet").exists()) return ""
+    if (!new java.io.File(s"$sfDir/documents.parquet").exists()) return ""
     try {
       def timed[A](label: String)(body: => A): A = {
         val t0 = System.nanoTime()
@@ -298,106 +264,6 @@ object Bench {
         r
       }
       val ws = WhitespaceTokenizer()
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      // 100 query points (vs the 5 of the oracle-checked queries) for a
-      // stable estimate; same k/planes/centroid params as the registered ops
-      val q = e.where(col("vec_id") < 100)
-      val exactTopK = Similarity.topKExact(e, q, "vec_id", "embedding", 10)
-        .persist()
-      val lsh = timed("ann_lsh")(Recall.topK(exactTopK,
-        Similarity.topKLsh(e, q, "vec_id", "embedding", 10, 64, planes = 6, tables = 8)))
-      val ivf = timed("ann_ivf")(Recall.topK(exactTopK,
-        Similarity.topKIvf(e, q, "vec_id", "embedding", 10, 16, 4)))
-      val ivfKm = timed("ann_ivf_kmeans")(Recall.topK(exactTopK,
-        Similarity.topKIvfKmeans(e, q, "vec_id", "embedding", 10, 16, 4, 3)))
-      // int8 quantization's recall cost vs full-precision exact cosine (the
-      // 4× bandwidth trade priced — r11 verdict #4)
-      val int8 = timed("ann_int8")(Recall.topK(exactTopK,
-        Similarity.topKInt8(Similarity.quantizeInt8(e, "vec_id", "embedding"),
-          q, "vec_id", "embedding", 10)))
-      exactTopK.unpersist()
-      // PQ recall vs the exact-L2 twin (ADC approximates L2, not cosine):
-      // pq@10 isolates pure quantization loss (exhaustive ADC), ivfpq@10
-      // adds the nProbe-list pruning of the production composition — a
-      // codebook-quality or probe-count regression becomes a number here
-      // (round-10 verdict missing #2)
-      val exactL2 = Similarity.topKExactL2(e, q, "vec_id", "embedding", 10)
-        .persist()
-      val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", 64, 8, 16)
-      val pq = timed("ann_pq")(Recall.topK(exactL2,
-        Similarity.pqTopK(
-          Similarity.pqEncode(e, "vec_id", "embedding", cbs, 64, 8),
-          cbs, q, "vec_id", "embedding", 10)))
-      val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 16)
-      val rcbs = Similarity.pqResidualCodebooks(e, "vec_id", "embedding",
-        cents, 64, 8, 64)
-      val pqIdx = Similarity.pqIvfIndex(e, "vec_id", "embedding", cents, rcbs, 64, 8)
-        .persist()
-      val ivfPq = timed("ann_ivfpq")(Recall.topK(exactL2,
-        Similarity.pqTopKIvfIndexed(pqIdx,
-          cents, rcbs, q, "vec_id", "embedding", 10, 4)))
-      val ivfPqRef = timed("ann_ivfpq_ref")(Recall.topK(exactL2,
-        Similarity.pqTopKIvfRefined(pqIdx,
-          Similarity.ivfIndex(e, "vec_id", "embedding", cents),
-          cents, rcbs, q, "vec_id", "embedding", 10, 4, 100)))
-      pqIdx.unpersist(); exactL2.unpersist()
-      // IVF on a CLUSTERED fixture: the driver's embeddings are isotropic
-      // random vectors, where IVF recall has a ~0.5 structural ceiling at
-      // nProbe/nCentroids = 1/4 regardless of centroid quality (BENCH_NOTES
-      // round 6/7) — a centroid-quality regression is invisible there. Real
-      // embedding corpora are clustered, so measure ivf and kmeans-ivf on a
-      // deterministic 16-cluster fixture too (hash-derived, no RNG): THESE
-      // are the numbers that move when kmeansCentroids breaks.
-      val ce = clusteredEmbeddings(spark, 2000, 16, 64)
-        .persist()
-      val cq = ce.where(col("vec_id") < 100)
-      val cExact = Similarity.topKExact(ce, cq, "vec_id", "embedding", 10).persist()
-      val cIvf = timed("ann_ivf_clus")(Recall.topK(cExact,
-        Similarity.topKIvf(ce, cq, "vec_id", "embedding", 10, 16, 4)))
-      val cIvfKm = timed("ann_ivf_km_clus")(Recall.topK(cExact,
-        Similarity.topKIvfKmeans(ce, cq, "vec_id", "embedding", 10, 16, 4, 3)))
-      // PQ on the same clustered fixture (vs exact L2 — ADC's metric): on
-      // isotropic random vectors a 16-entry/block codebook has the same
-      // structural recall ceiling raw IVF does, so like ivf_clustered these
-      // are the lines that move when codebook quality breaks
-      val cExactL2 = Similarity.topKExactL2(ce, cq, "vec_id", "embedding", 10)
-        .persist()
-      val cCbs = Similarity.pqCodebooks(ce, "vec_id", "embedding", 64, 8, 16)
-      val cPq = timed("ann_pq_clus")(Recall.topK(cExactL2,
-        Similarity.pqTopK(
-          Similarity.pqEncode(ce, "vec_id", "embedding", cCbs, 64, 8),
-          cCbs, cq, "vec_id", "embedding", 10)))
-      val cCents = Similarity.sampleCentroids(ce, "vec_id", "embedding", 16)
-      val cRCbs = Similarity.pqResidualCodebooks(ce, "vec_id", "embedding",
-        cCents, 64, 8, 64)
-      val cPqIdx = Similarity.pqIvfIndex(ce, "vec_id", "embedding", cCents, cRCbs, 64, 8)
-        .persist()
-      val cIvfPq = timed("ann_ivfpq_clus")(Recall.topK(cExactL2,
-        Similarity.pqTopKIvfIndexed(cPqIdx,
-          cCents, cRCbs, cq, "vec_id", "embedding", 10, 4)))
-      val cIvfPqRef = timed("ann_ivfpq_ref_clus")(Recall.topK(cExactL2,
-        Similarity.pqTopKIvfRefined(cPqIdx,
-          Similarity.ivfIndex(ce, "vec_id", "embedding", cCents),
-          cCents, cRCbs, cq, "vec_id", "embedding", 10, 4, 100)))
-      // TRAINED codebooks (1 Lloyd round per block — the registered
-      // ann_pq_ivf_trained_topk's construction): the gain over the sampled
-      // k=64 codebooks is now a gated number (r11 verdict #3)
-      val cTCbs = Similarity.pqTrainedCodebooks(ce, "vec_id", "embedding",
-        cCents, 64, 8, 64, iters = 1)
-      val cTIdx = Similarity.pqIvfIndex(ce, "vec_id", "embedding", cCents, cTCbs, 64, 8)
-        .persist()
-      val cIvfPqTr = timed("ann_ivfpq_trained_clus")(Recall.topK(cExactL2,
-        Similarity.pqTopKIvfIndexed(cTIdx,
-          cCents, cTCbs, cq, "vec_id", "embedding", 10, 4)))
-      // the production composition's quality number (r12 verdict #3):
-      // refined re-rank should dominate codebook choice — expect ≈ the
-      // sampled-codebook refined 0.92, and a material gap IS a finding
-      val cIvfPqTrRef = timed("ann_ivfpq_tr_ref_clus")(Recall.topK(cExactL2,
-        Similarity.pqTopKIvfRefined(cTIdx,
-          Similarity.ivfIndex(ce, "vec_id", "embedding", cCents),
-          cCents, cTCbs, cq, "vec_id", "embedding", 10, 4, 100)))
-      cTIdx.unpersist()
-      cPqIdx.unpersist(); cExactL2.unpersist(); cExact.unpersist(); ce.unpersist()
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val exactPairs = timed("exact_pairs")(cachedBaseline(spark,
         s"$sfDir/documents.parquet", "exact_pairs")(
@@ -422,7 +288,7 @@ object Bench {
         Dedup.minHashPairsRs(corpus, incoming, "doc_id", "text", ws, 0.9), "lid", "rid"))
       exactRs.unpersist()
       Api.clearCache()
-      f""","recall":{"ann_lsh_at10":$lsh%.4f,"ann_ivf_at10":$ivf%.4f,"ann_ivf_kmeans_at10":$ivfKm%.4f,"ann_int8_at10":$int8%.4f,"ann_pq_at10":$pq%.4f,"ann_ivfpq_at10":$ivfPq%.4f,"ann_ivfpq_refined_at10":$ivfPqRef%.4f,"ann_ivf_clustered_at10":$cIvf%.4f,"ann_ivf_kmeans_clustered_at10":$cIvfKm%.4f,"ann_pq_clustered_at10":$cPq%.4f,"ann_ivfpq_clustered_at10":$cIvfPq%.4f,"ann_ivfpq_trained_clustered_at10":$cIvfPqTr%.4f,"ann_ivfpq_trained_refined_clustered_at10":$cIvfPqTrRef%.4f,"ann_ivfpq_refined_clustered_at10":$cIvfPqRef%.4f,"minhash_pairs":$mh%.4f,"simhash_pairs":$sh%.4f,"minhash_rs_pairs":$mhRs%.4f}"""
+      f""","recall":{"minhash_pairs":$mh%.4f,"simhash_pairs":$sh%.4f,"minhash_rs_pairs":$mhRs%.4f}"""
     } catch {
       case t: Throwable =>
         System.err.println(s"[bench] recall sidecar failed: $t")

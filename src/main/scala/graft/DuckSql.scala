@@ -190,7 +190,7 @@ FROM (
   FROM (${evalCountsNorm(gtSql, sjSql)}))"""
 
   // -------------------------------------------------------------------------
-  // Text-analysis / dedup / ANN oracles (graft.operators.*)
+  // Text-analysis / dedup oracles (graft.operators.*)
   // -------------------------------------------------------------------------
 
   /** Whitespace bag tokens as a list expression over `$text` (case kept). */
@@ -678,540 +678,6 @@ SELECT id, CAST(k AS BIGINT) AS chunk_idx,
   CAST(length(substring(hx, k*$stride*2+1, ${2 * maxTokens})) // 2 AS BIGINT) AS n_tokens,
   substring(hx, k*$stride*2+1, ${2 * maxTokens}) AS chunk_hex
 FROM (SELECT id, hx, unnest(generate_series(0, nwin - 1)) AS k FROM wins)"""
-  }
-
-  /** Double-precision sequential-fold cosine between two embedding columns
-    * (matches Spark's zip_with + aggregate fold). */
-  private def cosExpr(a: String, b: String): String =
-    s"""(list_sum(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
- / (sqrt(list_sum(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))))
-  * sqrt(list_sum(list_transform(generate_series(1, len($b)), i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))))))"""
-
-  /** Double-precision sequential-fold squared-L2 distance (matches Spark's
-    * zip_with + aggregate fold — the cosExpr rule). */
-  private def l2Expr(a: String, b: String): String =
-    s"""list_sum(list_transform(generate_series(1, len($a)),
- i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))))"""
-
-  /** The PQ sample/codebook/encode CTE chain shared by [[annPqCodes]] and
-    * [[annPqTopK]] — mirrors Similarity.pqCodebooks + pqEncode: md5-sample
-    * codes, per-block slices, argmin by (squared-L2, code). */
-  private def pqEncCtes(table: String, key: String, vec: String,
-                        dim: Int, m: Int, k: Int): String = {
-    val bd = dim / m
-    s"""samp AS (
-  SELECT sid, sv, CAST(rn - 1 AS INT) AS code FROM (
-    SELECT $key AS sid, $vec AS sv,
-      row_number() OVER (ORDER BY md5(CAST($key AS VARCHAR)), $key) AS rn
-    FROM $table) WHERE rn <= $k),
-cb AS (
-  SELECT CAST(j AS INT) AS j, code, sv[j*$bd+1 : j*$bd+$bd] AS cvec
-  FROM samp, range(0, $m) t(j)),
-enc AS (
-  SELECT id, j, code FROM (
-    SELECT e.$key AS id, c.j, c.code,
-      row_number() OVER (PARTITION BY e.$key, c.j
-        ORDER BY ${l2Expr(s"e.$vec[c.j*$bd+1 : c.j*$bd+$bd]", "c.cvec")}, c.code) AS rn
-    FROM $table e, cb c)
-  WHERE rn = 1)"""
-  }
-
-  /** Mirrors Similarity.pqEncode ∘ pqCodebooks: per-document PQ codes. */
-  def annPqCodes(table: String, key: String, vec: String,
-                 dim: Int, m: Int, k: Int): String =
-    s"""WITH ${pqEncCtes(table, key, vec, dim, m, k)}
-SELECT id, array_to_string(list(code ORDER BY j), ',') AS pq_codes_csv
-FROM enc GROUP BY id"""
-
-  /** Mirrors Similarity.pqTopK: ADC ranking against the reconstructed
-    * vectors (per-block codebook entries concatenated in block order). */
-  def annPqTopK(table: String, key: String, vec: String, queryPred: String,
-                kNN: Int, dim: Int, m: Int, k: Int): String =
-    s"""WITH ${pqEncCtes(table, key, vec, dim, m, k)},
-recon AS (
-  SELECT id, flatten(list(cvec ORDER BY j)) AS rv
-  FROM enc JOIN cb USING (j, code)
-  GROUP BY id)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT q.$key AS query_id, r.id AS neighbor_id,
-    row_number() OVER (PARTITION BY q.$key
-      ORDER BY ${l2Expr(s"q.$vec", "r.rv")}, r.id) AS rank
-  FROM $table q JOIN recon r ON r.id != q.$key
-  WHERE $queryPred)
-WHERE rank <= $kNN"""
-
-  /** Mirrors Similarity.pqTopKIvfIndexed ∘ pqIvfIndex ∘ pqResidualCodebooks:
-    * the IVF-PQ composition — md5-sample centroids, nearest-centroid list
-    * assignment (the [[annTopKIvf]] CTEs), per-row RESIDUAL `v − cvec(cid)`
-    * in DOUBLE, residual-space codebooks (md5-sample of residuals, sliced
-    * per block), residual encode by per-block (L2², code) argmin, ABSOLUTE
-    * reconstruction `cvec + concatenated codewords`, then ADC ranking ONLY
-    * within each query's nProbe nearest lists. Every arithmetic form (the
-    * double subtraction/addition element-wise, the ordered L2 folds) is the
-    * exact IEEE sequence the Spark side computes, so the whole composition
-    * hash-matches. */
-  def annPqIvfTopK(table: String, key: String, vec: String, queryPred: String,
-                   kNN: Int, nCentroids: Int, nProbe: Int,
-                   dim: Int, m: Int, k: Int): String =
-    s"""WITH ${pqIvfCtes(table, key, vec, queryPred, nCentroids, nProbe, dim, m, k)}
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT p.query_id AS query_id, r.id AS neighbor_id,
-    row_number() OVER (PARTITION BY p.query_id
-      ORDER BY ${l2Expr("p.qv", "r.rv")}, r.id) AS rank
-  FROM probes p JOIN recon_abs r USING (cid)
-  WHERE r.id != p.query_id)
-WHERE rank <= $kNN"""
-
-  /** Mirrors Similarity.pqTopKIvfRefined (Jégou §V, IVFADC+R): the
-    * [[annPqIvfTopK]] ADC ranking truncated at `refine` becomes a shortlist,
-    * which re-ranks by EXACT squared-L2 against the full-precision vectors.
-    * `trainRounds > 0` runs that many per-block Lloyd rounds between codebook
-    * sampling and encoding (the [[annPqIvfTrainedTopK]] construction) — the
-    * production composition, trained codebooks + exact re-rank, oracled as
-    * one chain. */
-  def annPqIvfRefinedTopK(table: String, key: String, vec: String,
-                          queryPred: String, kNN: Int, nCentroids: Int,
-                          nProbe: Int, dim: Int, m: Int, k: Int,
-                          refine: Int, trainRounds: Int = 0): String =
-    s"""WITH ${pqIvfCtes(table, key, vec, queryPred, nCentroids, nProbe, dim, m, k, trainRounds)},
-short AS (
-  SELECT query_id, qv, neighbor_id FROM (
-    SELECT p.query_id AS query_id, p.qv AS qv, r.id AS neighbor_id,
-      row_number() OVER (PARTITION BY p.query_id
-        ORDER BY ${l2Expr("p.qv", "r.rv")}, r.id) AS rank
-    FROM probes p JOIN recon_abs r USING (cid)
-    WHERE r.id != p.query_id)
-  WHERE rank <= $refine)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT s.query_id AS query_id, s.neighbor_id AS neighbor_id,
-    row_number() OVER (PARTITION BY s.query_id
-      ORDER BY ${l2Expr("s.qv", s"e.$vec")}, s.neighbor_id) AS rank
-  FROM short s JOIN $table e ON e.$key = s.neighbor_id)
-WHERE rank <= $kNN"""
-
-  /** Mirrors Similarity.pqTopKIvfIndexed over pqTrainedCodebooks — the
-    * IVF-PQ composition with `trainRounds` Lloyd rounds of per-block k-means
-    * over the corpus residuals between sampling and encoding. Each round is
-    * one (assign → decimal-mean → coalesce) CTE triple per the
-    * [[annTopKIvfKmeansN]] construction (same FLOAT-snap determinism
-    * argument, applied per block — the means' decimal-vs-double discrepancy
-    * is ~2⁻⁵² relative, far inside the float cast's 2⁻²⁴ grid, so both
-    * engines snap to identical codewords each round and equality composes
-    * by induction). */
-  def annPqIvfTrainedTopK(table: String, key: String, vec: String,
-                          queryPred: String, kNN: Int, nCentroids: Int,
-                          nProbe: Int, dim: Int, m: Int, k: Int,
-                          trainRounds: Int): String =
-    s"""WITH ${pqIvfCtes(table, key, vec, queryPred, nCentroids, nProbe, dim, m, k, trainRounds)}
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT p.query_id AS query_id, r.id AS neighbor_id,
-    row_number() OVER (PARTITION BY p.query_id
-      ORDER BY ${l2Expr("p.qv", "r.rv")}, r.id) AS rank
-  FROM probes p JOIN recon_abs r USING (cid)
-  WHERE r.id != p.query_id)
-WHERE rank <= $kNN"""
-
-  /** The shared IVF-PQ CTE chain of [[annPqIvfTopK]]/[[annPqIvfRefinedTopK]]/
-    * [[annPqIvfTrainedTopK]]: cents → assign → residuals → residual
-    * codebooks (md5 sample = cb0, then `trainRounds` per-block Lloyd rounds)
-    * → encode → absolute reconstruction → probes. */
-  private def pqIvfCtes(table: String, key: String, vec: String,
-                        queryPred: String, nCentroids: Int, nProbe: Int,
-                        dim: Int, m: Int, k: Int,
-                        trainRounds: Int = 0): String = {
-    val bd = dim / m
-    // per-block Lloyd rounds over the corpus residual slices (mirrors
-    // Similarity.pqTrainedCodebooks): blocks explode once, each round
-    // assigns by (L2², code) argmin against the previous codebooks and
-    // recomputes per-element means — decimal-exact sum, FLOAT snap, back to
-    // DOUBLE — with empty cells keeping their previous codeword
-    val trainCtes =
-      if (trainRounds == 0) ""
-      else s"""blocks AS (
-  SELECT r.id AS id, CAST(j AS INT) AS j, r.rv[j*$bd+1 : j*$bd+$bd] AS bv
-  FROM resid r, range(0, $m) t(j)),
-""" + (0 until trainRounds).map { r =>
-        s"""tassign$r AS (
-  SELECT j, code, bv FROM (
-    SELECT b.j AS j, c.code AS code, b.bv AS bv,
-      row_number() OVER (PARTITION BY b.id, b.j
-        ORDER BY ${l2Expr("b.bv", "c.cvec")}, c.code) AS rn
-    FROM blocks b JOIN cb$r c ON c.j = b.j)
-  WHERE rn = 1),
-tmeans$r AS (
-  SELECT j, code, list(mx ORDER BY e) AS mvec FROM (
-    SELECT j, code, ee AS e,
-      CAST(CAST(CAST(SUM(CAST(bv[ee] AS DECIMAL(38,18))) AS DOUBLE) / COUNT(*)
-        AS FLOAT) AS DOUBLE) AS mx
-    FROM tassign$r, generate_series(1, $bd) t(ee)
-    GROUP BY j, code, ee)
-  GROUP BY j, code),
-cb${r + 1} AS (
-  SELECT c.j AS j, c.code AS code, coalesce(m.mvec, c.cvec) AS cvec
-  FROM cb$r c LEFT JOIN tmeans$r m USING (j, code)),
-"""
-      }.mkString
-    s"""cents AS (
-  SELECT $key AS cid, $vec AS cvec FROM $table
-  ORDER BY md5(CAST($key AS VARCHAR)), $key LIMIT $nCentroids),
-assign AS (
-  SELECT id, cid FROM (
-    SELECT e.$key AS id, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.$key
-        ORDER BY ${cosExpr(s"e.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table e, cents c)
-  WHERE rn = 1),
-resid AS (
-  SELECT a.id AS id, a.cid AS cid,
-    list_transform(generate_series(1, $dim),
-      i -> CAST(e.$vec[i] AS DOUBLE) - CAST(c.cvec[i] AS DOUBLE)) AS rv
-  FROM assign a
-  JOIN $table e ON e.$key = a.id
-  JOIN cents c ON c.cid = a.cid),
-samp AS (
-  SELECT sv, CAST(rn - 1 AS INT) AS code FROM (
-    SELECT rv AS sv, row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR)), id) AS rn
-    FROM resid) WHERE rn <= $k),
-cb0 AS (
-  SELECT CAST(j AS INT) AS j, code, sv[j*$bd+1 : j*$bd+$bd] AS cvec
-  FROM samp, range(0, $m) t(j)),
-${trainCtes}cb AS (
-  SELECT j, code, cvec FROM cb$trainRounds),
-enc AS (
-  SELECT id, j, code FROM (
-    SELECT r.id AS id, c.j, c.code,
-      row_number() OVER (PARTITION BY r.id, c.j
-        ORDER BY ${l2Expr(s"r.rv[c.j*$bd+1 : c.j*$bd+$bd]", "c.cvec")}, c.code) AS rn
-    FROM resid r, cb c)
-  WHERE rn = 1),
-recon AS (
-  SELECT id, flatten(list(cvec ORDER BY j)) AS rr
-  FROM enc JOIN cb USING (j, code)
-  GROUP BY id),
-recon_abs AS (
-  SELECT a.id AS id, a.cid AS cid,
-    list_transform(generate_series(1, $dim),
-      i -> CAST(c.cvec[i] AS DOUBLE) + r.rr[i]) AS rv
-  FROM assign a
-  JOIN recon r ON r.id = a.id
-  JOIN cents c ON c.cid = a.cid),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.$key AS query_id, q.$vec AS qv, c.cid AS cid,
-      row_number() OVER (PARTITION BY q.$key
-        ORDER BY ${cosExpr(s"q.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table q, cents c WHERE $queryPred)
-  WHERE rn <= $nProbe)"""
-  }
-
-  /** Mirrors Similarity.topKExact (rank-only output). */
-  def annTopKExact(table: String, key: String, vec: String,
-                   queryPred: String, k: Int): String =
-    s"""WITH q AS (SELECT $key AS query_id, $vec AS qv FROM $table WHERE $queryPred),
-sims AS (
-  SELECT q.query_id, e.$key AS neighbor_id, ${cosExpr("q.qv", s"e.$vec")} AS sim
-  FROM q, $table e WHERE e.$key != q.query_id)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM sims)
-WHERE rank <= $k"""
-
-  /** Mirrors Similarity.nearDuplicatesExact. */
-  def embNearDupExact(table: String, key: String, vec: String, minCosine: Double): String =
-    s"""SELECT a.$key AS lid, b.$key AS rid, ${cosExpr(s"a.$vec", s"b.$vec")} AS sim
-FROM $table a, $table b
-WHERE a.$key < b.$key AND ${cosExpr(s"a.$vec", s"b.$vec")} >= ${d(minCosine)}"""
-
-  /** Mirrors Similarity.nearMatchesIvfIndexed: same deterministic centroids
-    * and list assignment as [[annTopKIvf]], then every in-list pair at
-    * cosine >= minCosine — threshold filter instead of a ranking window, so
-    * the sim DOUBLES land in the hashed projection (cosExpr is the
-    * IEEE-exact ordered fold both engines compute identically). */
-  def annNearMatchIvf(table: String, key: String, vec: String,
-                      queryPred: String, minCosine: Double, nCentroids: Int,
-                      nProbe: Int): String =
-    s"""WITH cents AS (
-  SELECT $key AS cid, $vec AS cvec FROM $table
-  ORDER BY md5(CAST($key AS VARCHAR)), $key LIMIT $nCentroids),
-assign AS (
-  SELECT id, cid, v FROM (
-    SELECT e.$key AS id, e.$vec AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.$key
-        ORDER BY ${cosExpr(s"e.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table e, cents c)
-  WHERE rn = 1),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.$key AS query_id, q.$vec AS qv, c.cid AS cid,
-      row_number() OVER (PARTITION BY q.$key
-        ORDER BY ${cosExpr(s"q.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table q, cents c WHERE $queryPred)
-  WHERE rn <= $nProbe)
-SELECT query_id, neighbor_id, sim FROM (
-  SELECT p.query_id AS query_id, a.id AS neighbor_id,
-    ${cosExpr("p.qv", "a.v")} AS sim
-  FROM probes p JOIN assign a USING (cid) WHERE a.id != p.query_id)
-WHERE sim >= ${d(minCosine)}"""
-
-  /** Mirrors Retrieval.hybridTopK: RRF fusion of the BM25 pool (query doc
-    * dropped, re-ranked) and the self-excluding exact-cosine pool. Integer
-    * ranks feed the fixed two-term rational score (DuckDB float literals are
-    * DOUBLEs, so `1.0 / (k + rank)` is the same IEEE division Spark runs). */
-  def hybridTopK(docsTable: String, docKey: String, textCol: String,
-                 embTable: String, embKey: String, vecCol: String,
-                 terms: Seq[String], queryVecId: Long, k: Int, poolSize: Int,
-                 kRrf: Int, k1: Double, b: Double): String = {
-    val bmSql = bm25TopK(docsTable, docKey, textCol, terms, poolSize, k1, b)
-    val annSql = annTopKExact(embTable, embKey, vecCol,
-      s"$embKey = $queryVecId", poolSize)
-    s"""WITH bm AS (
-  SELECT id, CAST(row_number() OVER (ORDER BY score DESC, id) AS BIGINT) AS bm25_rank
-  FROM ($bmSql) WHERE id != $queryVecId),
-ann AS (SELECT neighbor_id AS id, rank AS ann_rank FROM ($annSql))
-SELECT id, rrf_score, bm25_rank, ann_rank FROM (
-  SELECT coalesce(bm.id, ann.id) AS id,
-    coalesce(1.0 / ($kRrf + bm.bm25_rank), 0.0)
-      + coalesce(1.0 / ($kRrf + ann.ann_rank), 0.0) AS rrf_score,
-    coalesce(bm.bm25_rank, -1) AS bm25_rank,
-    coalesce(ann.ann_rank, -1) AS ann_rank
-  FROM bm FULL OUTER JOIN ann ON bm.id = ann.id)
-ORDER BY rrf_score DESC, id LIMIT $k"""
-  }
-
-  /** Mirrors Similarity.ingestKeepIdsIndexed end to end: corpus-sampled
-    * centroids, stage-1 drop of incoming embeddings with an in-probed-list
-    * corpus match, stage-2 min-id representatives of the survivors'
-    * within-batch clusters (the [[clusterIds]] recursive closure — detection
-    * is asymmetric, the closure symmetrizes, matching the Spark side's
-    * clusterKeepIds). Fragments are inlined, not CTEs, because the closure
-    * is its own WITH RECURSIVE statement. Output: one `$key` column. */
-  def annIngestKeep(table: String, key: String, vec: String,
-                    corpusPred: String, incomingPred: String,
-                    minCosine: Double, nCentroids: Int, nProbe: Int): String = {
-    val corpus = s"(SELECT $key AS id, $vec AS v FROM $table WHERE $corpusPred)"
-    val inc = s"(SELECT $key AS id, $vec AS v FROM $table WHERE $incomingPred)"
-    val cents =
-      s"(SELECT id AS cid, v AS cvec FROM $corpus c0 ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT $nCentroids)"
-    def assign(src: String) =
-      s"""(SELECT id, v, cid FROM (
-    SELECT e.id AS id, e.v AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.id
-        ORDER BY ${cosExpr("e.v", "c.cvec")} DESC, c.cid) AS rn
-    FROM $src e, $cents c) WHERE rn = 1)"""
-    def probes(src: String) =
-      s"""(SELECT id, v, cid FROM (
-    SELECT q.id AS id, q.v AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY q.id
-        ORDER BY ${cosExpr("q.v", "c.cvec")} DESC, c.cid) AS rn
-    FROM $src q, $cents c) WHERE rn <= $nProbe)"""
-    val dropped =
-      s"""(SELECT DISTINCT p.id AS id FROM ${probes(inc)} p JOIN ${assign(corpus)} a USING (cid)
-  WHERE a.id != p.id AND ${cosExpr("p.v", "a.v")} >= ${d(minCosine)})"""
-    val surv = s"(SELECT id, v FROM $inc i WHERE id NOT IN (SELECT id FROM $dropped))"
-    val pairs =
-      s"""SELECT p.id AS l, a.id AS r FROM ${probes(surv)} p JOIN ${assign(surv)} a USING (cid)
-  WHERE a.id != p.id AND ${cosExpr("p.v", "a.v")} >= ${d(minCosine)}"""
-    s"""SELECT s.id AS $key FROM $surv s
-WHERE s.id NOT IN (SELECT id FROM (${clusterIds(pairs)}) WHERE cluster_id != id)"""
-  }
-
-  /** Mirrors Similarity.quantizeInt8: symmetric per-vector int8 quantization
-    * with dequantization error (round is half-away-from-zero on both engines). */
-  def quantizeInt8(table: String, key: String, vec: String): String =
-    s"""SELECT id, scale,
-  array_to_string(list_transform(v, x -> CASE WHEN scale = 0 THEN 0
-    ELSE CAST(round(CAST(x AS DOUBLE) / scale) AS INTEGER) END), ',') AS qvec_csv,
-  list_max(list_transform(v, x -> abs(CAST(x AS DOUBLE) -
-    CAST(CASE WHEN scale = 0 THEN 0
-      ELSE CAST(round(CAST(x AS DOUBLE) / scale) AS INTEGER) END AS DOUBLE) * scale)))
-    AS max_abs_err
-FROM (
-  SELECT $key AS id, $vec AS v,
-    list_max(list_transform($vec, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-  FROM $table)"""
-
-  /** Mirrors Similarity.topKInt8 ∘ quantizeInt8: full-precision queries
-    * ranked against the DEQUANTIZED int8 corpus (q_j·scale in DOUBLE — round
-    * is half-away-from-zero on both engines, so the whole path is exact). */
-  def annTopKInt8(table: String, key: String, vec: String,
-                  queryPred: String, k: Int): String =
-    s"""WITH deq AS (
-  SELECT id, list_transform(v, x -> CAST(CASE WHEN scale = 0 THEN 0
-      ELSE CAST(round(CAST(x AS DOUBLE) / scale) AS INTEGER) END AS DOUBLE) * scale) AS dv
-  FROM (
-    SELECT $key AS id, $vec AS v,
-      list_max(list_transform($vec, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-    FROM $table)),
-q AS (SELECT $key AS query_id, $vec AS qv FROM $table WHERE $queryPred),
-sims AS (
-  SELECT q.query_id, d.id AS neighbor_id, ${cosExpr("q.qv", "d.dv")} AS sim
-  FROM q, deq d WHERE d.id != q.query_id)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM sims)
-WHERE rank <= $k"""
-
-  /** Mirrors Similarity.topKIvf: deterministic md5-sampled centroids, nearest-
-    * centroid inverted lists, nProbe-list probe with exact re-rank. */
-  def annTopKIvf(table: String, key: String, vec: String, queryPred: String,
-                 k: Int, nCentroids: Int, nProbe: Int): String =
-    s"""WITH cents AS (
-  SELECT $key AS cid, $vec AS cvec FROM $table
-  ORDER BY md5(CAST($key AS VARCHAR)), $key LIMIT $nCentroids),
-assign AS (
-  SELECT id, cid, v FROM (
-    SELECT e.$key AS id, e.$vec AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.$key
-        ORDER BY ${cosExpr(s"e.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table e, cents c)
-  WHERE rn = 1),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.$key AS query_id, q.$vec AS qv, c.cid AS cid,
-      row_number() OVER (PARTITION BY q.$key
-        ORDER BY ${cosExpr(s"q.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table q, cents c WHERE $queryPred)
-  WHERE rn <= $nProbe)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT p.query_id AS query_id, a.id AS neighbor_id,
-    row_number() OVER (PARTITION BY p.query_id
-      ORDER BY ${cosExpr("p.qv", "a.v")} DESC, a.id) AS rank
-  FROM probes p JOIN assign a USING (cid) WHERE a.id != p.query_id)
-WHERE rank <= $k"""
-
-  /** Mirrors Similarity.topKIvfKmeans at iters = 1 — kept as the named
-    * single-round form the registered `ann_topk_ivf_kmeans1` query uses. */
-  def annTopKIvfKmeans1(table: String, key: String, vec: String,
-                        queryPred: String, k: Int, nCentroids: Int,
-                        nProbe: Int, dim: Int): String =
-    annTopKIvfKmeansN(table, key, vec, queryPred, k, nCentroids, nProbe, dim, 1)
-
-  /** Mirrors Similarity.topKIvfKmeans at ANY iteration count — `iters`
-    * chained Lloyd rounds, one (assignᵣ → meansᵣ → centsᵣ₊₁) CTE triple per
-    * round, generated the way [[graft.operators.Similarity.kmeansCentroids]]
-    * loops. Each round: md5-sample init, nearest-centroid assignment,
-    * per-element mean (exact decimal(38,18) sum, then divide and cast to
-    * FLOAT — DuckDB's decimal division goes through DOUBLE while Spark
-    * divides exactly at scale 18, but both approximate the exact quotient
-    * within 2^-52 relative, far inside the final FLOAT cast's 2^-24
-    * rounding), empty lists keep their previous centroid (LEFT JOIN +
-    * coalesce = Spark's coalesce(mvec, cvec)). The float cast SNAPS both
-    * engines to identical centroids after every round, so equality composes
-    * by induction across rounds — what makes the 3-iter registered query
-    * oracle-expressible after all (it was the ANN family's one remaining
-    * rows-only-by-design entry). Known residual risk, quantified: a mean
-    * whose exact value lies within ~2^-53 relative of a float rounding
-    * boundary could snap differently (P ≈ 2^-28 per value; 16 cents ×
-    * 64 dims × 3 rounds ≈ 3·10³ lotteries → ~10^-5 per dataset) — if this
-    * oracle ever flakes on new data, that lottery is the first suspect and
-    * the fallback is re-registering the 3-iter form rows-only. Probe engine
-    * as [[annTopKIvf]] over the final centroids. */
-  def annTopKIvfKmeansN(table: String, key: String, vec: String,
-                        queryPred: String, k: Int, nCentroids: Int,
-                        nProbe: Int, dim: Int, iters: Int): String = {
-    require(iters >= 1, s"need at least one Lloyd round, got $iters")
-    val rounds = (0 until iters).map { r =>
-      s"""assign$r AS (
-  SELECT cid, v FROM (
-    SELECT e.$vec AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.$key
-        ORDER BY ${cosExpr(s"e.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table e, cents$r c)
-  WHERE rn = 1),
-means$r AS (
-  SELECT cid, list(m ORDER BY j) AS mvec FROM (
-    SELECT cid, jj AS j,
-      CAST(CAST(SUM(CAST(v[jj] AS DECIMAL(38,18))) AS DOUBLE) / COUNT(*) AS FLOAT) AS m
-    FROM assign$r, generate_series(1, $dim) t(jj)
-    GROUP BY cid, jj)
-  GROUP BY cid),
-cents${r + 1} AS (
-  SELECT c.cid AS cid, coalesce(m.mvec, c.cvec) AS cvec
-  FROM cents$r c LEFT JOIN means$r m USING (cid))"""
-    }.mkString(",\n")
-    val fin = s"cents$iters"
-    s"""WITH cents0 AS (
-  SELECT $key AS cid, $vec AS cvec FROM $table
-  ORDER BY md5(CAST($key AS VARCHAR)), $key LIMIT $nCentroids),
-$rounds,
-assign AS (
-  SELECT id, cid, v FROM (
-    SELECT e.$key AS id, e.$vec AS v, c.cid AS cid,
-      row_number() OVER (PARTITION BY e.$key
-        ORDER BY ${cosExpr(s"e.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table e, $fin c)
-  WHERE rn = 1),
-probes AS (
-  SELECT query_id, qv, cid FROM (
-    SELECT q.$key AS query_id, q.$vec AS qv, c.cid AS cid,
-      row_number() OVER (PARTITION BY q.$key
-        ORDER BY ${cosExpr(s"q.$vec", "c.cvec")} DESC, c.cid) AS rn
-    FROM $table q, $fin c WHERE $queryPred)
-  WHERE rn <= $nProbe)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT p.query_id AS query_id, a.id AS neighbor_id,
-    row_number() OVER (PARTITION BY p.query_id
-      ORDER BY ${cosExpr("p.qv", "a.v")} DESC, a.id) AS rank
-  FROM probes p JOIN assign a USING (cid) WHERE a.id != p.query_id)
-WHERE rank <= $k"""
-  }
-
-  /** Random-hyperplane LSH bucket of a vector expression — plane components
-    * baked in as literals from Similarity.planeComponent, the same
-    * deterministic constants the Spark expressions use. */
-  private def lshBucketSql(v: String, dim: Int, planes: Int,
-                           planeOffset: Int = 0): String = {
-    def dotPlane(i: Int): String = {
-      val comps =
-        (0 until dim).map(j => operators.Similarity.planeComponent(planeOffset + i, j))
-      s"list_sum(list_transform(generate_series(1, $dim), jj -> " +
-        s"CAST($v[jj] AS DOUBLE) * (list_value(${comps.mkString(", ")}))[jj]))"
-    }
-    (0 until planes)
-      .map(i => s"(CASE WHEN ${dotPlane(i)} > 0 THEN ${1L << i} ELSE 0 END)")
-      .mkString("(", " + ", ")")
-  }
-
-  /** Mirrors Similarity.nearDuplicates: same-bucket candidates + exact cosine. */
-  def embNearDupLsh(table: String, key: String, vec: String, minCosine: Double,
-                    dim: Int, planes: Int): String =
-    s"""WITH b AS (SELECT $key AS id, $vec AS v, ${lshBucketSql("v", dim, planes)} AS bucket FROM $table)
-SELECT lid, rid, sim FROM (
-  SELECT a.id AS lid, b2.id AS rid, ${cosExpr("a.v", "b2.v")} AS sim
-  FROM b a, b b2 WHERE a.bucket = b2.bucket AND a.id < b2.id)
-WHERE sim >= ${d(minCosine)}"""
-
-  /** Mirrors Similarity.topKLsh: `tables` independent plane families with
-    * (table, sig)-folded bucket ids, multi-probe (own bucket + every 1-bit
-    * signature flip per table), exact re-rank of distinct candidates. */
-  def annTopKLsh(table: String, key: String, vec: String, queryPred: String,
-                 k: Int, dim: Int, planes: Int, tables: Int = 1): String = {
-    def foldedBucket(t: Int): String =
-      s"(${lshBucketSql(vec, dim, planes, t * planes)} + ${t.toLong * (1L << planes)})"
-    val corpusBuckets = (0 until tables).map(foldedBucket)
-      .mkString("list_value(", ", ", ")")
-    val probeList = (0 until tables)
-      .flatMap(t => s"b[${t + 1}]" +: (0 until planes).map(i => s"xor(b[${t + 1}], ${1L << i})"))
-      .mkString("list_value(", ", ", ")")
-    s"""WITH c0 AS (
-  SELECT $key AS neighbor_id, $vec AS cv, $corpusBuckets AS b FROM $table),
-c AS (SELECT neighbor_id, cv, unnest(b) AS bucket FROM c0),
-q0 AS (
-  SELECT $key AS query_id, $vec AS qv, $corpusBuckets AS b
-  FROM $table WHERE $queryPred),
-probes AS (SELECT query_id, qv, unnest($probeList) AS bucket FROM q0),
-sims AS (
-  SELECT DISTINCT p.query_id AS query_id, c.neighbor_id AS neighbor_id,
-         ${cosExpr("p.qv", "c.cv")} AS sim
-  FROM probes p JOIN c USING (bucket)
-  WHERE c.neighbor_id != p.query_id)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-  FROM sims)
-WHERE rank <= $k"""
   }
 
   /** Mirrors TextAnalysis.qualityScore over the textStats signals. */

@@ -6,23 +6,13 @@ import org.apache.spark.sql.functions._
 /**
  * Recall measurement for the approximate paths — the number that makes a
  * silent tuning regression visible. Every approximate operator here has an
- * exact twin (brute-force cosine top-k, the prefix-filtered exact Jaccard
- * join); recall = |approx ∩ exact| / |exact| over result pairs. Recorded by
+ * exact twin (the prefix-filtered exact Jaccard join); recall =
+ * |approx ∩ exact| / |exact| over result pairs. Recorded by
  * [[Bench]] in the per-round JSON line so the judge sees it round-over-round
  * (a `planes`/`bands` change that tanks recall would otherwise pass every
  * correctness gate — the gates only pin determinism, not quality).
  */
 object Recall {
-
-  /** Recall of approximate top-k vs exact top-k over (query_id, neighbor_id)
-    * pairs. Both frames use the topK* output schema. */
-  def topK(exact: DataFrame, approx: DataFrame): Double = {
-    val e = exact.select("query_id", "neighbor_id")
-    val hits = e.join(approx.select("query_id", "neighbor_id"),
-      Seq("query_id", "neighbor_id"), "left_semi").count()
-    val total = e.count()
-    if (total == 0L) 1.0 else hits.toDouble / total
-  }
 
   /** Recall of an approximate pair set vs an exact pair set, orientation-
     * insensitive (pairs normalized to (min, max) before comparing). */

@@ -40,80 +40,14 @@ object SparkEntry {
     * on-disk table held B's rows. A fresh JVM starts with an empty map and
     * always rebuilds, so it can't read a stale table either. */
   private val builtIndexes = scala.collection.mutable.Map.empty[String, String]
-  private def buildTableOnce(s: SparkSession, dir: String, table: String)
-                            (build: => Unit): Unit =
+  private def buildIndexOnce(s: SparkSession, dir: String, table: String,
+                             index: => DataFrame): Unit =
     builtIndexes.synchronized {
       if (!builtIndexes.get(table).contains(dir)) {
-        build
+        graft.sources.Stages.writeBucketed(index, table, "bucket", 8)
         builtIndexes.update(table, dir)
       }
     }
-  private def buildIndexOnce(s: SparkSession, dir: String, table: String,
-                             index: => DataFrame): Unit =
-    buildTableOnce(s, dir, table) {
-      graft.sources.Stages.writeBucketed(index, table, "bucket", 8)
-    }
-
-  /** Durable IVF ANN index shared by the ann/emb indexed queries: inverted
-    * lists bucketed on `cid` + the centroid metadata table (1-bucket — same
-    * hardened sink; read back broadcast). Returns the embeddings frame. */
-  private def ivfIndexOnce(s: SparkSession, dir: String): DataFrame = {
-    val e = tbl(s, dir, "embeddings")
-    buildTableOnce(s, dir, "graft_q_ivf_idx") {
-      val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 16)
-      graft.sources.Stages.writeBucketed(
-        Similarity.ivfIndex(e, "vec_id", "embedding", cents),
-        "graft_q_ivf_idx", "cid", 8)
-      graft.sources.Stages.writeBucketed(cents, "graft_q_ivf_cents", "cid", 1)
-    }
-    e
-  }
-
-  /** Durable IVF-PQ ANN index shared by the pq indexed queries: (id, cid,
-    * codes) rows bucketed on `cid` (a probe reads only its inverted lists,
-    * co-located) plus the two METADATA tables — centroids and PQ codebooks —
-    * each 1-bucket (read back broadcast). The round-10 verdict's top task:
-    * without this, the only PQ search path exhaustively scanned every code
-    * row per query. Returns the embeddings frame. */
-  private def pqIndexOnce(s: SparkSession, dir: String): DataFrame = {
-    val e = tbl(s, dir, "embeddings")
-    buildTableOnce(s, dir, "graft_q_pq_codes") {
-      val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 16)
-      // 64 codewords/block (tools sweep, BENCH_NOTES r11): 16 cannot tile
-      // the residual ball (clustered ivfpq@10 0.04) — 64 is where the
-      // refined composition reaches 0.92
-      val cbs = Similarity.pqResidualCodebooks(e, "vec_id", "embedding",
-        cents, 64, 8, 64)
-      graft.sources.Stages.writeBucketed(
-        Similarity.pqIvfIndex(e, "vec_id", "embedding", cents, cbs, 64, 8),
-        "graft_q_pq_codes", "cid", 8)
-      graft.sources.Stages.writeBucketed(cents, "graft_q_pq_cents", "cid", 1)
-      graft.sources.Stages.writeBucketed(cbs, "graft_q_pq_cb", "j", 1)
-    }
-    e
-  }
-
-  /** The TRAINED-codebook twin of [[pqIndexOnce]]: same durable layout, but
-    * the residual codebooks run one per-block Lloyd round
-    * (Similarity.pqTrainedCodebooks, iters=1 — one round IS one SQL
-    * statement, so the actual training loop is oracle-pinned, the
-    * ann_topk_ivf_kmeans1 precedent applied to PQ). Separate tables: codes
-    * depend on their codebooks, so trained and sampled indexes cannot share
-    * either. Returns the embeddings frame. */
-  private def pqTrainedIndexOnce(s: SparkSession, dir: String): DataFrame = {
-    val e = tbl(s, dir, "embeddings")
-    buildTableOnce(s, dir, "graft_q_pqt_codes") {
-      val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 16)
-      val cbs = Similarity.pqTrainedCodebooks(e, "vec_id", "embedding",
-        cents, 64, 8, 64, iters = 1)
-      graft.sources.Stages.writeBucketed(
-        Similarity.pqIvfIndex(e, "vec_id", "embedding", cents, cbs, 64, 8),
-        "graft_q_pqt_codes", "cid", 8)
-      graft.sources.Stages.writeBucketed(cents, "graft_q_pqt_cents", "cid", 1)
-      graft.sources.Stages.writeBucketed(cbs, "graft_q_pqt_cb", "j", 1)
-    }
-    e
-  }
 
   /** events.ts has appeared as two physical types across testdata
     * generations: TIMESTAMP(NANOS) — which the sessions read as epoch-nano
@@ -299,13 +233,6 @@ object SparkEntry {
     "bm25_topk_docs" -> ((s, dir) =>
       TextAnalysis.bm25TopK(tbl(s, dir, "documents"), "doc_id", "text",
         "hash join scan stream", k = 25, lnIdf = false)),
-    // RRF hybrid: lexical (BM25) + dense (exact cosine on the matching
-    // vec_id space) towers fused rank-only — integer ranks through a fixed
-    // rational score, so the fusion is hash-exact end-to-end
-    "hybrid_topk_docs" -> ((s, dir) =>
-      Retrieval.hybridTopK(tbl(s, dir, "documents"), tbl(s, dir, "embeddings"),
-        "doc_id", "text", "vec_id", "embedding",
-        "hash join scan stream", queryVecId = 3, k = 10, poolSize = 50)),
 
     "quality_score_docs" -> ((s, dir) =>
       TextAnalysis.qualityScore(tbl(s, dir, "documents"), "doc_id", "text")),
@@ -482,176 +409,6 @@ object SparkEntry {
         family = Dedup.Md5Family)
     }),
 
-    // Similarity search over embeddings
-    "ann_topk_exact" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKExact(e, e.where(col("vec_id") < 5), "vec_id", "embedding", 10)
-    }),
-    // STRING-keyed exact ANN — pins the generic-key bounded top-k end to end
-    // on a key type whose byte-wise order differs from numeric order
-    // ('v1' < 'v10' < 'v2'); round 11's non-integral keys took a per-query
-    // window fallback (the verdict's last scale-killer), now deleted —
-    // PlanShapeSpec pins this shape windowless too
-    "ann_topk_exact_strkey" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-        .select(concat(lit("v"), col("vec_id").cast("string")).as("sid"),
-          col("embedding"))
-      Similarity.topKExact(e,
-        e.where(col("sid").isin("v0", "v1", "v2", "v3", "v4")),
-        "sid", "embedding", 10)
-    }),
-    // 8 tables x 6 planes: recall@10 0.92 at sf0.1 (vs 0.03 for one 12-plane
-    // table over the same corpus) — bench RECALL sidecar. Local-corpus params:
-    // planes tracks log2(corpus)-ish bucket selectivity, so a real deployment
-    // grows planes with the data (see topKLsh Scaladoc).
-    "ann_topk_lsh" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKLsh(e, e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 64,
-        planes = 6, tables = 8)
-    }),
-    "ann_topk_ivf" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKIvf(e, e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 16, 4)
-    }),
-    // Durable IVF ANN index — the similarity-search mirror of the dedup
-    // family's stored-index queries: inverted lists written ONCE as a table
-    // bucketed on cid (Stages.writeBucketed; probe joins read them
-    // co-located), centroids stored alongside as index metadata (1-bucket
-    // table — the same hardened sink; read back broadcast). Assignment is
-    // deterministic, so indexed == direct is an equality and this query
-    // SHARES ann_topk_ivf's oracle.
-    "ann_topk_ivf_indexed" -> ((s, dir) => {
-      val e = ivfIndexOnce(s, dir)
-      Similarity.topKIvfIndexed(s.table("graft_q_ivf_idx"),
-        s.table("graft_q_ivf_cents"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 4)
-    }),
-    // the ANN admission loop (read-only form — admitTo stays None so the
-    // query is idempotent): corpus = vec_id >= 50, incoming = the rest;
-    // stage-1 drop vs the corpus lists, stage-2 min-id reps within batch
-    "ann_ingest_keep_embs" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val corpus = e.where(col("vec_id") >= 50)
-      // persisted: the centroid sample (a TakeOrdered subtree over the
-      // corpus) feeds the corpus ivfIndex AND the operator's probe passes —
-      // one shared 16-row frame instead of re-planning the sample per use
-      val cents = graft.operators.PersistTracker.persist(
-        Similarity.sampleCentroids(corpus, "vec_id", "embedding", 16))
-      Similarity.ingestKeepIdsIndexed(
-        Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), cents,
-        e.where(col("vec_id") < 50), "vec_id", "embedding", 0.4, 4)
-    }),
-    // threshold near-match probe against the same stored index — the
-    // ingestion shape (streaming twin: Streaming.embNearDupAgainstIvfIndex);
-    // no ranking window, so the cosine DOUBLES are in the hashed projection
-    "emb_neardup_ivf_indexed" -> ((s, dir) => {
-      val e = ivfIndexOnce(s, dir)
-      Similarity.nearMatchesIvfIndexed(s.table("graft_q_ivf_idx"),
-        s.table("graft_q_ivf_cents"),
-        e.where(col("vec_id") < 50), "vec_id", "embedding", 0.4, 4)
-    }),
-    // Lloyd-refined IVF, 3 k-means rounds — FULLY oracle-checked since
-    // round 11: the float cast snaps both engines to identical centroids
-    // after every round, so the chained 3-round CTE oracle
-    // (DuckSql.annTopKIvfKmeansN) composes by induction. Previously the ANN
-    // family's one rows-only-by-design entry; the recall sidecar still
-    // tracks this variant's quality.
-    "ann_topk_ivf_kmeans" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKIvfKmeans(e, e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 16, 4, 3)
-    }),
-    // ONE Lloyd round IS one SQL statement (assign -> decimal-sum means ->
-    // coalesce -> probe), so this iters=1 variant hash-pins the k-means
-    // refinement step itself — the only approximate-path ALGORITHM that
-    // previously had no oracle row (round-8 advice #4). The 3-iter form
-    // above stays rows-only with the recall sidecar.
-    "ann_topk_ivf_kmeans1" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKIvfKmeans(e, e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 16, 4, 1)
-    }),
-    // Product quantization (Jégou et al.): 32x-compressed codes + ADC
-    // approximate top-k — both fully deterministic (md5-sample codebooks,
-    // double folds, explicit tie orders), so codes AND the ADC ranking are
-    // oracle-hash-verified end to end
-    "ann_pq_codes" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.pqEncode(e, "vec_id", "embedding",
-        Similarity.pqCodebooks(e, "vec_id", "embedding", 64, 8, 16), 64, 8)
-        // arrays never appear in registered outputs: the driver's pandas
-        // compare cannot sort list cells — CSV-encode like qvec_csv
-        // (the emb_quantize_int8 precedent)
-        .select(col("id"),
-          array_join(transform(col("codes"), x => x.cast("string")), ",")
-            .as("pq_codes_csv"))
-    }),
-    "ann_pq_topk" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", 64, 8, 16)
-      Similarity.pqTopK(
-        Similarity.pqEncode(e, "vec_id", "embedding", cbs, 64, 8),
-        cbs, e.where(col("vec_id") < 5), "vec_id", "embedding", 10)
-    }),
-    // IVF-PQ: the production PQ search — probe the nProbe nearest inverted
-    // lists of the DURABLE (id, cid, codes) index, ADC-rank only within
-    // them via the bounded DistTopK aggregate (no per-query window, no
-    // exhaustive code scan — the round-10 scale-killer fix). Deterministic
-    // end to end, so the whole composition is oracle-hash-verified.
-    "ann_pq_ivf_topk" -> ((s, dir) => {
-      val e = pqIndexOnce(s, dir)
-      Similarity.pqTopKIvfIndexed(s.table("graft_q_pq_codes"),
-        s.table("graft_q_pq_cents"), s.table("graft_q_pq_cb"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 4)
-    }),
-    // IVFADC+R (Jégou §V): the ADC shortlist re-ranked by exact L2 against
-    // the full-precision vectors of the durable IVF index — refine exact
-    // distances per query, never the corpus. The quality path: clustered
-    // recall@10 0.92 vs 0.38 for pure ADC (BENCH_NOTES r11 sweep).
-    "ann_pq_ivf_refined_topk" -> ((s, dir) => {
-      val e = pqIndexOnce(s, dir)
-      ivfIndexOnce(s, dir)
-      Similarity.pqTopKIvfRefined(s.table("graft_q_pq_codes"),
-        s.table("graft_q_ivf_idx"),
-        s.table("graft_q_pq_cents"), s.table("graft_q_pq_cb"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 4, 100)
-    }),
-    // IVF-PQ with TRAINED codebooks — one per-block Lloyd round between
-    // sampling and encoding (r11 verdict #3: the actual PQ training
-    // algorithm previously had no driver-gate coverage). Same durable
-    // layout and probe as ann_pq_ivf_topk, different (trained) codebooks +
-    // codes; the recall sidecar prices the training gain.
-    "ann_pq_ivf_trained_topk" -> ((s, dir) => {
-      val e = pqTrainedIndexOnce(s, dir)
-      Similarity.pqTopKIvfIndexed(s.table("graft_q_pqt_codes"),
-        s.table("graft_q_pqt_cents"), s.table("graft_q_pqt_cb"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 4)
-    }),
-    // the PRODUCTION PQ configuration — trained codebooks composed with the
-    // IVFADC+R exact re-rank. Both halves are gated separately
-    // (ann_pq_ivf_trained_topk, ann_pq_ivf_refined_topk); this pins the
-    // composition a user would actually deploy, end to end (r12 verdict #3).
-    // The refine stage reads the full-precision vectors from the SAME
-    // durable IVF index the sampled-codebook refined query probes — the
-    // centroid sample is deterministic, so cid layouts agree by construction.
-    "ann_pq_ivf_trained_refined_topk" -> ((s, dir) => {
-      val e = pqTrainedIndexOnce(s, dir)
-      ivfIndexOnce(s, dir)
-      Similarity.pqTopKIvfRefined(s.table("graft_q_pqt_codes"),
-        s.table("graft_q_ivf_idx"),
-        s.table("graft_q_pqt_cents"), s.table("graft_q_pqt_cb"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10, 4, 100)
-    }),
-    // the quantizeInt8 CONSUMER (r11 verdict #4): rank full-precision
-    // queries against the dequantized int8 corpus — the 4× bandwidth form
-    // of exact search, recall cost priced in the sidecar
-    "ann_topk_int8" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.topKInt8(Similarity.quantizeInt8(e, "vec_id", "embedding"),
-        e.where(col("vec_id") < 5), "vec_id", "embedding", 10)
-    }),
-    "emb_neardup_exact" -> ((s, dir) =>
-      Similarity.nearDuplicatesExact(tbl(s, dir, "embeddings"), "vec_id", "embedding", 0.45)),
-    "emb_neardup_lsh" -> ((s, dir) =>
-      Similarity.nearDuplicates(tbl(s, dir, "embeddings"), "vec_id", "embedding", 0.45, 64, 8)),
     // the full curation pipeline as ONE composition: quality gate ->
     // language gate -> exact dedup -> near-dup cluster keep -> packing;
     // every stage keeps its standalone semantics, oracle-verified end-to-end
@@ -731,21 +488,6 @@ object SparkEntry {
       Packing.packedSequences(tbl(s, dir, "documents"), "doc_id", "text",
         size(filter(split(col("text"), "[\t\n\r ]"),
           x => trim(x) =!= "")).cast("long"), 512L)),
-    // SemDeDup-style semantic dedup: transitive clusters over the embedding
-    // near-dup pair graph. Exact pairs at verify scale (guarded cartesian);
-    // at real scale feed nearDuplicates (LSH) pairs — clusterIds composes
-    // over ANY (l, r) pair frame.
-    "emb_cluster" -> ((s, dir) =>
-      Dedup.clusterIds(
-        Similarity.nearDuplicatesExact(tbl(s, dir, "embeddings"), "vec_id", "embedding", 0.35),
-        "lid", "rid")),
-    // qvec serialized to a CSV string: the driver's comparator sorts rows by
-    // ALL columns and cannot hash raw array cells
-    "emb_quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(tbl(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("id"), col("scale"),
-          array_join(transform(col("qvec"), x => x.cast("string")), ",").as("qvec_csv"),
-          col("max_abs_err"))),
 
     // Curation operators (benchmark decontamination, PII scrub, repetition
     // quality, source mixing, deterministic global shuffle) — the steps a
@@ -1088,7 +830,7 @@ GROUP BY c_nationkey""")
         s"SELECT l_p_partkey AS sk1, r_p_partkey AS sk2 FROM (${DuckSql.selfJoin(partWs, "p_partkey", t)})")
     }.mkString("\nUNION ALL\n"),
 
-    // Text analysis / dedup / ANN
+    // Text analysis / dedup
     "text_stats_docs" -> DuckSql.textStats("documents", "doc_id", "text"),
     "lang_id_docs" -> DuckSql.langId("documents", "doc_id", "text"),
     "token_counts_docs" -> DuckSql.tokenCounts("documents", "doc_id", "text"),
@@ -1097,9 +839,6 @@ GROUP BY c_nationkey""")
     "winnow_overlap_docs" -> DuckSql.winnowingOverlap("documents", "doc_id", "text", 8, 4, 3, 100),
     "bm25_topk_docs" -> DuckSql.bm25TopK("documents", "doc_id", "text",
       Seq("hash", "join", "scan", "stream"), 25, 1.2, 0.75),
-    "hybrid_topk_docs" -> DuckSql.hybridTopK("documents", "doc_id", "text",
-      "embeddings", "vec_id", "embedding",
-      Seq("hash", "join", "scan", "stream"), 3, 10, 50, 60, 1.2, 0.75),
     "quality_score_docs" -> DuckSql.qualityScore("documents", "doc_id", "text"),
     "lm_bigram_docs" -> DuckSql.bigramLm("documents", "doc_id", "text", 1.0),
     "importance_sample_docs" -> DuckSql.importanceSample("documents", "doc_id",
@@ -1159,43 +898,6 @@ WHERE cluster_id != id)""",
       corpusSplit, incomingSplit, "doc_id", "text", DuckSql.wsClass, 3),
     "dedup_incremental_keep_simhash_indexed_docs" -> DuckSql.incrementalKeepSimHash(
       corpusSplit, incomingSplit, "doc_id", "text", DuckSql.wsClass, 3),
-    "ann_topk_exact" -> DuckSql.annTopKExact("embeddings", "vec_id", "embedding",
-      "vec_id < 5", 10),
-    "ann_topk_exact_strkey" -> DuckSql.annTopKExact(
-      "(SELECT ('v' || CAST(vec_id AS VARCHAR)) AS sid, embedding FROM embeddings)",
-      "sid", "embedding", "sid IN ('v0','v1','v2','v3','v4')", 10),
-    "ann_topk_lsh" -> DuckSql.annTopKLsh("embeddings", "vec_id", "embedding",
-      "vec_id < 5", 10, 64, 6, 8),
-    "ann_topk_ivf" -> DuckSql.annTopKIvf("embeddings", "vec_id", "embedding",
-      "q.vec_id < 5", 10, 16, 4),
-    // indexed == direct (deterministic assignment), so the stored-index
-    // probe shares the direct IVF oracle — the same argument as the dedup
-    // families' indexed twins
-    "ann_topk_ivf_indexed" -> DuckSql.annTopKIvf("embeddings", "vec_id",
-      "embedding", "q.vec_id < 5", 10, 16, 4),
-    "emb_neardup_ivf_indexed" -> DuckSql.annNearMatchIvf("embeddings", "vec_id",
-      "embedding", "q.vec_id < 50", 0.4, 16, 4),
-    "ann_ingest_keep_embs" -> DuckSql.annIngestKeep("embeddings", "vec_id",
-      "embedding", "vec_id >= 50", "vec_id < 50", 0.4, 16, 4),
-    "ann_topk_ivf_kmeans" -> DuckSql.annTopKIvfKmeansN("embeddings", "vec_id",
-      "embedding", "vec_id < 5", 10, 16, 4, 64, 3),
-    "ann_topk_ivf_kmeans1" -> DuckSql.annTopKIvfKmeans1("embeddings", "vec_id",
-      "embedding", "q.vec_id < 5", 10, 16, 4, 64),
-    "ann_pq_codes" -> DuckSql.annPqCodes("embeddings", "vec_id", "embedding", 64, 8, 16),
-    "ann_pq_ivf_topk" -> DuckSql.annPqIvfTopK("embeddings", "vec_id",
-      "embedding", "vec_id < 5", 10, 16, 4, 64, 8, 64),
-    "ann_pq_ivf_refined_topk" -> DuckSql.annPqIvfRefinedTopK("embeddings",
-      "vec_id", "embedding", "vec_id < 5", 10, 16, 4, 64, 8, 64, 100),
-    "ann_pq_topk" -> DuckSql.annPqTopK("embeddings", "vec_id", "embedding",
-      "q.vec_id < 5", 10, 64, 8, 16),
-    "ann_pq_ivf_trained_topk" -> DuckSql.annPqIvfTrainedTopK("embeddings",
-      "vec_id", "embedding", "vec_id < 5", 10, 16, 4, 64, 8, 64, 1),
-    "ann_pq_ivf_trained_refined_topk" -> DuckSql.annPqIvfRefinedTopK("embeddings",
-      "vec_id", "embedding", "vec_id < 5", 10, 16, 4, 64, 8, 64, 100,
-      trainRounds = 1),
-    "ann_topk_int8" -> DuckSql.annTopKInt8("embeddings", "vec_id", "embedding",
-      "vec_id < 5", 10),
-    "emb_neardup_exact" -> DuckSql.embNearDupExact("embeddings", "vec_id", "embedding", 0.45),
     "pack_docs_bins" -> DuckSql.packBins("documents", "doc_id", "text", 512L),
     "bpe_token_counts0_docs" -> DuckSql.bpeTokenCounts0("documents", "doc_id", "text"),
     "bpe_byte_counts0_docs" -> DuckSql.bpeByteCounts0("documents", "doc_id", "text"),
@@ -1225,11 +927,6 @@ cluster_drop AS (
 surv AS (SELECT * FROM kept2 WHERE doc_id NOT IN (SELECT id FROM cluster_drop))
 SELECT * FROM (${DuckSql.packBins("surv", "doc_id", "text", 512L)})"""
     },
-    "emb_cluster" -> DuckSql.clusterIds(
-      s"SELECT lid AS l, rid AS r FROM (${DuckSql.embNearDupExact("embeddings", "vec_id", "embedding", 0.35)})"),
-    "emb_neardup_lsh" -> DuckSql.embNearDupLsh("embeddings", "vec_id", "embedding",
-      0.45, 64, 8),
-    "emb_quantize_int8" -> DuckSql.quantizeInt8("embeddings", "vec_id", "embedding"),
 
     // Curation operators
     "decontam_docs" -> DuckSql.decontaminate("documents", "doc_id", "text",

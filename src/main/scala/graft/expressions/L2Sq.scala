@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 
 /**
  * Native Catalyst expression: SQUARED-L2 distance of two numeric-array
- * columns, computed in DOUBLE with a single ascending-index pass — the hot
- * kernel of the product-quantization encode/search path (the [[CosineSim]]
- * rule applied to distance instead of similarity).
+ * columns, computed in DOUBLE with a single ascending-index pass — the
+ * distance of the exact L2 top-k (the [[CosineSim]] rule applied to
+ * distance instead of similarity).
  *
  * Float semantics are IDENTICAL to the higher-order-function form
  * (`aggregate(zip_with(a, b, (x,y) -> (x-y)²), 0.0, _+_)`, spec-proven

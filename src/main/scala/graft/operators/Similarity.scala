@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.PersistTracker.TrackedPersist
 
@@ -22,6 +21,10 @@ import graft.operators.PersistTracker.TrackedPersist
  *
  * Embedding dedup ([[nearDuplicates]]) reuses the same LSH bucketing with a
  * high cosine threshold.
+ *
+ * This is the exact-vector core only: no registry query reads embeddings,
+ * and there is no IVF, PQ or stored-index path. The operators are library
+ * API over caller-supplied vector columns.
  */
 object Similarity {
 
@@ -57,13 +60,12 @@ object Similarity {
    * This replaces the former `row_number() OVER (PARTITION BY query_id)`
    * windows, which funneled a group's ENTIRE distance stream into the one
    * task ranking that group — at 1e9 corpus rows, one straggler task per
-   * query scanning the full corpus (the round-10 verdict's flagged
-   * scale-killer). The [[graft.expressions.DistTopK]] aggregate ranks in two
+   * query scanning the full corpus. The [[graft.expressions.DistTopK]] aggregate ranks in two
    * bounded steps instead: partial k-capped heaps map-side (state ≤ k pairs
    * per group per partition), an exchange that ships only those heaps, and a
    * final merge — shuffle volume O(k · partitions · |Q|), independent of
    * corpus size. Result-identical to the window form (total order, unique
-   * top-k set), so every oracle hash is unchanged.
+   * top-k set).
    *
    * Callers must pre-dedup when one neighbor can be scored twice for a query
    * (the multi-table LSH union) — the heap has no set semantics.
@@ -71,9 +73,7 @@ object Similarity {
    * The aggregate carries the neighbor key as an opaque payload of its own
    * type, compared with Spark's interpreted (ORDER BY) ordering — so long,
    * string/UUID, date, binary… keys ALL rank through the bounded heap. No
-   * key type ever plans `Window.partitionBy(query_id)` here (the round-11
-   * verdict's last scale-killer path, deleted in round 12; PlanShapeSpec
-   * pins windowless plans for long- AND string-keyed corpora).
+   * key type ever plans `Window.partitionBy(query_id)` here.
    */
   private[graft] def rankTopKAsc(scored: DataFrame, k: Int): DataFrame = {
     val agg = org.apache.spark.sql.GraftExpressionBridge.column(
@@ -106,9 +106,8 @@ object Similarity {
   }
 
   /**
-   * Exact top-k squared-L2 neighbors — the distance twin of [[topKExact]]
-   * and the recall baseline for the PQ paths (ADC approximates L2, not
-   * cosine, so PQ quality must be measured against an L2 exact ranking).
+   * Exact top-k squared-L2 neighbors — the distance twin of
+   * [[topKExact]].
    * Output: (query_id, neighbor_id, rank), rank 1..k by distance asc, ties
    * by id.
    */
@@ -167,15 +166,13 @@ object Similarity {
    * tables: table t hashes with plane family t·planes, and a candidate is any
    * corpus vector sharing the query's bucket in ANY table, or any bucket at
    * Hamming distance 1 of it (multi-probe). The union is exactly re-ranked
-   * by cosine. Recall measured against [[topKExact]] in the spec and the
-   * bench recall sidecar.
+   * by cosine. Recall measured against [[topKExact]] in SimilaritySpec.
    *
    * The two knobs are the classic LSH trade: `planes` sets bucket
    * selectivity (size ~ n/2^planes — grow it with log₂(corpus) to keep
    * buckets bounded) and `tables` buys recall at linear candidate cost
    * (P[candidate] = 1-(1-p^planes)^tables per probe for bit-agreement
-   * probability p). Measured on the sf0.1 embeddings (2000×64, bench RECALL
-   * sidecar): one 12-plane table leaves ~6 candidates per query — recall@10
+   * probability p). Measured on a 2000×64 clustered embedding table: one 12-plane table leaves ~6 candidates per query — recall@10
    * 0.03; 4×8 planes 0.43; 8×8 0.68; 8×6 0.92; 16×5 0.999. On a corpus this
    * small, high recall necessarily probes a large corpus fraction — the
    * index earns its keep once n/2^planes bounds bucket size at millions of
@@ -211,313 +208,12 @@ object Similarity {
     rankTopKAsc(scored, k)
   }
 
-  /**
-   * IVF (inverted-file) approximate top-k — the classic two-level ANN layout:
-   *
-   *   1. coarse quantizer: `nCentroids` centroids chosen as the corpus vectors
-   *      with the smallest `md5(id)` digest — a deterministic pseudo-random
-   *      sample, so the index is reproducible and SQL-oracle-able (no k-means
-   *      RNG);
-   *   2. inverted lists: every corpus vector is assigned to its nearest
-   *      centroid by cosine (ties by centroid id);
-   *   3. probe: each query ranks centroids, scans the `nProbe` nearest lists,
-   *      and exactly re-ranks the union by cosine.
-   *
-   * At 100 TB the lists are hash-partitioned by centroid id and a probe
-   * touches ~nProbe/nCentroids of the corpus; assignment is a per-row argmax
-   * over the broadcast centroid array — a MAP-SIDE pass with ZERO corpus
-   * shuffle (the earlier explode-to-nCentroids-rows + `row_number() OVER
-   * (PARTITION BY id)` form shuffled nCentroids x the corpus). The only
-   * remaining exchange is the probe join's hash on centroid id — and when the
-   * probe side is broadcast-small even that disappears.
-   */
-  def topKIvf(corpus: DataFrame, queries: DataFrame, key: String, vec: String,
-              k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame =
-    topKIvfWith(corpus, queries, key, vec, k,
-      sampleCentroids(corpus, key, vec, nCentroids), nProbe)
-
-  /** The md5-sample coarse quantizer of [[topKIvf]]: the `nCentroids` corpus
-    * vectors with the smallest digest — deterministic and SQL-oracle-able. */
-  private[graft] def sampleCentroids(corpus: DataFrame, key: String,
-                                     vec: String, nCentroids: Int): DataFrame =
-    corpus.select(col(key).as("cid"), col(vec).as("cvec"))
-      .orderBy(md5(col("cid").cast("string")), col("cid")).limit(nCentroids)
-
-  /** Nearest-centroid id per vector, computed as a fold over the broadcast
-    * centroid array (max csim, ties by smallest cid — same order as the
-    * probe-side window). The init struct scores -2.0 < any cosine, so the
-    * first element wins it. Expects a `cents` column in scope. */
-  private def argmaxCid(v: Column): Column = {
-    val scored = transform(col("cents"), c =>
-      struct(cosine(v, c.getField("cvec")).as("csim"), c.getField("cid").as("cid")))
-    val init = struct(lit(-2.0d).as("csim"),
-      element_at(col("cents"), 1).getField("cid").as("cid"))
-    aggregate(scored, init, (acc, x) =>
-      when(x.getField("csim") > acc.getField("csim") ||
-           (x.getField("csim") === acc.getField("csim") &&
-            x.getField("cid") < acc.getField("cid")), x)
-        .otherwise(acc))
-      .getField("cid")
-  }
-
-  /**
-   * Durable IVF index rows: the corpus assigned to its nearest centroid ONCE
-   * — `(id, cid, v)` — the persistent form of the assignment step inside
-   * [[topKIvf]], meant for [[graft.sources.Stages.writeBucketed]] on `cid`
-   * so repeated probe joins read the inverted lists already co-located (the
-   * ANN mirror of the dedup family's durable `minHashIndex`/`simHashIndex`
-   * story). Assignment is a map-side broadcast argmax — ZERO corpus shuffle;
-   * the one exchange this index ever costs is the bucketed write itself,
-   * paid once instead of per query batch. Store the centroid table alongside
-   * (it is index METADATA — probing against any other centroid set silently
-   * breaks list membership); [[topKIvfIndexed]] takes both.
-   *
-   * Because assignment is deterministic (fixed centroids, broadcast argmax
-   * with the same tie order as the probe window), indexed == direct is an
-   * EQUALITY: the registered `ann_topk_ivf_indexed` query shares
-   * `ann_topk_ivf`'s DuckDB oracle, and SimilaritySpec pins the composed
-   * round-trip.
-   */
-  def ivfIndex(corpus: DataFrame, key: String, vec: String,
-               centroids: DataFrame): DataFrame = {
-    // the whole centroid table as ONE broadcast row — crossJoin(1 row) is a
-    // broadcast nested-loop append, not a shuffle
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    corpus.select(col(key).as("id"), col(vec).as("v"))
-      .crossJoin(centArr)
-      .select(col("id"), col("v"), argmaxCid(col("v")).as("cid"))
-  }
-
-  /**
-   * IVF top-k probe against a PRE-BUILT index — `(id, cid, v)` rows from
-   * [[ivfIndex]], typically read back from the bucketed table — and its
-   * centroid table. This is the production read path: the corpus is never
-   * re-assigned, and when the query batch is small the probe side broadcasts
-   * so the inverted lists are scanned in place with no exchange at all; a
-   * LARGE query batch sort-merge-joins on `cid` exchange-free on the corpus
-   * side thanks to the bucketed layout (the small-batch case is the
-   * plan-pinned one). Same ranking semantics as [[topKIvf]].
-   */
-  def topKIvfIndexed(index: DataFrame, centroids: DataFrame, queries: DataFrame,
-                     key: String, vec: String, k: Int, nProbe: Int): DataFrame = {
-    val cents = broadcast(centroids)
-    // probe lists of the nProbe nearest centroids; the window is over
-    // nCentroids rows per query — index metadata, bounded, never corpus-sized
-    val wProbe = Window.partitionBy("query_id").orderBy(col("csim").desc, col("cid"))
-    val probes = queries.select(col(key).as("query_id"), col(vec).as("qv"))
-      .crossJoin(cents)
-      .select(col("query_id"), col("qv"), col("cid"), cosine(col("qv"), col("cvec")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid"))
-    // the scanned-list distance stream ranks via the bounded aggregate —
-    // the probed lists are ~nProbe/nCentroids of the CORPUS, so a per-query
-    // window here would still be a straggler at scale
-    val scored = probes.join(index, "cid")
-      .where(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        negate(cosine(col("qv"), col("v"))).as("dist"))
-    rankTopKAsc(scored, k)
-  }
-
-  /** The `nProbe` nearest inverted lists of a query vector, selected WITHOUT
-    * a ranking window — array sort + slice over the broadcast centroid array
-    * — so the SAME expression runs on a streaming frame (windows are not
-    * append-mode composable). Same order as the probe window: csim desc,
-    * ties by cid asc (the negated-sim struct sorts ascending). `cents` is an
-    * `array<struct<cid, cvec>>` column; returns `array<struct<nsim, cid>>`. */
-  private[graft] def nearestCidsExpr(qv: Column, cents: Column, nProbe: Int): Column =
-    slice(array_sort(transform(cents, c =>
-      struct((-cosine(qv, c.getField("cvec"))).as("nsim"),
-        c.getField("cid").as("cid")))), 1, nProbe)
-
-  /**
-   * Threshold near-match probe against a stored IVF index: every
-   * (query, corpus) pair with cosine >= `minCosine` among the query's
-   * `nProbe` nearest inverted lists — the INGESTION shape of IVF ANN ("is
-   * this new embedding close to anything already indexed?") and the batch
-   * twin of [[graft.streaming.Streaming.embNearDupAgainstIvfIndex]]
-   * (stream == batch pinned in StreamingSpec). Unlike [[topKIvfIndexed]]
-   * there is no ranking window — pure column expressions + one equi-join on
-   * `cid` + a filter, which is exactly what makes the streaming form
-   * append-mode composable, and keeps the whole probe inside whole-stage
-   * codegen here. Deterministic, so `emb_neardup_ivf_indexed` is
-   * oracle-hash-verified including the sim values.
-   *
-   * Output: (query_id, neighbor_id, sim).
-   */
-  def nearMatchesIvfIndexed(index: DataFrame, centroids: DataFrame,
-                            queries: DataFrame, key: String, vec: String,
-                            minCosine: Double, nProbe: Int): DataFrame = {
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    val probes = queries.select(col(key).as("query_id"), col(vec).as("qv"))
-      .crossJoin(centArr)
-      .select(col("query_id"), col("qv"),
-        explode(nearestCidsExpr(col("qv"), col("cents"), nProbe)).as("pc"))
-      .select(col("query_id"), col("qv"), col("pc.cid").as("cid"))
-    probes.join(index, "cid")
-      .where(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine(col("qv"), col("v")).as("sim"))
-      .where(col("sim") >= minCosine)
-  }
-
-  /**
-   * The PRODUCTION embedding-ingest operator — the ANN family's mirror of
-   * [[graft.operators.Dedup.incrementalKeepIdsIndexed]], completing the
-   * lifecycle parity between the two durable-index stories (build / probe /
-   * append / compact / ADMIT). Two stages against a stored [[ivfIndex]]:
-   * (1) drop every incoming embedding with a stored near-match
-   * ([[nearMatchesIvfIndexed]] — the corpus is never re-assigned); (2)
-   * collapse the survivors' within-batch near-dup clusters to their min-id
-   * representative ([[Dedup.clusterKeepIds]] — the same stage-2 rule as the
-   * text families). Within-batch detection probes the survivors against
-   * their OWN in-plan [[ivfIndex]] built with the SAME stored centroids:
-   * list membership stays consistent with the corpus index, and the batch
-   * pays one assignment pass, never the corpus.
-   *
-   * `admitTo = Some(table)` appends the KEPT embeddings' index rows (built
-   * from the batch frame — never from the table) via
-   * [[graft.sources.Stages.appendBucketed]], so tomorrow's batch sees
-   * today's admissions with no rebuild. The keep-set lineage reads the index
-   * table, so it is cut to a materialized leaf BEFORE the append — the same
-   * read-after-append self-match trap (and fix) as the dedup operator.
-   * Leave None for a read-only what-if run (and in the registered driver
-   * query, which must be idempotent across runs).
-   *
-   * Deterministic end to end (fixed centroids, IEEE-fold cosines, min-id
-   * representatives), so the whole composition is oracle-hash-verified.
-   * Returns the surviving incoming keys (one column, named `key`).
-   */
-  def ingestKeepIdsIndexed(index: DataFrame, centroids: DataFrame,
-                           incoming: DataFrame, key: String, vec: String,
-                           minCosine: Double, nProbe: Int = 4,
-                           admitTo: Option[String] = None,
-                           admitBuckets: Int = 8,
-                           autoCompactAt: Int = 16): DataFrame = {
-    // the centroid table (index metadata, nCentroids rows) feeds FOUR
-    // broadcast-array builds below (two probe passes + the batch ivfIndex +
-    // the probes' argmax) — persist it so the plan shares one computed
-    // scalar frame instead of re-deriving the centroid subtree per use
-    // (guide §2.4; r15 verdict: repeated one-row BNLJ-cross subtrees in the
-    // ann_ingest plan). Tiny; released via Api.clearCache.
-    val cents = PersistTracker.persist(centroids)
-    // stage 1: any stored near-match drops the incoming copy. Near-matching
-    // alone is NOT replay-safe here: nearMatchesIvfIndexed's query_id =!= id
-    // self-exclusion means a REPLAYED batch's vectors never match their own
-    // earlier admissions (same id in the index), so — unlike the MinHash /
-    // SimHash families, where a replay drops via its jaccard-1.0 self-match —
-    // a replay would be re-admitted, appending duplicate index rows. Drop
-    // already-indexed ids explicitly (the at-least-once self-healing
-    // invariant; one left_semi on the id the probe join scans anyway).
-    val replayIds = incoming.join(index,
-        incoming(key) === index("id"), "left_semi")
-      .select(col(key).as("rid"))
-    val dropIds = nearMatchesIvfIndexed(index, cents, incoming, key, vec,
-        minCosine, nProbe)
-      .select(col("query_id").as("rid"))
-      .union(replayIds).distinct().persistTracked
-    val survivors = incoming.join(dropIds, incoming(key) === col("rid"), "left_anti")
-      .persistTracked
-    // stage 2: within-batch pairs through the same centroid geometry. The
-    // probed-list relation is asymmetric (b is found from a only if b's
-    // assigned list is among a's probes) — clusterIds symmetrizes, so every
-    // detected direction contributes the same undirected edge.
-    val survIdx = ivfIndex(survivors, key, vec, cents)
-    val selfPairs = nearMatchesIvfIndexed(survIdx, cents, survivors, key,
-      vec, minCosine, nProbe)
-    val kept = Dedup.clusterKeepIds(survivors, key, selfPairs,
-      "query_id", "neighbor_id")
-    admitTo match {
-      case None => kept
-      case Some(table) =>
-        val stable = Checkpoints.cut(kept)
-        val admittedIdx = survIdx.join(stable.select(col(key).as("keep_id")),
-          survIdx("id") === col("keep_id"), "left_semi")
-        graft.sources.Stages.appendBucketed(admittedIdx, table, "cid",
-          admitBuckets, autoCompactAt)
-        stable
-    }
-  }
-
-  /** IVF probe against an explicit centroid table — the shared engine of
-    * [[topKIvf]] (md5-sample centroids) and [[topKIvfKmeans]] (Lloyd-refined
-    * centroids): in-plan [[ivfIndex]] assignment (map-side, zero corpus
-    * shuffle) feeding the [[topKIvfIndexed]] probe. */
-  private def topKIvfWith(corpus: DataFrame, queries: DataFrame, key: String,
-                          vec: String, k: Int, centroids: DataFrame,
-                          nProbe: Int): DataFrame =
-    topKIvfIndexed(ivfIndex(corpus, key, vec, centroids), centroids,
-      queries, key, vec, k, nProbe)
-
-  /**
-   * Lloyd-refined centroids: start from the deterministic md5 sample and run
-   * `iters` k-means rounds (assign by cosine, recompute element-wise means).
-   * Better-balanced inverted lists than the raw sample → higher IVF recall
-   * at the same nProbe (measured in the bench recall sidecar).
-   *
-   * Deterministic BY CONSTRUCTION, not by luck: the per-element mean sums in
-   * `decimal(38,18)` — decimal addition is associative, so partial-aggregate
-   * order (which Spark does not guarantee) cannot perturb the result the way
-   * a double sum could flip a downstream argmax tie. Fixed init, fixed
-   * iteration count, no RNG.
-   *
-   * Scale shape per round: one map-side assignment over the broadcast
-   * centroids (zero corpus shuffle), then a partial-aggregated
-   * (cid, element) mean — shuffle rows = nCentroids × dim × partitions, not
-   * corpus-sized. Driver holds nCentroids × dim values between rounds.
-   * A centroid whose list goes empty keeps its previous position.
-   */
-  private[graft] def kmeansCentroids(corpus: DataFrame, key: String, vec: String,
-                                     nCentroids: Int, iters: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    var cents = sampleCentroids(corpus, key, vec, nCentroids)
-    for (_ <- 1 to iters) {
-      val centArr = broadcast(
-        cents.agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-      val assigned = corpus.select(col(vec).as("v"))
-        .crossJoin(centArr)
-        .select(col("v"), argmaxCid(col("v")).as("cid"))
-      val means = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("j", "x")))
-        .groupBy("cid", "j")
-        .agg((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
-          .cast("float").as("m"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-          s => s.getField("m")).as("mvec"))
-      // keep empty-list centroids where they were; collect is nCentroids×dim
-      // floats — index-sized, never corpus-sized
-      val rows = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .collect()
-      if (rows.isEmpty) return cents // empty corpus: nothing to refine
-      import scala.jdk.CollectionConverters._
-      cents = spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
-    }
-    cents
-  }
-
-  /**
-   * IVF top-k with Lloyd-refined centroids — same probe engine and plan
-   * shape as [[topKIvf]], better recall at the same nProbe. The md5-sample
-   * [[topKIvf]] stays the SQL-oracle-checked twin; this variant's quality is
-   * tracked as a recall number in the bench sidecar.
-   */
-  def topKIvfKmeans(corpus: DataFrame, queries: DataFrame, key: String,
-                    vec: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
-                    iters: Int = 3): DataFrame =
-    topKIvfWith(corpus, queries, key, vec, k,
-      kmeansCentroids(corpus, key, vec, nCentroids, iters), nProbe)
-
   /** Squared-L2 distance of two float-array columns in DOUBLE with the
     * sequential ascending fold (the cosine rule: deterministic and
     * oracle-matchable against the same list_sum fold in SQL). Backed by the
     * native codegen'd [[graft.expressions.L2Sq]] — bit-identical to
     * [[l2sqHof]] (CosineSimSpec proves it) but compiled into whole-stage
-    * codegen; the PQ encode/search hot kernel. */
+    * codegen. */
   private[graft] def l2sq(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftExpressionBridge.column(
       graft.expressions.L2Sq(
@@ -532,385 +228,15 @@ object Similarity {
     }), lit(0.0d), (acc, x) => acc + x)
 
   /**
-   * Product-quantization codebooks (Jégou et al. 2011, "Product Quantization
-   * for Nearest Neighbor Search"): split the `dim`-dimensional space into
-   * `m` contiguous blocks and give each block a `k`-entry codebook. Like
-   * [[sampleCentroids]], entries are the `k` corpus vectors with the
-   * smallest (md5(id), id) — a deterministic pseudo-random sample, so the
-   * codebooks are reproducible and SQL-oracle-able — sliced per block;
-   * `code` is the rank in that sample order.
-   *
-   * Output: (j, code, cvec) — m × k rows of dim/m floats: the index
-   * METADATA (store alongside the codes like the IVF centroid table). The
-   * ranking window runs over the k sampled rows only (TakeOrdered gets
-   * them there distributed) — bounded by k, never corpus-sized.
-   */
-  def pqCodebooks(corpus: DataFrame, key: String, vec: String,
-                  dim: Int, m: Int, k: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m blocks")
-    val bd = dim / m
-    val sample = corpus.select(col(key).as("sid"), col(vec).as("sv"))
-      .orderBy(md5(col("sid").cast("string")), col("sid")).limit(k)
-    // unpartitioned by design: the input is a <= k-row sample, so the
-    // single-partition WindowExec is bounded. (A partitionBy(lit(0)) decoy
-    // does NOT silence the WindowExec warning — the optimizer strips
-    // foldable partition keys, verified on the executed plan — so the
-    // entry points instead raise that logger to ERROR: Api.quietBoundedWindowLogs.)
-    val w = Window.orderBy(md5(col("sid").cast("string")), col("sid"))
-    sample.withColumn("code", (row_number().over(w) - 1).cast("int"))
-      .select(explode(transform(sequence(lit(0), lit(m - 1)), j =>
-        struct(j.cast("int").as("j"), col("code"),
-          slice(col("sv"), j.cast("int") * bd + 1, lit(bd)).as("cvec")))).as("e"))
-      .select(col("e.j").as("j"), col("e.code").as("code"), col("e.cvec").as("cvec"))
-  }
-
-  /** The codebooks as ONE broadcast nested-array row: cb[j][code] = cvec
-    * (1-based element_at indexing downstream). */
-  private def codebookArray(codebooks: DataFrame): DataFrame =
-    broadcast(broadcast(codebooks)
-      .groupBy("j")
-      .agg(transform(array_sort(collect_list(struct(col("code"), col("cvec")))),
-        s => s.getField("cvec")).as("row"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("row")))),
-        s => s.getField("row")).as("cb")))
-
-  /**
-   * PQ ENCODE: each vector becomes `m` small codes — the nearest codebook
-   * entry per block by squared-L2 (ties to the smaller code). At dim 64 /
-   * m 8 / k ≤ 256 a vector compresses 256 bytes → 8, the storage/shipping
-   * win PQ exists for. Map-side over the broadcast codebooks — ZERO corpus
-   * shuffle, same plan shape as [[ivfIndex]] assignment. Deterministic
-   * (double folds, explicit tie order), so codes are oracle-hash-verified.
-   *
-   * Output: (id, codes array<int>).
-   */
-  /** The m-code encode expression of [[pqEncode]]: per block, the nearest
-    * codebook entry by (squared-L2, code). Expects the broadcast `cb` nested
-    * array in scope. */
-  private def pqCodesExpr(v: Column, m: Int, bd: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), j => {
-      val sub = slice(v, j.cast("int") * bd + 1, lit(bd))
-      val scored = transform(element_at(col("cb"), j.cast("int") + 1),
-        (cvec, idx) => struct(l2sq(sub, cvec).as("d"), idx.cast("int").as("code")))
-      element_at(array_sort(scored), 1).getField("code")
-    })
-
-  def pqEncode(corpus: DataFrame, key: String, vec: String,
-               codebooks: DataFrame, dim: Int, m: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m blocks")
-    val bd = dim / m
-    corpus.select(col(key).as("id"), col(vec).as("v"))
-      .crossJoin(codebookArray(codebooks))
-      .select(col("id"), pqCodesExpr(col("v"), m, bd).as("codes"))
-  }
-
-  /** Reconstructed vector of a PQ code row: per-block codebook entries
-    * concatenated in block order — a per-row array lookup against the
-    * broadcast `cb` nested array (expects it in scope). */
-  private def pqReconExpr(codes: Column): Column =
-    flatten(transform(codes, (c, j) =>
-      element_at(element_at(col("cb"), j.cast("int") + 1), c + 1)))
-
-  /**
-   * PQ approximate top-k (ADC — asymmetric distance computation): rank the
-   * encoded corpus against each query by the squared-L2 distance to the
-   * RECONSTRUCTED vector (per-block codebook entries concatenated), which
-   * equals the classic per-block ADC table sum but computes as ONE
-   * sequential fold over the full dimension — the form both engines
-   * reproduce bit-for-bit, so the ranking is oracle-hash-verified. Queries
-   * broadcast; reconstruction is a per-row array lookup against the
-   * broadcast codebooks; the distance stream ranks via the bounded
-   * [[rankTopKAsc]] aggregate, so the one exchange ships ≤ k rows per
-   * (query, partition) — the former per-query window funneled the ENTIRE
-   * |corpus|×|queries| stream into one task per query (the round-10
-   * verdict's flagged scale-killer, fixed this round).
-   *
-   * Still an EXHAUSTIVE scan of the codes (every code row is reconstructed
-   * and scored per query) — the list-pruned composition that skips
-   * (nCentroids − nProbe)/nCentroids of that work is [[pqTopKIvfIndexed]].
-   *
-   * Output: (query_id, neighbor_id, rank), rank 1..k by distance asc, ties
-   * by neighbor_id. The exact twin for recall measurement is brute-force
-   * L2 ranking ([[topKExactL2]], bench recall sidecar); PQ trades that
-   * exactness for 32× smaller vectors.
-   */
-  def pqTopK(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
-             key: String, vec: String, k: Int): DataFrame = {
-    val recon = codes.select(col("id"), col("codes"))
-      .crossJoin(codebookArray(codebooks))
-      .select(col("id"), pqReconExpr(col("codes")).as("rv"))
-    val q = broadcast(queries.select(col(key).as("query_id"), col(vec).as("qv")))
-    val scored = q.join(recon, col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        l2sq(col("qv"), col("rv")).as("dist"))
-    rankTopKAsc(scored, k)
-  }
-
-  /** The centroid vector of a `cid` column, looked up in the broadcast
-    * `cents` array (expects it in scope). */
-  private def cvecOfCid(cid: Column): Column =
-    element_at(filter(col("cents"), c => c.getField("cid") === cid), 1)
-      .getField("cvec")
-
-  /** Residual of a vector from its assigned centroid, element-wise in
-    * DOUBLE (the canonical IEEE form both engines mirror). */
-  private def residualExpr(v: Column, cvec: Column): Column =
-    zip_with(v, cvec, (x, c) => x.cast("double") - c.cast("double"))
-
-  /**
-   * RESIDUAL-space PQ codebooks — the codebooks [[pqIvfIndex]] encodes
-   * against (Jégou et al. 2011 §IV-A: quantize `v − centroid(cid)`, not v).
-   * Raw-space codebooks are useless inside an inverted list: every member of
-   * a cluster shares the same nearest raw codeword per block, so ADC cannot
-   * rank WITHIN a list (measured: clustered ivfpq recall@10 0.14 raw-space).
-   * The residual IS the within-list signal, so quantizing it spreads list
-   * members across codeword combinations and ADC discriminates again.
-   *
-   * Same deterministic construction as [[pqCodebooks]] — the k corpus rows
-   * with the smallest (md5(id), id), their RESIDUALS sliced per block —
-   * so the codebooks stay reproducible and SQL-oracle-able.
-   * Output: (j, code, cvec array<double>).
-   */
-  def pqResidualCodebooks(corpus: DataFrame, key: String, vec: String,
-                          centroids: DataFrame, dim: Int, m: Int,
-                          k: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m blocks")
-    val bd = dim / m
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    // explode(array(...)) barrier: see pqIvfIndex — keeps the argmax from
-    // re-evaluating inside the centroid-lookup filter
-    val resid = corpus.select(col(key).as("sid"), col(vec).as("v"))
-      .crossJoin(centArr)
-      .select(col("sid"), col("v"), col("cents"),
-        explode(array(argmaxCid(col("v")))).as("cid"))
-      .select(col("sid"),
-        residualExpr(col("v"), cvecOfCid(col("cid"))).as("sv"))
-    val sample = resid.orderBy(md5(col("sid").cast("string")), col("sid")).limit(k)
-    // unpartitioned by design: the input is a <= k-row sample, so the
-    // single-partition WindowExec is bounded. (A partitionBy(lit(0)) decoy
-    // does NOT silence the WindowExec warning — the optimizer strips
-    // foldable partition keys, verified on the executed plan — so the
-    // entry points instead raise that logger to ERROR: Api.quietBoundedWindowLogs.)
-    val w = Window.orderBy(md5(col("sid").cast("string")), col("sid"))
-    sample.withColumn("code", (row_number().over(w) - 1).cast("int"))
-      .select(explode(transform(sequence(lit(0), lit(m - 1)), j =>
-        struct(j.cast("int").as("j"), col("code"),
-          slice(col("sv"), j.cast("int") * bd + 1, lit(bd)).as("cvec")))).as("e"))
-      .select(col("e.j").as("j"), col("e.code").as("code"), col("e.cvec").as("cvec"))
-  }
-
-  /**
-   * Lloyd-TRAINED residual-space PQ codebooks — `iters` k-means rounds per
-   * block over the corpus residuals, initialized from the md5 sample
-   * ([[pqResidualCodebooks]]). This is the actual PQ training algorithm
-   * (Jégou et al. §II run per sub-space): sampled codebooks cannot tile the
-   * residual ball (measured: clustered ivfpq recall@10 0.04 at k=16 / 0.36
-   * at k=256 sampled), training is what buys within-list resolution.
-   *
-   * Deterministic by the [[kmeansCentroids]] construction: per-element
-   * means sum in decimal(38,18) (associative — partial-agg order can't
-   * perturb), snap to FLOAT (then back to double — the same grid both
-   * engines would round to), fixed init, explicit (distance, code) tie
-   * order, empty cells keep their previous codeword. All `m` blocks train
-   * in ONE pass per round: the corpus residual slices explode to (j, bv)
-   * rows, assignment is a map-side argmin over the broadcast codebooks,
-   * and the mean shuffle is m·k·blockDim×partitions rows — never
-   * corpus-sized. Driver holds m·k·blockDim values between rounds.
-   *
-   * Output: (j, code, cvec array<double>) — drop-in for
-   * [[pqIvfIndex]]/[[pqTopKIvfIndexed]].
-   */
-  def pqTrainedCodebooks(corpus: DataFrame, key: String, vec: String,
-                         centroids: DataFrame, dim: Int, m: Int, k: Int,
-                         iters: Int = 3): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m blocks")
-    val spark = corpus.sparkSession
-    val bd = dim / m
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    val blocks = corpus.select(col(key).as("sid"), col(vec).as("v"))
-      .crossJoin(centArr)
-      .select(col("sid"), col("v"), col("cents"),
-        explode(array(argmaxCid(col("v")))).as("cid"))
-      .select(col("sid"),
-        residualExpr(col("v"), cvecOfCid(col("cid"))).as("sv"))
-      .select(explode(transform(sequence(lit(0), lit(m - 1)), j =>
-        struct(j.cast("int").as("j"),
-          slice(col("sv"), j.cast("int") * bd + 1, lit(bd)).as("bv")))).as("e"))
-      .select(col("e.j").as("j"), col("e.bv").as("bv"))
-      .persistTracked
-    var cb = pqResidualCodebooks(corpus, key, vec, centroids, dim, m, k)
-    for (_ <- 1 to iters) {
-      val assigned = blocks.crossJoin(codebookArray(cb))
-        .select(col("j"), col("bv"), {
-          val scored = transform(element_at(col("cb"), col("j") + 1),
-            (cvec, idx) => struct(l2sq(col("bv"), cvec).as("d"), idx.cast("int").as("code")))
-          element_at(array_sort(scored), 1).getField("code").as("code")
-        })
-      val means = assigned
-        .select(col("j"), col("code"), posexplode(col("bv")).as(Seq("e", "x")))
-        .groupBy("j", "code", "e")
-        .agg(((sum(col("x").cast("decimal(38,18)")) / count(lit(1)))
-          .cast("float").cast("double")).as("mx"))
-        .groupBy("j", "code")
-        .agg(transform(array_sort(collect_list(struct(col("e"), col("mx")))),
-          s => s.getField("mx")).as("mvec"))
-      val rows = cb.join(means, Seq("j", "code"), "left")
-        .select(col("j"), col("code"), coalesce(col("mvec"), col("cvec")).as("cvec"))
-        .collect()
-      if (rows.isEmpty) return cb
-      import scala.jdk.CollectionConverters._
-      cb = spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
-    }
-    cb
-  }
-
-  /**
-   * Durable IVF-PQ index rows — the standard composition (Jégou et al. 2011
-   * §IV: coarse quantizer + per-list RESIDUAL PQ codes): every corpus vector
-   * assigned to its nearest IVF centroid AND its residual `v − cvec(cid)`
-   * encoded to `m` PQ codes in ONE map-side pass over the broadcast
-   * centroids + codebooks — ZERO corpus shuffle, the [[ivfIndex]] plan shape
-   * with the code columns riding along. `codebooks` must be the matching
-   * RESIDUAL-space table from [[pqResidualCodebooks]] (see there for why raw
-   * codebooks cannot rank within a list). Output: (id, cid,
-   * codes array<int>), meant for [[graft.sources.Stages.writeBucketed]] on
-   * `cid` so a probe reads only its lists, already co-located; store the
-   * centroid AND codebook tables alongside (both are index METADATA —
-   * searching against any other set silently breaks list membership /
-   * reconstruction).
-   *
-   * This is what makes PQ search run at 1e9 vectors: the registered search
-   * path probes nProbe/nCentroids of THESE rows ([[pqTopKIvfIndexed]])
-   * instead of exhaustively scanning a flat codes table, and each row costs
-   * m bytes-ish of codes instead of dim floats.
-   */
-  def pqIvfIndex(corpus: DataFrame, key: String, vec: String,
-                 centroids: DataFrame, codebooks: DataFrame,
-                 dim: Int, m: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m blocks")
-    val bd = dim / m
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    // the explode(array(...)) wrappers are materialization barriers (the
-    // quantizeInt8 rule): without them CollapseProject inlines the argmax
-    // into the centroid-lookup filter (nCentroids× re-evaluation) and the
-    // residual into every per-block-per-codeword l2sq of the encode
-    // (m·k× re-evaluation) — the winnowing interpreted-eval trap
-    corpus.select(col(key).as("id"), col(vec).as("v"))
-      .crossJoin(centArr)
-      .crossJoin(codebookArray(codebooks))
-      .select(col("id"), col("v"), col("cents"), col("cb"),
-        explode(array(argmaxCid(col("v")))).as("cid"))
-      .select(col("id"), col("cid"), col("cb"),
-        explode(array(residualExpr(col("v"), cvecOfCid(col("cid"))))).as("rv"))
-      .select(col("id"), col("cid"),
-        pqCodesExpr(col("rv"), m, bd).as("codes"))
-  }
-
-  /**
-   * List-pruned PQ top-k against a PRE-BUILT [[pqIvfIndex]] — the production
-   * IVF-PQ search path and the fix for [[pqTopK]]'s exhaustive scan: each
-   * query ranks the broadcast centroids (no window — [[nearestCidsExpr]]'s
-   * array sort over index metadata), joins only its `nProbe` nearest
-   * inverted lists on `cid` (the bucketed layout reads them co-located),
-   * ADC-scores the ~nProbe/nCentroids corpus fraction it touched against
-   * the ABSOLUTE reconstruction `cvec(cid) + residual-codewords` (the
-   * residual-encoding counterpart of [[pqTopK]]'s flat reconstruction —
-   * one canonical IEEE form, mirrored exactly in the oracle), and ranks
-   * via the bounded [[rankTopKAsc]] aggregate. Per-query cost scales with
-   * the probed lists, not the corpus; no stage anywhere sees a
-   * corpus-per-task stream.
-   *
-   * Deterministic end to end (md5-sample centroids/residual codebooks, IEEE
-   * folds, explicit tie orders), so the whole composition is
-   * oracle-hash-verified (`ann_pq_ivf_topk`); indexed == in-plan is an
-   * equality (SimilaritySpec).
-   *
-   * Output: (query_id, neighbor_id, rank), rank 1..k by ADC distance asc,
-   * ties by neighbor_id, among the probed lists' members.
-   */
-  def pqTopKIvfIndexed(index: DataFrame, centroids: DataFrame,
-                       codebooks: DataFrame, queries: DataFrame,
-                       key: String, vec: String, k: Int, nProbe: Int): DataFrame = {
-    val centArr = broadcast(
-      broadcast(centroids).agg(collect_list(struct(col("cid"), col("cvec"))).as("cents")))
-    val probes = queries.select(col(key).as("query_id"), col(vec).as("qv"))
-      .crossJoin(centArr)
-      .select(col("query_id"), col("qv"),
-        explode(nearestCidsExpr(col("qv"), col("cents"), nProbe)).as("pc"))
-      .select(col("query_id"), col("qv"), col("pc.cid").as("cid"))
-    // prune to the probed lists BEFORE any decode work: the broadcast
-    // semi-join on cid is what actually skips the (nCentroids − nProbe)/
-    // nCentroids corpus fraction — reconstructing first and joining after
-    // would decode 100% of the codes and discard the unprobed lists
-    // unjoined (Catalyst cannot push the join's cid membership below the
-    // reconstruction Project)
-    val probedCids = broadcast(probes.select("cid").distinct())
-    val recon = index.select(col("id"), col("cid"), col("codes"))
-      .join(probedCids, Seq("cid"), "left_semi")
-      // absolute reconstruction: centroid (broadcast join on cid — map-side)
-      // plus the concatenated residual codewords, element-wise in DOUBLE
-      .crossJoin(codebookArray(codebooks))
-      .join(broadcast(centroids), "cid")
-      .select(col("id"), col("cid"),
-        zip_with(col("cvec"), pqReconExpr(col("codes")),
-          (c, r) => c.cast("double") + r).as("rv"))
-    val scored = probes.join(recon, Seq("cid"))
-      .where(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        l2sq(col("qv"), col("rv")).as("dist"))
-    rankTopKAsc(scored, k)
-  }
-
-  /**
-   * IVF-PQ search WITH exact re-ranking (Jégou et al. 2011 §V, "IVFADC+R"
-   * — the standard production composition): the ADC pass over the probed
-   * lists produces a `refine`-deep shortlist (compressed-domain work only),
-   * then ONLY those `refine` candidates per query fetch their full-precision
-   * vectors and re-rank by exact squared-L2. ADC at m blocks has an
-   * intrinsic quantization floor that caps top-k directly (measured:
-   * recall@10 ≈ 0.38 at m=8/k=256 trained on the clustered fixture, against
-   * an 0.88 list-pruning ceiling) — but placing true neighbors in an ADC
-   * top-`refine` is easy, so the re-rank recovers nearly the whole pruning
-   * ceiling at `refine` exact distances per query instead of corpus-many.
-   *
-   * `vectors` is any (id, v) source for the full-precision lookups — in
-   * production the [[ivfIndex]] table itself (the join ships the
-   * |Q|·refine-row shortlist, never the corpus). Deterministic end to end,
-   * so the whole composition is oracle-hash-verified
-   * (`ann_pq_ivf_refined_topk`).
-   *
-   * Output: (query_id, neighbor_id, rank), rank 1..k by exact distance asc,
-   * ties by neighbor_id, among the query's ADC top-`refine`.
-   */
-  def pqTopKIvfRefined(index: DataFrame, vectors: DataFrame,
-                       centroids: DataFrame, codebooks: DataFrame,
-                       queries: DataFrame, key: String, vec: String,
-                       k: Int, nProbe: Int, refine: Int): DataFrame = {
-    require(refine >= k, s"refine $refine must cover k $k")
-    val shortlist = pqTopKIvfIndexed(index, centroids, codebooks, queries,
-      key, vec, refine, nProbe)
-    val q = broadcast(queries.select(col(key).as("query_id"), col(vec).as("qv")))
-    val scored = shortlist
-      .join(vectors.select(col("id").as("neighbor_id"), col("v")), "neighbor_id")
-      .join(q, "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        l2sq(col("qv"), col("v")).as("dist"))
-    rankTopKAsc(scored, k)
-  }
-
-  /**
    * Symmetric per-vector int8 quantization — the storage/bandwidth prep step
-   * of a large-scale embedding pipeline (4× smaller vectors for ANN shipping):
+   * of a large-scale embedding pipeline (4× smaller vectors to ship):
    *
    *   scale = max_j |v_j| / 127;   q_j = round(v_j / scale)  (0 when scale=0)
    *
    * Output: (id, scale, qvec array<int>, max_abs_err) where max_abs_err is
    * the per-vector dequantization error `max_j |v_j − q_j·scale|`. Pure
    * per-row expressions, zero shuffles; deterministic and SQL-expressible
-   * (round is half-away-from-zero on both engines), so oracle-verified.
+   * (round is half-away-from-zero in Spark and DuckDB).
    *
    * The `explode(array(...))` wrapper is a materialization barrier: without
    * it CollapseProject inlines the scale aggregate into the downstream
@@ -929,34 +255,6 @@ object Similarity {
       transform(col("v"), x => qElem(x)).as("qvec"),
       array_max(transform(col("v"), x =>
         abs(xd(x) - qElem(x).cast("double") * col("scale")))).as("max_abs_err"))
-  }
-
-  /**
-   * Exact top-k cosine neighbors over the INT8-QUANTIZED corpus — the
-   * consumer of [[quantizeInt8]] that realizes its 4× bandwidth win: the
-   * corpus side scans (scale, qvec) — ~dim bytes + 8 per row once stored as
-   * bytes, vs dim·4 for the float vectors — dequantizes per row in flight
-   * (`q_j · scale`, double), and ranks by cosine against the FULL-PRECISION
-   * query vectors through the bounded [[rankTopKAsc]] aggregate. Scoring in
-   * the dequantized domain keeps the whole path deterministic and
-   * SQL-expressible (round is half-away-from-zero on both engines), so the
-   * ranking is oracle-hash-verified end to end; the recall cost of
-   * quantization is priced against [[topKExact]] in the bench sidecar.
-   *
-   * `quantized` is [[quantizeInt8]] output — (id, scale, qvec) — typically
-   * read back from a stored table; pass `quantizeInt8(corpus, …)` for the
-   * in-plan form. Output: (query_id, neighbor_id, rank), rank 1..k by
-   * dequantized cosine desc, ties by id.
-   */
-  def topKInt8(quantized: DataFrame, queries: DataFrame, key: String,
-               vec: String, k: Int): DataFrame = {
-    val deq = quantized.select(col("id").as("neighbor_id"),
-      transform(col("qvec"), q => q.cast("double") * col("scale")).as("dv"))
-    val q = broadcast(queries.select(col(key).as("query_id"), col(vec).as("qv")))
-    val scored = q.join(deq, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        negate(cosine(col("qv"), col("dv"))).as("dist"))
-    rankTopKAsc(scored, k)
   }
 
   /** Exact embedding near-duplicate pairs: all-pairs cosine ≥ the threshold;

@@ -438,52 +438,6 @@ object Streaming {
       .as[CorpusSimMatch]
   }
 
-  /** Emitted ANN ingest match: an arriving embedding within `minCosine` of a
-    * vector already in the stored IVF index. */
-  final case class EmbCorpusMatch(id: String, corpus_id: String, sim: Double)
-
-  /**
-   * Streaming embedding near-dup against a durable IVF index — the ANN
-   * family's counterpart of [[dedupAgainstIndex]]/[[simHashAgainstIndex]]:
-   * each arriving embedding probes its `nProbe` nearest inverted lists of a
-   * static [[graft.operators.Similarity.ivfIndex]] table and emits every
-   * corpus match with cosine >= `minCosine`. The list selection is
-   * [[graft.operators.Similarity.nearestCidsExpr]] — an array-sort
-   * expression, NOT a ranking window, precisely so this composes in append
-   * mode — making the whole operator a stateless projection + one
-   * stream-static equi-join on `cid` (exchange-free on a `cid`-bucketed
-   * index table). Semantics equal the batch
-   * [[graft.operators.Similarity.nearMatchesIvfIndexed]] row-for-row
-   * (StreamingSpec pins stream == batch, sim values included).
-   *
-   * The centroid table is index METADATA (tiny by construction) — collected
-   * once at plan time into a literal, the [[decontaminate]] convention, so
-   * restarts re-read it and a replaced index table can never pair with
-   * stale centroids inside a running query's state.
-   */
-  def embNearDupAgainstIvfIndex(stream: DataFrame, index: DataFrame,
-                                centroids: DataFrame, key: String, vec: String,
-                                minCosine: Double,
-                                nProbe: Int = 4): Dataset[EmbCorpusMatch] = {
-    import stream.sparkSession.implicits._
-    val centRows = centroids.select(col("cid").cast("long"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val cents = transform(typedLit(centRows.toSeq), c =>
-      struct(c.getField("_1").as("cid"), c.getField("_2").as("cvec")))
-    val probes = stream.select(col(key).as("sid"), col(vec).as("qv"))
-      .select(col("sid"), col("qv"),
-        explode(graft.operators.Similarity.nearestCidsExpr(col("qv"), cents, nProbe))
-          .as("pc"))
-      .select(col("sid"), col("qv"), col("pc.cid").as("cid"))
-    probes.join(index, "cid")
-      .where(col("sid") =!= col("id")) // same self-exclusion as the batch twin
-      .select(col("sid").cast("string").as("id"),
-        col("id").cast("string").as("corpus_id"),
-        graft.operators.Similarity.cosine(col("qv"), col("v")).as("sim"))
-      .where(col("sim") >= minCosine)
-      .as[EmbCorpusMatch]
-  }
-
   /** Emitted contamination hit: a streamed doc sharing grams with the
     * benchmark set. */
   final case class Contaminated(id: String, n_shared_grams: Long)
@@ -610,116 +564,6 @@ object Streaming {
         }
       }
       .start()
-
-  /** The ANN mirror of [[ingestDedup]]: continuous EMBEDDING admission
-    * against a durable [[graft.operators.Similarity.ivfIndex]] table via
-    * [[graft.operators.Similarity.ingestKeepIdsIndexed]] — each micro-batch
-    * drops arrivals near anything already indexed (including earlier
-    * micro-batches' admissions, read through the mutated table), collapses
-    * within-batch near-dups to min-id representatives, and appends the kept
-    * vectors' index rows in place. Same state-in-the-table design and
-    * at-least-once admission semantics as the text families; `centroids` is
-    * index METADATA fixed at build time — admitting rows never re-centers
-    * the index (recenter = rebuild, a batch maintenance job). */
-  def ingestAnn(stream: DataFrame, indexTable: String, centroids: DataFrame,
-                key: String, vec: String, minCosine: Double, nProbe: Int = 4,
-                admitBuckets: Int = 8,
-                onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val kept = graft.operators.Similarity.ingestKeepIdsIndexed(
-            batch.sparkSession.table(indexTable), centroids, batch, key, vec,
-            minCosine, nProbe, admitTo = Some(indexTable),
-            admitBuckets = admitBuckets)
-          onBatch(kept, batchId)
-        }
-      }
-      .start()
-
-  /**
-   * [[ingestAnn]] that ALSO maintains the durable IVF-PQ codes table —
-   * completing the "every durable index has a streaming twin" invariant for
-   * the search artifact [[graft.operators.Similarity.pqTopKIvfIndexed]]
-   * probes: each micro-batch runs the same admission loop against the full
-   * IVF index (drop near stored, collapse within batch, append the kept
-   * vectors' index rows), then encodes the KEPT vectors' PQ codes — from the
-   * BATCH frame and the frozen centroids + codebooks, never by re-reading a
-   * table — and appends them cid-bucketed to `pqCodesTable`, so the search
-   * index tracks admissions without any rebuild.
-   *
-   * Both metadata tables (`centroids`, `codebooks`) are frozen at index
-   * build time — admitting rows never re-trains them (retrain = rebuild,
-   * a batch maintenance job), which is what makes the appended codes
-   * comparable to the stored ones.
-   *
-   * Delivery: the two appends are not one transaction, so a crash between
-   * them can leave an admitted vector momentarily absent from the codes
-   * table (search misses it until repair; admission correctness is
-   * unaffected — the drop logic reads only `indexTable`). That repair runs
-   * AUTOMATICALLY at stream start: `indexTable` ids missing from
-   * `pqCodesTable` (one anti-join on the id column) re-encode from the
-   * index's stored vectors via [[graft.operators.Similarity.pqIvfIndex]]
-   * (same frozen centroids/codebooks ⇒ same deterministic cid and codes)
-   * and append — so a crash-then-restart heals the gap before the first
-   * micro-batch, no manual step. A mid-run crash still leaves the gap only
-   * until the next restart. Same at-least-once admission semantics as
-   * [[ingestAnn]] otherwise: a replayed batch keeps nothing and appends
-   * nothing.
-   */
-  def ingestAnnPq(stream: DataFrame, indexTable: String, pqCodesTable: String,
-                  centroids: DataFrame, codebooks: DataFrame,
-                  dim: Int, m: Int,
-                  key: String, vec: String, minCosine: Double, nProbe: Int = 4,
-                  admitBuckets: Int = 8,
-                  onBatch: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery = {
-    repairPqCodes(stream.sparkSession, indexTable, pqCodesTable,
-      centroids, codebooks, dim, m, admitBuckets)
-    stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val kept = graft.operators.Similarity.ingestKeepIdsIndexed(
-            batch.sparkSession.table(indexTable), centroids, batch, key, vec,
-            minCosine, nProbe, admitTo = Some(indexTable),
-            admitBuckets = admitBuckets)
-          // kept is already a materialized leaf (the operator's lineage cut),
-          // so this join cannot see the appends above
-          val keptRows = batch.join(kept.select(col(key).as("keep_id")),
-            batch(key) === col("keep_id"), "left_semi")
-          if (!keptRows.isEmpty)
-            graft.sources.Stages.appendBucketed(
-              graft.operators.Similarity.pqIvfIndex(
-                keptRows, key, vec, centroids, codebooks, dim, m),
-              pqCodesTable, "cid", admitBuckets)
-          onBatch(kept, batchId)
-        }
-      }
-      .start()
-  }
-
-  /** The [[ingestAnnPq]] crash-gap repair, runnable standalone: re-encode and
-    * append PQ codes for every `indexTable` id absent from `pqCodesTable`
-    * (the two-append non-atomicity window). Idempotent — when the tables
-    * agree the anti-join is empty and nothing writes; when `pqCodesTable`
-    * does not exist yet every index row is "missing" and this IS the initial
-    * codes build. Ships only the missing rows, never the corpus. */
-  def repairPqCodes(spark: org.apache.spark.sql.SparkSession, indexTable: String,
-                    pqCodesTable: String, centroids: DataFrame,
-                    codebooks: DataFrame, dim: Int, m: Int,
-                    admitBuckets: Int = 8): Unit = {
-    if (!spark.catalog.tableExists(indexTable)) return
-    val idx = spark.table(indexTable)
-    val missing =
-      if (spark.catalog.tableExists(pqCodesTable))
-        idx.join(spark.table(pqCodesTable).select("id"), Seq("id"), "left_anti")
-      else idx
-    if (!missing.isEmpty)
-      graft.sources.Stages.appendBucketed(
-        graft.operators.Similarity.pqIvfIndex(
-          missing.select(col("id"), col("v")), "id", "v", centroids, codebooks,
-          dim, m),
-        pqCodesTable, "cid", admitBuckets)
-  }
 
   /**
    * Watermarked tumbling-window corpus quality monitor: per (window, lang)

@@ -50,4 +50,38 @@ class ApiSpec extends SparkSpec {
     assert(out.count() === 6L)
     Api.clear(spark, "rs_api", "purchases_r", "purchases")
   }
+
+  test("registerSqlFunctions: SQL-named native functions == their column forms") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    import org.apache.spark.sql.functions.col
+    Api.registerSqlFunctions(spark)
+    val t = Seq(
+      ("kitten", "sitting", Seq("a", "b", "b", "c"), Seq("b", "b", "c"), 2, 1),
+      ("flaw", "lawn", Seq("x", "y"), Seq("y", "x"), 1, 1),
+      ("same", "same", Seq("p", "q"), Seq("q"), 3, 1),
+      ("", "abc", Seq.empty[String], Seq("z"), 1, 1))
+      .toDF("l", "r", "la", "ra", "ls", "rs")
+    t.createOrReplaceTempView("api_sql_fns")
+    val bySql = spark.sql(
+      """SELECT l, graft_levenshtein(l, r, 2) AS lev,
+                graft_suffix_overlap(la, ra, ls, rs) AS ov
+         FROM api_sql_fns""")
+    val byColumn = t.select(col("l"),
+      FuzzyJoin.boundedLev(col("l"), col("r"), 2).as("lev"),
+      column(graft.expressions.SuffixOverlapCount(expression(col("la")),
+        expression(col("ra")), expression(col("ls")), expression(col("rs")))).as("ov"))
+    val rows = bySql.collect().toSet
+    assert(rows === byColumn.collect().toSet)
+    // kitten -> sitting is 3 edits, past the bound; flaw -> lawn is 2.
+    // Overlap counts the multiset product of the two suffixes.
+    assert(rows.map(r => r.getString(0) -> (r.getInt(1), r.getLong(2))).toMap ===
+      Map("kitten" -> (-1, 5L), "flaw" -> (2, 2L), "same" -> (0, 0L), "" -> (-1, 0L)))
+    // the bound shapes the banded DP, so it must be a literal
+    val err = intercept[Exception] {
+      spark.sql("SELECT graft_levenshtein(l, r, ls) FROM api_sql_fns").collect()
+    }
+    assert(err.getMessage.contains("must be an integer literal"), err.getMessage)
+    Api.clear(spark, "api_sql_fns")
+  }
 }

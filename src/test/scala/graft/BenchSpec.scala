@@ -4,20 +4,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** [[Bench.run]]'s timing loop on the shared test session: each query is
-  * timed best-of-n with its first (cold) run and every run time kept, and a
+  * timed best-of-n with its first (cold) run and every run time kept, a
   * query that throws is named under `"failed"` and kept out of the total
-  * instead of disappearing. */
+  * instead of disappearing, and the untimed warm-up's wall time is kept
+  * under `session.warmup_s`. */
 class BenchSpec extends SparkSpec {
   import spark.implicits._
 
   test("Bench.run: best-of-n per query; a failing query is listed in failed, not in value") {
     val out = java.nio.file.Files.createTempFile("bench", ".json")
+    val sfDir = java.nio.file.Files.createTempDirectory("bench-sf")
     try {
+      // the warm-up reads the profile's documents table
+      Seq((1L, "a b"), (2L, "b c d")).toDF("doc_id", "text")
+        .write.parquet(s"$sfDir/documents.parquet")
       val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
         "five" -> ((s, _) => s.range(5).toDF()),
         "boom" -> ((_, _) => sys.error("boom")))
       val runs = 3
-      val (line, failed) = Bench.run(spark, queries, runs, "in-memory", out.toString)
+      val (line, failed) = Bench.run(spark, queries, runs, sfDir.toString, out.toString)
       assert(failed == Seq("boom"))
 
       val l = spark.read.json(Seq(line).toDS())
@@ -40,6 +45,10 @@ class BenchSpec extends SparkSpec {
       assert(first == all.head)
       assert(five == sec)
       assert(doc.select("session.cpus").as[Long].head() == spark.sparkContext.defaultParallelism)
-    } finally java.nio.file.Files.deleteIfExists(out): Unit
+      assert(doc.select("session.warmup_s").as[Option[Double]].head().exists(_ >= 0))
+    } finally {
+      java.nio.file.Files.deleteIfExists(out)
+      org.apache.commons.io.FileUtils.deleteQuietly(sfDir.toFile)
+    }
   }
 }

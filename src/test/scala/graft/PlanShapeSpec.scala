@@ -23,68 +23,26 @@ class PlanShapeSpec extends SparkSpec {
       (i.toLong, Array(i.toFloat, (i % 3).toFloat, (i % 5).toFloat, 1f)))
       .toDF("vec_id", "embedding")
 
-  test("IVF: corpus assignment runs with zero corpus-side shuffle") {
-    val e = embeddings(40)
-    val plan = finalPlan(
-      Similarity.topKIvf(e, e.where(col("vec_id") < 3), "vec_id", "embedding",
-        k = 5, nCentroids = 4, nProbe = 2))
-    // the nearest-centroid argmax is a broadcast fold: partitioning the corpus
-    // by centroid id (or record id) before the probe join would be the r3
-    // regression — 16x the corpus through an exchange at 100 TB
-    assert(!plan.contains("hashpartitioning(cid"), plan)
-    assert(!plan.contains("hashpartitioning(id"), plan)
-  }
-
-  test("topKIvfIndexed: stored inverted lists scanned in place, probes broadcast") {
-    val e = embeddings(60)
-    val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 4)
-    graft.sources.Stages.writeBucketed(
-      Similarity.ivfIndex(e, "vec_id", "embedding", cents), "graft_ivf_plan_t", "cid", 4)
-    graft.sources.Stages.writeBucketed(cents, "graft_ivf_plan_c", "cid", 1)
-    val plan = finalPlan(Similarity.topKIvfIndexed(
-      spark.table("graft_ivf_plan_t"), spark.table("graft_ivf_plan_c"),
-      e.where(col("vec_id") < 3), "vec_id", "embedding", 5, 2))
-    // small query batch → probe side broadcasts onto the bucketed lists; the
-    // stored index is never re-exchanged to meet the join (the whole point
-    // of paying the bucketed write once at build time)
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("hashpartitioning(cid"), plan)
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_plan_t")
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_plan_c")
-  }
-
-  test("ANN ranking: bounded top-k aggregate, never a per-query window over the distance stream") {
-    // the round-10 scale-killer: row_number() OVER (PARTITION BY query_id)
-    // funnels a query's ENTIRE distance stream into one task. All ANN
-    // rankings must plan as the DistTopK partial/final aggregate pair
-    // (map-side k-capped heaps; the exchange ships only the heaps).
+  test("exact/LSH vector ranking: bounded top-k aggregate, no per-query window") {
+    // row_number() OVER (PARTITION BY query_id) funnels a query's ENTIRE
+    // distance stream into one task; every vector ranking must plan as the
+    // DistTopK partial/final aggregate pair (map-side k-capped heaps; the
+    // exchange ships only the heaps)
     val e = embeddings(60)
     val q = e.where(col("vec_id") < 3)
-    val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 4)
-    val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding", 4, 2, 4)
     val plans = Map(
       "topKExact" -> finalPlan(Similarity.topKExact(e, q, "vec_id", "embedding", 5)),
       "topKExactL2" -> finalPlan(Similarity.topKExactL2(e, q, "vec_id", "embedding", 5)),
-      "pqTopK" -> finalPlan(Similarity.pqTopK(
-        Similarity.pqEncode(e, "vec_id", "embedding", cbs, 4, 2),
-        cbs, q, "vec_id", "embedding", 5)),
-      "pqTopKIvfIndexed" -> {
-        val rcbs = Similarity.pqResidualCodebooks(e, "vec_id", "embedding", cents, 4, 2, 4)
-        finalPlan(Similarity.pqTopKIvfIndexed(
-          Similarity.pqIvfIndex(e, "vec_id", "embedding", cents, rcbs, 4, 2),
-          cents, rcbs, q, "vec_id", "embedding", 5, 2))
-      },
-      // STRING-keyed corpus: round 11's non-integral keys fell back to the
-      // per-query window (the verdict's last scale-killer path); the heap now
-      // carries the key as an opaque payload, so this must plan windowless too
+      "topKLsh" -> finalPlan(Similarity.topKLsh(e, q, "vec_id", "embedding", 5,
+        dim = 4, planes = 3, tables = 2)),
+      // STRING-keyed corpus: the heap carries the key as an opaque payload,
+      // so non-integral keys must plan windowless too
       "topKExact(string keys)" -> {
         val se = e.select(concat(lit("doc-"), col("vec_id").cast("string")).as("vec_id"),
           col("embedding"))
         finalPlan(Similarity.topKExact(se, se.limit(3), "vec_id", "embedding", 5))
       })
     plans.foreach { case (name, plan) =>
-      // no window PARTITIONED BY query_id anywhere (pqCodebooks keeps a
-      // legitimate window over its k sampled rows — bounded index metadata)
       assert(!plan.contains("windowspecdefinition(query_id"),
         s"$name ranks via a per-query window:\n$plan")
       assert(plan.contains("graft_dist_topk"), s"$name missing the top-k aggregate:\n$plan")
@@ -207,36 +165,6 @@ class PlanShapeSpec extends SparkSpec {
       // grams AND the token rebuild both read the persisted base
       assert(plan.split("InMemoryTableScan").length - 1 >= 2, plan)
     } finally Api.clearCache()
-  }
-
-  test("nearMatchesIvfIndexed: stored lists scanned in place, no window, probes broadcast") {
-    val e = embeddings(60)
-    val cents = Similarity.sampleCentroids(e, "vec_id", "embedding", 4)
-    graft.sources.Stages.writeBucketed(
-      Similarity.ivfIndex(e, "vec_id", "embedding", cents), "graft_ivfnm_plan_t", "cid", 4)
-    val plan = finalPlan(Similarity.nearMatchesIvfIndexed(
-      spark.table("graft_ivfnm_plan_t"), cents,
-      e.where(col("vec_id") < 3), "vec_id", "embedding", 0.1, 2))
-    // the ingestion probe's whole selling point vs topKIvfIndexed: list
-    // selection is an array-sort EXPRESSION, not a ranking window (windows
-    // would both break append-mode streaming and add a per-query exchange),
-    // and the bucketed index never re-exchanges to meet the equi-join
-    assert(!plan.contains("Window"), plan)
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("hashpartitioning(cid"), plan)
-    spark.sql("DROP TABLE IF EXISTS graft_ivfnm_plan_t")
-  }
-
-  test("hybridTopK: fusion stays off the corpus — no cartesian, windows only over the bounded pools") {
-    val docs = (0L until 60L).map(i => (i, s"alpha w$i x y z pad")).toDF("doc_id", "text")
-    val plan = finalPlan(Retrieval.hybridTopK(docs, embeddings(60),
-      "doc_id", "text", "vec_id", "embedding", "alpha", 3L, k = 5, poolSize = 10))
-    // both towers end in driver-merged top-k heaps; the only acceptable
-    // all-to-one structures are those k-bounded sorts and the <= 2*poolSize
-    // row fusion — a corpus-wide cartesian or corpus-wide window would be
-    // the 100 TB killer
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
   test("range filter reaches the parquet scan as a pushed filter") {

@@ -3,7 +3,7 @@ package graft
 import graft.operators._
 import scala.util.Random
 
-/** ANN tests: exact top-k semantics, LSH recall on clustered vectors. */
+/** Exact-vector core: exact top-k semantics, LSH recall on clustered vectors. */
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,365 +86,6 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.forall(r => r.getLong(0) % 3 == r.getLong(1) % 3))
   }
 
-  test("topKIvf: recall vs exact on clustered vectors; k ranks, self excluded") {
-    val df = clustered(7, 6, 15, 32).toDF("vec_id", "embedding")
-    val q = df.where($"vec_id" < 6)
-    val exact = Similarity.topKExact(df, q, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.topKIvf(df, q, "vec_id", "embedding", 5, nCentroids = 8, nProbe = 3)
-    val rows = ivf.collect()
-    assert(rows.forall(r => r.getLong(0) != r.getLong(1)))
-    val ivfPairs = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & ivfPairs).size.toDouble / exact.size
-    assert(recall >= 0.6, s"IVF recall too low: $recall")
-  }
-
-  test("topKIvfIndexed via stored bucketed index == direct topKIvf (exact rows)") {
-    // the durable-ANN-index equality: write the inverted lists + centroids
-    // through the real bucketed sink, read them back from the catalog, probe
-    // — must reproduce the direct in-plan query EXACTLY (same assignment,
-    // same ranks), the same argument that lets the registered query share
-    // ann_topk_ivf's oracle
-    val df = clustered(11, 6, 15, 32).toDF("vec_id", "embedding")
-    val q = df.where($"vec_id" < 6)
-    val direct = Similarity.topKIvf(df, q, "vec_id", "embedding", 5,
-      nCentroids = 8, nProbe = 3)
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 8)
-    graft.sources.Stages.writeBucketed(
-      Similarity.ivfIndex(df, "vec_id", "embedding", cents),
-      "graft_ivf_idx_t", "cid", 4)
-    graft.sources.Stages.writeBucketed(cents, "graft_ivf_cents_t", "cid", 1)
-    val indexed = Similarity.topKIvfIndexed(spark.table("graft_ivf_idx_t"),
-      spark.table("graft_ivf_cents_t"), q, "vec_id", "embedding", 5, 3)
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    assert(indexed.collect().map(key).toSet === direct.collect().map(key).toSet)
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_idx_t")
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_cents_t")
-  }
-
-  test("ivfIndex lifecycle: appendBucketed day-2 vectors == from-scratch union index") {
-    // assignment is per-row and deterministic under FIXED centroids, so
-    // appending a new batch's index rows must equal rebuilding over the
-    // union — the ANN mirror of the dedup index's day-2 append pin. The
-    // centroids are index metadata frozen at build time (re-sampling them
-    // from the union would be a different index).
-    val all = clustered(13, 5, 12, 16)
-    val (day1, day2) = all.splitAt(40)
-    val df1 = day1.toDF("vec_id", "embedding")
-    val df2 = day2.toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(df1, "vec_id", "embedding", 6)
-    graft.sources.Stages.writeBucketed(
-      Similarity.ivfIndex(df1, "vec_id", "embedding", cents), "graft_ivf_app_t", "cid", 4)
-    graft.sources.Stages.appendBucketed(
-      Similarity.ivfIndex(df2, "vec_id", "embedding", cents), "graft_ivf_app_t", "cid", 4)
-    val rebuilt = Similarity.ivfIndex(
-      all.toDF("vec_id", "embedding"), "vec_id", "embedding", cents)
-    val pair = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(2))
-    assert(spark.table("graft_ivf_app_t").select("id", "v", "cid").collect().map(pair).toSet
-      === rebuilt.select("id", "v", "cid").collect().map(pair).toSet)
-    // and the probe over the appended table equals the probe over the rebuild
-    val q = df1.where($"vec_id" < 5)
-    val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1), r.getLong(2))
-    assert(Similarity.topKIvfIndexed(spark.table("graft_ivf_app_t"),
-        cents, q, "vec_id", "embedding", 5, 3).collect().map(key).toSet
-      === Similarity.topKIvfIndexed(rebuilt, cents, q, "vec_id", "embedding", 5, 3)
-        .collect().map(key).toSet)
-    spark.sql("DROP TABLE IF EXISTS graft_ivf_app_t")
-  }
-
-  test("ingestKeepIdsIndexed admission loop: day-2 vs appended index == from-scratch union, drops need day-1") {
-    // six latent clusters; the CORPUS covers only 0-3, so day-1 members of
-    // clusters 4/5 are genuinely new content that must survive and be
-    // admitted, and day-2's 4/5 members must then be dropped ONLY because
-    // day-1 was admitted. nProbe == nCentroids -> exhaustive probing, so
-    // detection is deterministic and the test pins semantics, not recall.
-    val rnd = new scala.util.Random(5)
-    val centers = Seq.fill(6)(Array.fill(16)(rnd.nextGaussian()))
-    def mem(c: Int): Array[Float] =
-      centers(c).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat)
-    val corpus = (0 until 20).map(i => i.toLong -> mem(i % 4)).toDF("vec_id", "embedding")
-    val day1 = (0 until 12).map(i => (100L + i) -> mem(i % 6)).toDF("vec_id", "embedding")
-    val day2 = (0 until 12).map(i => (200L + i) -> mem(i % 6)).toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(corpus, "vec_id", "embedding", 4)
-    val table = "graft_ivf_ingest_t"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.sources.Stages.writeBucketed(
-      Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), table, "cid", 4)
-    val rows0 = spark.table(table).count()
-
-    val k1 = Similarity.ingestKeepIdsIndexed(spark.table(table), cents, day1,
-        "vec_id", "embedding", 0.9, nProbe = 4, admitTo = Some(table), admitBuckets = 4)
-      .collect().map(_.getLong(0)).toSet
-    // clusters 0-3 drop vs corpus; 4 appears as ids 104/110, 5 as 105/111 —
-    // within-batch min-id representatives win
-    assert(k1 === Set(104L, 105L))
-    assert(spark.table(table).count() === rows0 + 2)
-
-    // REPLAY day-1 (at-least-once delivery): its admitted ids are already in
-    // the index, so the replay must admit nothing and append nothing — the
-    // self-healing invariant the text families get from their jaccard-1.0
-    // self-match, here via the explicit already-indexed id drop
-    val k1Replay = Similarity.ingestKeepIdsIndexed(spark.table(table), cents, day1,
-        "vec_id", "embedding", 0.9, nProbe = 4, admitTo = Some(table), admitBuckets = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(k1Replay === Set.empty[Long])
-    assert(spark.table(table).count() === rows0 + 2)
-
-    val k2 = Similarity.ingestKeepIdsIndexed(spark.table(table), cents, day2,
-        "vec_id", "embedding", 0.9, nProbe = 4)
-      .collect().map(_.getLong(0)).toSet
-    // day-2 brings nothing new: 0-3 match the corpus, 4/5 match the day-1
-    // admissions — but only BECAUSE they were admitted
-    assert(k2 === Set.empty[Long])
-    val keptVecs = day1.where($"vec_id".isin(104L, 105L))
-    val unionIdx = Similarity.ivfIndex(corpus.union(keptVecs), "vec_id", "embedding", cents)
-    val k2Scratch = Similarity.ingestKeepIdsIndexed(unionIdx, cents, day2,
-        "vec_id", "embedding", 0.9, nProbe = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(k2Scratch === k2) // appended table == from-scratch union index
-    val k2NoAdmit = Similarity.ingestKeepIdsIndexed(
-        Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), cents, day2,
-        "vec_id", "embedding", 0.9, nProbe = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(k2NoAdmit === Set(204L, 205L)) // without day-1 they'd survive
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    Api.clearCache()
-  }
-
-  test("pqEncode: codes match a plain-Scala argmin reference; deterministic") {
-    val dim = 16; val m = 4; val k = 6; val bd = dim / m
-    val data = clustered(31, 5, 8, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val cbs = Similarity.pqCodebooks(df, "vec_id", "embedding", dim, m, k)
-    // reference codebooks: the k md5-smallest ids, sliced
-    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val sampleIds = data.map(_._1).sortBy(id => (md5hex(id.toString), id)).take(k)
-    val byId = data.toMap
-    val refCb: Map[(Int, Int), Array[Float]] = (for {
-      (sid, code) <- sampleIds.zipWithIndex
-      j <- 0 until m
-    } yield (j, code) -> byId(sid).slice(j * bd, j * bd + bd)).toMap
-    val gotCb = cbs.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
-    assert(gotCb.keySet === refCb.keySet)
-    assert(gotCb.forall { case (key0, v) => v.sameElements(refCb(key0)) })
-    // reference encode: per block argmin of double L2^2, ties to smaller code
-    def l2(a: Array[Float], b: Array[Float]): Double =
-      a.zip(b).map { case (x, y) => val d = x.toDouble - y.toDouble; d * d }.sum
-    val refCodes = data.map { case (id, v) =>
-      id -> (0 until m).map { j =>
-        val sub = v.slice(j * bd, j * bd + bd)
-        (0 until k).minBy(c => (l2(sub, refCb((j, c))), c))
-      }.toVector
-    }.toMap
-    val got = Similarity.pqEncode(df, "vec_id", "embedding", cbs, dim, m)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toVector).toMap
-    assert(got === refCodes)
-    // deterministic across invocations
-    val again = Similarity.pqEncode(df, "vec_id", "embedding", cbs, dim, m)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toVector).toMap
-    assert(again === got)
-  }
-
-  test("pqTopK: ADC ranking == reconstruction reference; usable recall vs exact L2") {
-    val dim = 16; val m = 4; val k = 8; val bd = dim / m
-    val data = clustered(33, 4, 12, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val cbs = Similarity.pqCodebooks(df, "vec_id", "embedding", dim, m, k)
-    val codes = Similarity.pqEncode(df, "vec_id", "embedding", cbs, dim, m)
-    val queries = df.where($"vec_id" < 6)
-    val out = Similarity.pqTopK(codes, cbs, queries, "vec_id", "embedding", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(out.groupBy(_._1).forall(_._2.length == 5))
-    // reference: reconstruct every vector from its codes, rank by L2^2 asc, id
-    val cbMap = cbs.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
-    val codeMap = codes.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val recon = codeMap.map { case (id, cs) =>
-      id -> cs.zipWithIndex.flatMap { case (c, j) => cbMap((j, c)) }.toArray
-    }
-    def l2(a: Array[Float], b: Array[Float]): Double =
-      a.zip(b).map { case (x, y) => val d = x.toDouble - y.toDouble; d * d }.sum
-    val byId = data.toMap
-    for (qid <- 0L until 6L) {
-      val expect = recon.toSeq.filter(_._1 != qid)
-        .map { case (nid, rv) => (l2(byId(qid), rv), nid) }
-        .sortBy(identity).take(5).map(_._2)
-      val gotQ = out.filter(_._1 == qid).sortBy(_._3).map(_._2).toSeq
-      assert(gotQ === expect, s"query $qid")
-    }
-    // recall vs exact L2 on the clustered fixture: same-cluster neighbors
-    // reconstruct close, so PQ@5 must recover most of the exact set
-    val exact = (0L until 6L).map { qid =>
-      qid -> data.filter(_._1 != qid)
-        .map { case (nid, v) => (l2(byId(qid), v), nid) }
-        .sortBy(identity).take(5).map(_._2).toSet
-    }.toMap
-    val hits = (0L until 6L).map { qid =>
-      out.filter(_._1 == qid).map(_._2).count(exact(qid)) }.sum
-    assert(hits >= 20, s"PQ recall@5 too low: $hits/30") // >= 2/3
-  }
-
-  test("pqTopKIvfIndexed: stored IVF-PQ index == in-plan; == hand-computed probed-list residual-ADC ranking") {
-    val dim = 16; val m = 4; val kCb = 8; val bd = dim / m
-    val data = clustered(37, 5, 12, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val q = df.where($"vec_id" < 5)
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 5)
-    val cbs = Similarity.pqResidualCodebooks(df, "vec_id", "embedding", cents, dim, m, kCb)
-    val idx = Similarity.pqIvfIndex(df, "vec_id", "embedding", cents, cbs, dim, m)
-    // durable round trip through the real bucketed sink == in-plan index
-    graft.sources.Stages.writeBucketed(idx, "graft_pq_idx_t", "cid", 4)
-    graft.sources.Stages.writeBucketed(cents, "graft_pq_cents_t", "cid", 1)
-    graft.sources.Stages.writeBucketed(cbs, "graft_pq_cb_t", "j", 1)
-    val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1), r.getLong(2))
-    val stored = Similarity.pqTopKIvfIndexed(spark.table("graft_pq_idx_t"),
-      spark.table("graft_pq_cents_t"), spark.table("graft_pq_cb_t"),
-      q, "vec_id", "embedding", 5, 2).collect().map(key).toSet
-    val inPlan = Similarity.pqTopKIvfIndexed(idx, cents, cbs,
-      q, "vec_id", "embedding", 5, 2).collect().map(key).toSet
-    assert(stored === inPlan)
-    // hand reference: cosine-nearest 2 of the 5 centroid lists per query,
-    // members ADC-ranked by L2^2 to the ABSOLUTE reconstruction
-    // centroid + residual-codewords, ties by id
-    val byId = data.toMap
-    val centMap = cents.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val cbMap = cbs.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-    val assignMap = idx.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Int](2))).toMap
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0d; var na = 0d; var nb = 0d
-      for (i <- a.indices) { val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def l2(a: Array[Float], b: Array[Double]): Double =
-      a.zip(b).map { case (x, y) => val d = x.toDouble - y; d * d }.sum
-    val expect = (0L until 5L).flatMap { qid =>
-      val probed = centMap.toSeq
-        .map { case (cid, cv) => (-cos(byId(qid), cv), cid) }.sorted.take(2)
-        .map(_._2).toSet
-      assignMap.toSeq
-        .filter { case (nid, (cid, _)) => nid != qid && probed(cid) }
-        .map { case (nid, (cid, codes)) =>
-          val rr = codes.zipWithIndex.flatMap { case (c, j) => cbMap((j, c)) }
-          val rv = centMap(cid).zip(rr).map { case (cv, r) => cv.toDouble + r }.toArray
-          (l2(byId(qid), rv), nid) }
-        .sorted.take(5).zipWithIndex
-        .map { case ((_, nid), i) => (qid, nid, i + 1L) }
-    }.toSet
-    assert(stored === expect)
-    spark.sql("DROP TABLE IF EXISTS graft_pq_idx_t")
-    spark.sql("DROP TABLE IF EXISTS graft_pq_cents_t")
-    spark.sql("DROP TABLE IF EXISTS graft_pq_cb_t")
-  }
-
-  test("pqIvfIndex == ivfIndex assignment + pqEncode over the residuals, column-for-column") {
-    val dim = 16; val m = 4
-    val data = clustered(41, 4, 10, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 4)
-    val cbs = Similarity.pqResidualCodebooks(df, "vec_id", "embedding", cents, dim, m, 6)
-    val fused = Similarity.pqIvfIndex(df, "vec_id", "embedding", cents, cbs, dim, m)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Int](2))).toMap
-    val assign = Similarity.ivfIndex(df, "vec_id", "embedding", cents)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    // residual frame built independently: v - cvec(assigned cid) in double
-    val centMap = cents.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val residDf = data.map { case (id, v) =>
-      (id, v.zip(centMap(assign(id))).map { case (x, c) => x.toDouble - c.toDouble })
-    }.toDF("id", "rv")
-    val codes = Similarity.pqEncode(residDf, "id", "rv", cbs, dim, m)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(fused === assign.map { case (id, cid) => id -> (cid, codes(id)) })
-    // residual recall sanity: on the clustered fixture the residual-encoded
-    // IVF-PQ must rank same-cluster neighbors usefully (the raw-space
-    // codebooks provably cannot — they collapse a cluster to one codeword)
-    val q = df.where($"vec_id" < 8)
-    val exact = Similarity.topKExactL2(df, q, "vec_id", "embedding", 5)
-    val approx = Similarity.pqTopKIvfIndexed(
-      Similarity.pqIvfIndex(df, "vec_id", "embedding", cents, cbs, dim, m),
-      cents, cbs, q, "vec_id", "embedding", 5, 4)
-    val rec = Recall.topK(exact, approx)
-    assert(rec >= 0.5, s"residual IVF-PQ recall@5 too low: $rec")
-  }
-
-  test("pqTopKIvfRefined: exhaustive refine == exact-L2 ranking within the probed lists") {
-    // with refine >= |corpus|, the ADC shortlist necessarily contains every
-    // probed candidate, so the exact re-rank must EQUAL brute-force L2
-    // ranking restricted to the probed lists — a sharp equality, no recall
-    // tolerance needed
-    val dim = 16; val m = 4
-    val data = clustered(47, 5, 12, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val q = df.where($"vec_id" < 5)
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 5)
-    val rcbs = Similarity.pqResidualCodebooks(df, "vec_id", "embedding", cents, dim, m, 8)
-    val ivf = Similarity.ivfIndex(df, "vec_id", "embedding", cents)
-    val idx = Similarity.pqIvfIndex(df, "vec_id", "embedding", cents, rcbs, dim, m)
-    val got = Similarity.pqTopKIvfRefined(idx, ivf, cents, rcbs,
-        q, "vec_id", "embedding", 5, 2, refine = data.size)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val byId = data.toMap
-    val centMap = cents.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val assignMap = ivf.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0d; var na = 0d; var nb = 0d
-      for (i <- a.indices) { val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    def l2(a: Array[Float], b: Array[Float]): Double =
-      a.zip(b).map { case (x, y) => val d = x.toDouble - y.toDouble; d * d }.sum
-    val expect = (0L until 5L).flatMap { qid =>
-      val probed = centMap.toSeq
-        .map { case (cid, cv) => (-cos(byId(qid), cv), cid) }.sorted.take(2)
-        .map(_._2).toSet
-      data.filter { case (nid, _) => nid != qid && probed(assignMap(nid)) }
-        .map { case (nid, v) => (l2(byId(qid), v), nid) }
-        .sorted.take(5).zipWithIndex
-        .map { case ((_, nid), i) => (qid, nid, i + 1L) }
-    }.toSet
-    assert(got === expect)
-  }
-
-  test("pqTrainedCodebooks: deterministic, drop-in shape, never worse encode error than the sample init") {
-    val dim = 16; val m = 4
-    val data = clustered(53, 4, 15, dim)
-    val df = data.toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 4)
-    val t1 = Similarity.pqTrainedCodebooks(df, "vec_id", "embedding", cents, dim, m, 8, 2)
-    val t2 = Similarity.pqTrainedCodebooks(df, "vec_id", "embedding", cents, dim, m, 8, 2)
-    def asMap(cb: org.apache.spark.sql.DataFrame) = cb.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toVector).toMap
-    assert(asMap(t1) === asMap(t2)) // deterministic across invocations
-    assert(asMap(t1).keySet === (for (j <- 0 until m; c <- 0 until 8) yield (j, c)).toSet)
-    // quantization error (sum of per-row ADC reconstruction L2^2 to the
-    // residual) must not exceed the untrained init's — Lloyd never increases
-    // the k-means objective
-    val init = Similarity.pqResidualCodebooks(df, "vec_id", "embedding", cents, dim, m, 8)
-    def err(cb: org.apache.spark.sql.DataFrame): Double = {
-      val cbm = cb.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-      val centMap = cents.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      val assignMap = Similarity.ivfIndex(df, "vec_id", "embedding", cents)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      val bd = dim / m
-      data.map { case (id, v) =>
-        val resid = v.zip(centMap(assignMap(id))).map { case (x, c) => x.toDouble - c.toDouble }
-        (0 until m).map { j =>
-          val sub = resid.slice(j * bd, j * bd + bd)
-          (0 until 8).map { c =>
-            sub.zip(cbm((j, c))).map { case (x, y) => val d = x - y; d * d }.sum
-          }.min
-        }.sum
-      }.sum
-    }
-    assert(err(t1) <= err(init) + 1e-9, "training increased the quantization objective")
-  }
-
   test("topKExact on a STRING-keyed corpus: bounded heap path, keys intact, window order") {
     // round 11 carried a per-query window FALLBACK for non-integral keys (the
     // verdict's one remaining scale-killer); the heap now carries the key as
@@ -505,64 +146,6 @@ class SimilaritySpec extends SparkSpec {
         .sorted.take(5).map(_._2)
       assert(out.filter(_._1 == qid).sortBy(_._3).map(_._2).toSeq === expect)
     }
-  }
-
-  test("nearMatchesIvfIndexed == hand-computed in-probed-list pairs above the cosine floor") {
-    val all = clustered(17, 4, 12, 16)
-    val df = all.toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 4)
-    val centRows = cents.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    val idx = Similarity.ivfIndex(df, "vec_id", "embedding", cents)
-    val queries = df.where($"vec_id" < 6)
-    val out = Similarity.nearMatchesIvfIndexed(idx, cents, queries,
-        "vec_id", "embedding", 0.5, 2)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // reference model in plain Scala: same ascending-fold double cosine
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0d; var na = 0d; var nb = 0d
-      for (i <- a.indices) {
-        dot += a(i).toDouble * b(i).toDouble
-        na += a(i).toDouble * a(i).toDouble
-        nb += b(i).toDouble * b(i).toDouble
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val assign = all.map { case (id, v) =>
-      id -> centRows.map { case (cid, cv) => (cid, cos(v, cv)) }
-        .sortBy { case (cid, s) => (-s, cid) }.head._1
-    }.toMap
-    val expected = (for {
-      (qid, qv) <- all if qid < 6
-      probed = centRows.map { case (cid, cv) => (cid, cos(qv, cv)) }
-        .sortBy { case (cid, s) => (-s, cid) }.take(2).map(_._1).toSet
-      (nid, nv) <- all if nid != qid && probed.contains(assign(nid))
-      s = cos(qv, nv) if s >= 0.5
-    } yield ((qid, nid), s)).toMap
-    assert(out === expected)
-    assert(out.nonEmpty)
-  }
-
-  test("topKIvfKmeans: Lloyd refinement beats raw sample centroids on clustered vectors") {
-    // the sensitivity pin for centroid quality: on data with real cluster
-    // structure (which production embeddings have — and, since round 7, the
-    // driver's embeddings.parquet too, via its label column), k-means-refined
-    // centroids must yield strictly better-or-equal IVF recall than the raw
-    // md5-sample init at the same nProbe. A regression in kmeansCentroids
-    // (bad means, dropped iteration, broken assignment) shows up here, not
-    // just as a silent sidecar drift.
-    val df = clustered(7, 8, 20, 32).toDF("vec_id", "embedding")
-    val q = df.where($"vec_id" < 8)
-    val exact = Similarity.topKExact(df, q, "vec_id", "embedding", 10)
-    def recallOf(approx: org.apache.spark.sql.DataFrame): Double =
-      Recall.topK(exact, approx)
-    val sample = recallOf(Similarity.topKIvf(df, q, "vec_id", "embedding", 10,
-      nCentroids = 8, nProbe = 2))
-    val kmeans = recallOf(Similarity.topKIvfKmeans(df, q, "vec_id", "embedding", 10,
-      nCentroids = 8, nProbe = 2, iters = 3))
-    assert(kmeans >= sample,
-      s"k-means refinement must not lose recall: kmeans=$kmeans sample=$sample")
-    assert(kmeans >= 0.6, s"k-means IVF recall too low on clustered vectors: $kmeans")
   }
 
   test("nearDuplicates (LSH) is a subset of exact near-duplicates with good recall") {

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.operators.{Dedup, Similarity, WhitespaceTokenizer}
+import graft.operators.{Dedup, WhitespaceTokenizer}
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -365,40 +365,6 @@ class StreamingSpec extends SparkSpec {
     assert(dupes.isEmpty, s"duplicate emissions: ${dupes.take(3).mkString}")
   }
 
-  test("embNearDupAgainstIvfIndex: stream vs durable IVF index == batch nearMatchesIvfIndexed") {
-    // the ANN-family mirror of the dedupAgainstIndex pin: arriving
-    // embeddings probe the stored inverted lists statelessly (array-sort
-    // list selection, no window) and must reproduce the batch threshold
-    // probe row-for-row, sim DOUBLES included
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new scala.util.Random(77)
-    val centers = Seq.fill(4)(Array.fill(16)(rnd.nextGaussian()))
-    def near(c: Array[Double]): Array[Float] =
-      c.map(x => (x + 0.05 * rnd.nextGaussian()).toFloat)
-    val corpus = (0 until 40).map(i => i.toLong -> near(centers(i % 4)))
-    val incoming = (0 until 12).map(i => (1000L + i) -> near(centers(i % 4)))
-    val corpusDf = corpus.toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(corpusDf, "vec_id", "embedding", 4)
-    val index = Similarity.ivfIndex(corpusDf, "vec_id", "embedding", cents).persist()
-    val in = MemoryStream[(Long, Array[Float])]
-    val stream = in.toDF().toDF("vec_id", "embedding")
-    runToTable(
-      Streaming.embNearDupAgainstIvfIndex(stream, index, cents,
-        "vec_id", "embedding", 0.6, nProbe = 2), "emb_vs_ivf") {
-      incoming.grouped(5).foreach(chunk => in.addData(chunk: _*))
-    }
-    val streamRows = spark.table("emb_vs_ivf")
-      .as[(String, String, Double)].collect()
-      .map { case (sid, cid, s) => ((sid.toLong, cid.toLong), s) }.toMap
-    val batchRows = Similarity.nearMatchesIvfIndexed(index, cents,
-        incoming.toDF("vec_id", "embedding"), "vec_id", "embedding", 0.6, 2)
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, n, s) => ((q, n), s) }.toMap
-    index.unpersist()
-    assert(streamRows.nonEmpty, "clustered incoming must match the corpus")
-    assert(streamRows === batchRows)
-  }
-
   test("dedupAgainstCorpus: empty/whitespace-only docs emit nothing (stream == batch)") {
     // a token-less doc has an all-null MinHash signature whose band slices
     // hash identically on both sides; before the zero-token filter this
@@ -607,140 +573,6 @@ class StreamingSpec extends SparkSpec {
       val expected = (0L until 30L).toSet ++ (1 to 3).flatMap(ingestExpectedKeep)
       assert(ids === expected, "index after 3 micro-batches = corpus + admissions")
     } finally spark.sql("DROP TABLE IF EXISTS graft_si_mh")
-  }
-
-  test("ingestAnn: embedding admission loop across micro-batches via the durable IVF index") {
-    // the ANN fixture mirrors the text one: every probe is an EXACT vector
-    // copy (cosine 1.0), so keep-sets do not depend on probe recall — and
-    // distinct cluster vectors (fixed-seed 16-dim gaussians) sit far below
-    // the 0.95 threshold
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.Stages
-    def vecOf(c: Int): Array[Float] = {
-      val r = new scala.util.Random(1000 + c)
-      Array.fill(16)(r.nextGaussian().toFloat)
-    }
-    def dayBatch(d: Int): Seq[(Long, Array[Float])] = Seq(
-      (1000L * d + 0) -> vecOf(d % 4),      // identical to a corpus vector
-      (1000L * d + 1) -> vecOf(10 + d - 1), // identical to day d-1's admission (fresh on day 1)
-      (1000L * d + 2) -> vecOf(100 + d),    // in-batch identical pair {2,3} -> keep 2
-      (1000L * d + 3) -> vecOf(100 + d),
-      (1000L * d + 4) -> vecOf(10 + d))     // fresh -> admitted
-    def expectedKeep(d: Int): Set[Long] =
-      Set(1000L * d + 2, 1000L * d + 4) ++ (if (d == 1) Set(1001L) else Set.empty[Long])
-    val corpus = (0 until 20).map(i => i.toLong -> vecOf(i % 4)).toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(corpus, "vec_id", "embedding", 4)
-    try {
-      Stages.writeBucketed(
-        Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), "graft_si_ann", "cid", 4)
-      val keeps = scala.collection.mutable.Map[Long, Set[Long]]()
-      val in = MemoryStream[(Long, Array[Float])]
-      val q = Streaming.ingestAnn(in.toDF().toDF("vec_id", "embedding"),
-        "graft_si_ann", cents, "vec_id", "embedding", 0.95, nProbe = 4,
-        admitBuckets = 4,
-        onBatch = (kept, bid) => keeps(bid) = kept.collect().map(_.getLong(0)).toSet)
-      try {
-        for (d <- 1 to 3) { in.addData(dayBatch(d): _*); q.processAllAvailable() }
-      } finally q.stop()
-      assert(keeps.keySet === Set(0L, 1L, 2L), "one keep-set per micro-batch day")
-      for (d <- 1 to 3)
-        assert(keeps(d - 1L) === expectedKeep(d), s"day $d keep-set")
-      val ids = spark.table("graft_si_ann").select("id").distinct()
-        .collect().map(_.getLong(0)).toSet
-      val expected = (0L until 20L).toSet ++ (1 to 3).flatMap(expectedKeep)
-      assert(ids === expected, "index after 3 micro-batches = corpus + admissions")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_si_ann")
-  }
-
-  test("ingestAnnPq: admission loop also maintains the IVF-PQ codes table (stream == batch rebuild)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.Stages
-    def vecOf(c: Int): Array[Float] = {
-      val r = new scala.util.Random(1000 + c)
-      Array.fill(16)(r.nextGaussian().toFloat)
-    }
-    def dayBatch(d: Int): Seq[(Long, Array[Float])] = Seq(
-      (1000L * d + 0) -> vecOf(d % 4),      // identical to a corpus vector -> dropped
-      (1000L * d + 2) -> vecOf(100 + d),    // in-batch identical pair {2,3} -> keep 2
-      (1000L * d + 3) -> vecOf(100 + d),
-      (1000L * d + 4) -> vecOf(10 + d))     // fresh -> admitted
-    val corpus = (0 until 20).map(i => i.toLong -> vecOf(i % 4)).toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(corpus, "vec_id", "embedding", 4)
-    val cbs = Similarity.pqResidualCodebooks(corpus, "vec_id", "embedding", cents, 16, 4, 6)
-    try {
-      Stages.writeBucketed(
-        Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), "graft_si_pq_ivf", "cid", 4)
-      Stages.writeBucketed(
-        Similarity.pqIvfIndex(corpus, "vec_id", "embedding", cents, cbs, 16, 4),
-        "graft_si_pq_codes", "cid", 4)
-      val in = MemoryStream[(Long, Array[Float])]
-      val q = Streaming.ingestAnnPq(in.toDF().toDF("vec_id", "embedding"),
-        "graft_si_pq_ivf", "graft_si_pq_codes", cents, cbs, 16, 4,
-        "vec_id", "embedding", 0.95, nProbe = 4, admitBuckets = 4)
-      try {
-        for (d <- 1 to 2) { in.addData(dayBatch(d): _*); q.processAllAvailable() }
-      } finally q.stop()
-      // the streamed codes table == pqIvfIndex rebuilt over the FULL index's
-      // stored vectors (corpus + every admission), column for column
-      val rebuilt = Similarity.pqIvfIndex(
-          spark.table("graft_si_pq_ivf").select(col("id").as("vec_id"), col("v").as("embedding")),
-          "vec_id", "embedding", cents, cbs, 16, 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-      val streamed = spark.table("graft_si_pq_codes")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-      assert(streamed === rebuilt)
-      // both index families saw the same admissions
-      assert(spark.table("graft_si_pq_codes").select("id").distinct().count()
-        === spark.table("graft_si_pq_ivf").select("id").distinct().count())
-      // and the search path over the streamed codes == over the rebuild
-      val queries = corpus.where(col("vec_id") < 3)
-      val key3 = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1), r.getLong(2))
-      assert(Similarity.pqTopKIvfIndexed(spark.table("graft_si_pq_codes"), cents, cbs,
-          queries, "vec_id", "embedding", 5, 2).collect().map(key3).toSet
-        === Similarity.pqTopKIvfIndexed(rebuilt.toSeq.toDF("id", "cid", "codes"), cents, cbs,
-          queries, "vec_id", "embedding", 5, 2).collect().map(key3).toSet)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_si_pq_ivf")
-      spark.sql("DROP TABLE IF EXISTS graft_si_pq_codes")
-    }
-  }
-
-  test("repairPqCodes: a crash gap between the two appends heals at stream start") {
-    import graft.sources.Stages
-    def vecOf(c: Int): Array[Float] = {
-      val r = new scala.util.Random(2000 + c)
-      Array.fill(16)(r.nextGaussian().toFloat)
-    }
-    val corpus = (0 until 20).map(i => i.toLong -> vecOf(i)).toDF("vec_id", "embedding")
-    val cents = Similarity.sampleCentroids(corpus, "vec_id", "embedding", 4)
-    val cbs = Similarity.pqResidualCodebooks(corpus, "vec_id", "embedding", cents, 16, 4, 6)
-    try {
-      Stages.writeBucketed(
-        Similarity.ivfIndex(corpus, "vec_id", "embedding", cents), "graft_rp_ivf", "cid", 4)
-      // simulate the crash window: the index admitted ids 0..19 but the codes
-      // append only covered ids < 12 before the "crash"
-      Stages.writeBucketed(
-        Similarity.pqIvfIndex(corpus.where(col("vec_id") < 12), "vec_id", "embedding",
-          cents, cbs, 16, 4),
-        "graft_rp_codes", "cid", 4)
-      Streaming.repairPqCodes(spark, "graft_rp_ivf", "graft_rp_codes", cents, cbs, 16, 4, admitBuckets = 4)
-      val repaired = spark.table("graft_rp_codes")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-      val full = Similarity.pqIvfIndex(corpus, "vec_id", "embedding", cents, cbs, 16, 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-      assert(repaired === full)
-      // idempotent: a second repair appends nothing
-      Streaming.repairPqCodes(spark, "graft_rp_ivf", "graft_rp_codes", cents, cbs, 16, 4, admitBuckets = 4)
-      assert(spark.table("graft_rp_codes").count() === full.size)
-      // and with NO codes table at all, repair IS the initial build
-      spark.sql("DROP TABLE IF EXISTS graft_rp_codes")
-      Streaming.repairPqCodes(spark, "graft_rp_ivf", "graft_rp_codes", cents, cbs, 16, 4, admitBuckets = 4)
-      assert(spark.table("graft_rp_codes")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet === full)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_rp_ivf")
-      spark.sql("DROP TABLE IF EXISTS graft_rp_codes")
-    }
   }
 
   // 64-bit signature fixtures for the generic-Hamming admission loop:

@@ -7,6 +7,9 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify]
 2. register each <sfDir>/*.parquet in DuckDB under its bare table name
 3. run every oracle_sql.json entry, compare to <outDir>/<name> parquet:
    columns sorted by name, rows sorted by all columns, exact value equality.
+4. take the registered query names from <outDir>/registered.json: a dump dir
+   outside that set is stale (named and ignored); a registered query with no
+   dump dir, or an oracle entry with no registered query, is a failure.
 """
 import json, subprocess, sys, glob, os
 
@@ -31,6 +34,7 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+registered = set(json.load(open(f"{out_dir}/registered.json")))
 results = {}
 for name, sql in sorted(oracle.items()):
     pq = f"{out_dir}/{name}"
@@ -67,20 +71,26 @@ for k, v in sorted(results.items()):
         fails += 1
 print(f"\n{len(results) - fails}/{len(results)} green")
 
-# Canonical machine-derived surface counts (r13 verdict: the 139-vs-140
-# close-out drift must be structurally impossible — README/BENCH_NOTES quote
-# THESE numbers, never a running tally). The dump dirs are the registry:
-# Verify writes one dir per SparkEntry.queries entry and logs any failure.
-dumped = sorted(d for d in os.listdir(out_dir)
-                if os.path.isdir(os.path.join(out_dir, d)))
-rows_only = sorted(set(dumped) - set(oracle))
-orphan_oracles = sorted(set(oracle) - set(dumped))
-print(f"[surface] registered={len(dumped)} oracle_checked={len(oracle)} "
+# Canonical machine-derived surface counts: README/BENCH_NOTES quote THESE
+# numbers, never a running tally. The registry is Verify's registered.json,
+# not the dump dirs: Verify never clears outDir, so a reused dir keeps the
+# dumps of queries a later build no longer registers.
+dumped = {d for d in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, d))}
+stale = sorted(dumped - registered)
+no_dump = sorted(registered - dumped)
+rows_only = sorted(registered - set(oracle))
+orphan_oracles = sorted(set(oracle) - registered)
+print(f"[surface] registered={len(registered)} oracle_checked={len(oracle)} "
       f"rows_only={len(rows_only)}")
 if rows_only:
     print(f"[surface] rows-only (no oracle entry): {', '.join(rows_only)}")
+if stale:
+    print(f"[surface] stale dump dirs (not registered, ignored): {', '.join(stale)}")
+if no_dump:
+    print(f"[surface] REGISTERED queries with no dump dir: {', '.join(no_dump)}")
+    fails += 1
 if orphan_oracles:
-    print(f"[surface] ORPHAN oracle entries with no dump dir: "
+    print(f"[surface] ORPHAN oracle entries with no registered query: "
           f"{', '.join(orphan_oracles)}")
     fails += 1
 sys.exit(1 if fails else 0)

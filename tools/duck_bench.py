@@ -31,19 +31,14 @@ DEFAULT_QUERIES = [
     "jac_self_docs_ws_t05",
     "jac_rs_cust_supp_q3_t02",
     "winnow_overlap_docs",
-    "emb_neardup_lsh",
     "fuzzy_cust_names",
     "bm25_topk_docs",
     "text_stats_docs",
     "dedup_minhash_oracle_docs",
     "dedup_simhash_oracle_docs",
     "dedup_exact_docs",
-    "ann_topk_exact",
-    "ann_topk_ivf",
     "lm_bigram_docs",
     "substring_dup_docs",
-    "hybrid_topk_docs",
-    "emb_neardup_ivf_indexed",
 ]
 
 WORKER = r"""

@@ -1,11 +1,11 @@
 #!/bin/bash
 # Round-close sf1 FLAGSHIP GATE (round-12 verdict #6, widened by round-14
-# verdict #3 so every major family has a tracked decade ratio; EIGHT
+# verdict #3 so every major family has a tracked decade ratio; SEVEN
 # flagships): jac_self_docs_ws_t05 / _t09, dedup_minhash_docs,
 # dedup_cluster_docs, pipeline_curate_docs (the original five), plus
-# ann_pq_ivf_trained_refined_topk (ANN/PQ), jac_rs_cust_supp_q3_t03 (R×S
-# jaccard — needs the sf1 customer/supplier fixtures from
-# tools/make_sf1_tpch.py), dedup_simhash_docs (SimHash banding).
+# jac_rs_cust_supp_q3_t03 (R×S jaccard — needs the sf1 customer/supplier
+# fixtures from tools/make_sf1_tpch.py) and dedup_simhash_docs (SimHash
+# banding). RegistrySpec checks that every name below is registered.
 # Scale regressions (e.g. the sf1 broadcast->SMJ shift at the 64 MB
 # value-table threshold) become a tracked per-round number instead of an
 # archaeology exercise. Walls from two different windows are not comparable
@@ -16,12 +16,11 @@
 #        SPARK_GRAFT_BENCH_OUT, SPARK_DRIVER_MEM (heap; default half of
 #        MemTotal clamped to 2-8 GiB, the rule build.sbt uses).
 #
-# Requires data/sf1/{documents,embeddings}.parquet (tracked fixtures) and
-# the customer/supplier fixtures checked below.
+# Requires data/sf1/documents.parquet (a tracked fixture) and the
+# customer/supplier fixtures checked below.
 set -eu
 cd "$(dirname "$0")/.."
 test -f data/sf1/documents.parquet || { echo "data/sf1/documents.parquet missing" >&2; exit 1; }
-test -f data/sf1/embeddings.parquet || { echo "data/sf1/embeddings.parquet missing" >&2; exit 1; }
 test -f data/sf1/customer.parquet || { echo "data/sf1/customer.parquet missing - run tools/make_sf1_tpch.py" >&2; exit 1; }
 test -f data/sf1/supplier.parquet || { echo "data/sf1/supplier.parquet missing - run tools/make_sf1_tpch.py" >&2; exit 1; }
 
@@ -44,7 +43,7 @@ HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print
 exec env \
   SPARK_GRAFT_SF_DIR="$PWD/data/sf1" \
   SPARK_GRAFT_SHUFFLE_PARTITIONS="${SPARK_GRAFT_SHUFFLE_PARTITIONS:-64}" \
-  SPARK_GRAFT_QUERIES=jac_self_docs_ws_t05,jac_self_docs_ws_t09,dedup_minhash_docs,dedup_cluster_docs,pipeline_curate_docs,ann_pq_ivf_trained_refined_topk,jac_rs_cust_supp_q3_t03,dedup_simhash_docs \
+  SPARK_GRAFT_QUERIES=jac_self_docs_ws_t05,jac_self_docs_ws_t09,dedup_minhash_docs,dedup_cluster_docs,pipeline_curate_docs,jac_rs_cust_supp_q3_t03,dedup_simhash_docs \
   SPARK_GRAFT_BENCH_RUNS="${SPARK_GRAFT_BENCH_RUNS:-3}" \
   SPARK_GRAFT_BENCH_OUT="${SPARK_GRAFT_BENCH_OUT:-/tmp/sf1_gate.json}" \
   java $ADD_OPENS "-Xmx$HEAP" -Dspark.ui.enabled=false \
